@@ -43,9 +43,9 @@ object Bfs {
     // small-graph early-out: seeds evaluated by Catalyst over a
     // LocalRelation node set, then a driver-local frontier BFS (bit-exact,
     // LocalIterParitySpec)
-    val eCnt = e.count()
-    if (eCnt > 0 && eCnt <= LocalIter.maxEdges(e.sparkSession)) {
-      val localEdges = e.collect().map(r => (r.get(0), r.get(1)))
+    val small = LocalIter.collectSmall(e)
+    if (small.isDefined) {
+      val localEdges = small.get.map(r => (r.get(0), r.get(1)))
       val nodeType = e.schema.fields(0).dataType
       val seedSet = LocalIter.evalSeeds(e.sparkSession, nodeType,
         LocalIter.nodeSet(localEdges), seedPred)

@@ -41,7 +41,7 @@ object ConnectedComponents {
     // themselves. Bound doubled — `sym` carries both edge directions.
     val symCnt = sym.count()
     val ordOpt = LocalIter.orderingFor(sym.schema.fields(0).dataType)
-    if (symCnt <= 2 * LocalIter.maxEdges(sym.sparkSession) && ordOpt.isDefined) {
+    if (symCnt > 0 && symCnt <= 2 * LocalIter.maxEdges(sym.sparkSession) && ordOpt.isDefined) {
       import org.apache.spark.sql.types.{StructField, StructType}
       val nodeType = sym.schema.fields(0).dataType
       val lbl = LocalIter.ccLabels(sym.collect().map(r => (r.get(0), r.get(1))), ordOpt.get)

@@ -25,13 +25,15 @@ import org.apache.spark.sql.functions._
   * total is at most Scale × maxOutDegree — safe while the hottest hub stays
   * below ~9e9 out-links (any real web graph).
   *
-  * Scale design: the distinct edge set is materialized ONCE
-  * (localCheckpoint — truncates lineage so the per-iteration plan stays
-  * flat, the 2^rounds-plan trap every iterative job in this repo guards
-  * against); each iteration then costs two slim (node, score) shuffles —
-  * auth from hubs keyed by dst, hubs from auth keyed by src — plus two
-  * 1-row total aggregates that enter the next projection as a broadcast
-  * cross join, never a driver collect.
+  * Scale design: the distinct edge set is materialized ONCE by
+  * [[RankPropagation.edges]] (localCheckpoint — truncates lineage so the
+  * per-iteration plan stays flat, the 2^rounds-plan trap every iterative
+  * job in this repo guards against), which HITS shares with the PageRank
+  * family along with the small-graph early-out, the node table and the
+  * output projection; each iteration then costs two slim (node, score)
+  * shuffles — auth from hubs keyed by dst, hubs from auth keyed by src —
+  * plus two 1-row total aggregates that enter the next projection as a
+  * broadcast cross join, never a driver collect.
   */
 object Hits {
 
@@ -44,46 +46,58 @@ object Hits {
     * (node, auth_fp bigint, hub_fp bigint, auth double, hub double). */
   def run(edges: DataFrame, iterations: Int = 8,
           srcCol: String = "src", dstCol: String = "dst"): DataFrame = {
-    val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst")).distinct()
-      .localCheckpoint()
-    // small-graph early-out (bit-exact driver-local loop, LocalIterParitySpec)
-    val eCnt = e.count()
-    if (eCnt > 0 && eCnt <= LocalIter.maxEdges(e.sparkSession))
-      return LocalIter.hits(e.sparkSession, e.schema.fields(0).dataType,
-        e.collect().map(r => (r.get(0), r.get(1))), iterations)
-    val nodes = e.select(col("src").as("node")).union(e.select(col("dst").as("node")))
-      .distinct().localCheckpoint()
-    val n = nodes.count()
-    if (n == 0)
-      return nodes.select(col("node"), lit(0L).as("auth_fp"), lit(0L).as("hub_fp"),
-        lit(0.0).as("auth"), lit(0.0).as("hub"))
-    val init = Scale / n
-
-    // one L1-normalized half-step: inflow sums keyed by `key`, renormalized
-    // to Scale by exact integer floor division against the 1-row total
-    def halfStep(scores: DataFrame, from: String, key: String): DataFrame = {
-      val raw = e.join(scores, e(from) === scores("node"))
-        .groupBy(col(key).as("node")).agg(sum(col("v")).as("raw"))
-      val tot = raw.agg(sum(col("raw")).as("tot")) // ≥ 1 while edges exist (see scaladoc)
-      nodes.join(raw, Seq("node"), "left_outer").crossJoin(broadcast(tot))
-        .select(col("node"),
-          expr("coalesce(raw, 0L) * 1000000000L div tot").as("v"))
+    val e = RankPropagation.edges(
+      edges.select(col(srcCol).as("src"), col(dstCol).as("dst")).distinct())
+    LocalIter.collectSmall(e) match {
+      case Some(rows) => // driver-local loop, the same Long arithmetic
+        val es = rows.map(r => (r.get(0), r.get(1)))
+        val nodes = LocalIter.nodeSet(es)
+        def halfStep(scores: java.util.HashMap[Any, Long],
+                     fromSrc: Boolean): java.util.HashMap[Any, Long] = {
+          val raw = new java.util.HashMap[Any, Long]()
+          es.foreach { case (s, d) =>
+            if (fromSrc) raw.merge(d, scores.get(s), _ + _) else raw.merge(s, scores.get(d), _ + _)
+          }
+          var tot = 0L
+          raw.forEach((_, v) => tot += v)
+          val out = new java.util.HashMap[Any, Long]()
+          nodes.forEach(nd => out.put(nd, raw.getOrDefault(nd, 0L) * Scale / tot))
+          out
+        }
+        var hubs = new java.util.HashMap[Any, Long]()
+        nodes.forEach(nd => hubs.put(nd, Scale / nodes.size))
+        var auth = hubs
+        for (_ <- 1 to iterations) {
+          auth = halfStep(hubs, fromSrc = true)
+          hubs = halfStep(auth, fromSrc = false)
+        }
+        RankPropagation.localOutput(e.sparkSession, e.schema("src").dataType, nodes, Scale,
+          "auth" -> auth, "hub" -> hubs)
+      case None =>
+        val (nodes, n) = RankPropagation.nodeTable(e, None)
+        if (n == 0) // empty graph → empty result with the right schema
+          return RankPropagation.output(
+            nodes.select(col("node"), lit(0L).as("auth_fp"), lit(0L).as("hub_fp")),
+            Scale, "auth", "hub")
+        // one L1-normalized half-step: inflow sums keyed by `key`, renormalized
+        // to Scale by exact integer floor division against the 1-row total
+        def halfStep(scores: DataFrame, from: String, key: String): DataFrame = {
+          val raw = e.join(scores, e(from) === scores("node"))
+            .groupBy(col(key).as("node")).agg(sum(col("v")).as("raw"))
+          val tot = raw.agg(sum(col("raw")).as("tot")) // ≥ 1 while edges exist (see scaladoc)
+          nodes.join(raw, Seq("node"), "left_outer").crossJoin(broadcast(tot))
+            .select(col("node"), expr(s"coalesce(raw, 0L) * ${Scale}L div tot").as("v"))
+            .localCheckpoint()
+        }
+        var hubs = nodes.select(col("node"), lit(Scale / n).as("v"))
+        var auth = hubs
+        for (_ <- 1 to iterations) {
+          auth = halfStep(hubs, from = "src", key = "dst")
+          hubs = halfStep(auth, from = "dst", key = "src")
+        }
+        RankPropagation.output(auth.withColumnRenamed("v", "auth_fp")
+          .join(hubs.withColumnRenamed("v", "hub_fp"), "node"), Scale, "auth", "hub")
     }
-
-    var hubs = nodes.select(col("node"), lit(init).as("v")).localCheckpoint()
-    var auth = hubs
-    var i = 0
-    while (i < iterations) {
-      auth = halfStep(hubs, from = "src", key = "dst").localCheckpoint()
-      hubs = halfStep(auth, from = "dst", key = "src").localCheckpoint()
-      i += 1
-    }
-    nodes
-      .join(auth.withColumnRenamed("v", "auth_fp"), Seq("node"))
-      .join(hubs.withColumnRenamed("v", "hub_fp"), Seq("node"))
-      .select(col("node"), col("auth_fp"), col("hub_fp"),
-        (col("auth_fp").cast("double") / lit(Scale.toDouble)).as("auth"),
-        (col("hub_fp").cast("double") / lit(Scale.toDouble)).as("hub"))
   }
 
   /** The unrolled-iterations DuckDB oracle, parametrized by the edge-set

@@ -173,7 +173,7 @@ object KgPipeline {
     // materializations. Identical labeling: the component minimum is taken
     // over ALL edge nodes (incl. ID:), exactly like the distributed CC.
     val eCnt = edges.count()
-    if (eCnt <= 2 * LocalIter.maxEdges(spark)) {
+    if (eCnt > 0 && eCnt <= 2 * LocalIter.maxEdges(spark)) {
       import org.apache.spark.sql.types.{StringType, StructField, StructType}
       val lbl = LocalIter.ccLabels(edges.collect().map(r => (r.get(0), r.get(1))),
         LocalIter.orderingFor(StringType).get)

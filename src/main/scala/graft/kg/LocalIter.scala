@@ -3,10 +3,10 @@ package graft.kg
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types._
 
-/** Bounded driver-local execution of the iterative graph fixpoints
-  * (PageRank / weighted PageRank / HITS / PPR / BFS / k-core / connected
-  * components) for SMALL graphs — the `Bpe.learnMerges` discipline applied
-  * to the whole iterative family.
+/** Bounded driver-local execution of the iterative graph fixpoints for
+  * SMALL graphs: the rank family (its loops live in [[RankPropagation]] and
+  * [[Hits]]), BFS, k-core and connected components — the
+  * `Bpe.learnMerges` discipline applied to the whole iterative family.
   *
   * Why: each distributed round of these algorithms costs a fixed scheduler
   * floor (one or two slim shuffles + a localCheckpoint materialization).
@@ -36,6 +36,14 @@ object LocalIter {
     * repo (Bpe pair stats, IVF centroid fits). */
   def maxEdges(spark: SparkSession): Long =
     spark.conf.get("spark.graft.localIterMaxEdges", "200000").toLong
+
+  /** The rows of the materialized edge set `e` when it is small enough for
+    * the driver-local path. Empty graphs stay distributed, so bound 0 forces
+    * the distributed path for every input. */
+  def collectSmall(e: DataFrame): Option[Array[Row]] = {
+    val n = e.count() // a cheap scan of the materialized edges
+    if (n > 0 && n <= maxEdges(e.sparkSession)) Some(e.collect()) else None
+  }
 
   /** Spark-semantics ordering for the node types these graphs carry:
     * strings compare as unsigned UTF-8 bytes, integral types naturally.
@@ -85,162 +93,6 @@ object LocalIter {
     nodes.forEach(nd => rows += Row(nd))
     localDf(spark, StructType(Seq(StructField("node", nodeType))), rows.toSeq)
       .filter(pred).collect().map(_.get(0)).toSet
-  }
-
-  // ------------------------------------------------------------- PageRank
-  /** Mirrors [[PageRank.run]]'s loop: contribution
-    * `rank_fp * 85 div (100 * deg)`, inflow summed exactly,
-    * new rank = base + inflow. */
-  def pageRank(spark: SparkSession, nodeType: DataType,
-               edges: Array[(Any, Any)], iterations: Int): DataFrame = {
-    val deg = new java.util.HashMap[Any, Long]()
-    edges.foreach { case (s, _) => deg.merge(s, 1L, _ + _) }
-    val nodes = nodeSet(edges)
-    val n = nodes.size.toLong
-    val init = PageRank.Scale / n
-    val base = init * 15L / 100L
-    var ranks = new java.util.HashMap[Any, Long]()
-    nodes.forEach(nd => ranks.put(nd, init))
-    var i = 0
-    while (i < iterations) {
-      val inflow = new java.util.HashMap[Any, Long]()
-      val r = ranks
-      edges.foreach { case (s, d) =>
-        inflow.merge(d, r.get(s) * 85L / (100L * deg.get(s)), _ + _)
-      }
-      val next = new java.util.HashMap[Any, Long]()
-      nodes.forEach(nd => next.put(nd, base + inflow.getOrDefault(nd, 0L)))
-      ranks = next
-      i += 1
-    }
-    val schema = StructType(Seq(StructField("node", nodeType),
-      StructField("rank_fp", LongType), StructField("rank", DoubleType)))
-    val out = scala.collection.mutable.ArrayBuffer.empty[Row]
-    nodes.forEach { nd =>
-      val r = ranks.get(nd)
-      out += Row(nd, r, r.toDouble / PageRank.Scale.toDouble)
-    }
-    localDf(spark, schema, out.toSeq)
-  }
-
-  // ---------------------------------------------------- weighted PageRank
-  /** Mirrors [[WeightedPageRank.run]]: per-source 2^20 fixed-point weight
-    * fractions, contribution `(rank*85 div 100) * frac div 2^20`. Input is
-    * the collapsed (src, dst, w) edge set. */
-  def weightedPageRank(spark: SparkSession, nodeType: DataType,
-                       edges: Array[(Any, Any, Long)], iterations: Int): DataFrame = {
-    require(edges.forall(_._3 > 0L), "edge weights must be positive")
-    val wSrc = new java.util.HashMap[Any, Long]()
-    edges.foreach { case (s, _, w) => wSrc.merge(s, w, _ + _) }
-    val frac = edges.map { case (s, d, w) =>
-      (s, d, w * WeightedPageRank.FracScale / wSrc.get(s))
-    }
-    val nodes = new java.util.LinkedHashSet[Any]()
-    edges.foreach { case (s, d, _) => nodes.add(s); nodes.add(d) }
-    val n = nodes.size.toLong
-    val init = PageRank.Scale / n
-    val base = init * 15L / 100L
-    var ranks = new java.util.HashMap[Any, Long]()
-    nodes.forEach(nd => ranks.put(nd, init))
-    var i = 0
-    while (i < iterations) {
-      val inflow = new java.util.HashMap[Any, Long]()
-      val r = ranks
-      frac.foreach { case (s, d, f) =>
-        inflow.merge(d, (r.get(s) * 85L / 100L) * f / WeightedPageRank.FracScale, _ + _)
-      }
-      val next = new java.util.HashMap[Any, Long]()
-      nodes.forEach(nd => next.put(nd, base + inflow.getOrDefault(nd, 0L)))
-      ranks = next
-      i += 1
-    }
-    val schema = StructType(Seq(StructField("node", nodeType),
-      StructField("rank_fp", LongType), StructField("rank", DoubleType)))
-    val out = scala.collection.mutable.ArrayBuffer.empty[Row]
-    nodes.forEach { nd =>
-      val r = ranks.get(nd)
-      out += Row(nd, r, r.toDouble / PageRank.Scale.toDouble)
-    }
-    localDf(spark, schema, out.toSeq)
-  }
-
-  // ----------------------------------------------------------------- HITS
-  /** Mirrors [[Hits.run]]: per half-step, raw inflow sums then L1
-    * renormalization `raw * Scale div tot`, tot = exact Long sum of raws. */
-  def hits(spark: SparkSession, nodeType: DataType,
-           edges: Array[(Any, Any)], iterations: Int): DataFrame = {
-    val nodes = nodeSet(edges)
-    val n = nodes.size.toLong
-    val init = Hits.Scale / n
-    def halfStep(scores: java.util.HashMap[Any, Long],
-                 fromSrc: Boolean): java.util.HashMap[Any, Long] = {
-      val raw = new java.util.HashMap[Any, Long]()
-      edges.foreach { case (s, d) =>
-        if (fromSrc) raw.merge(d, scores.get(s), _ + _)
-        else raw.merge(s, scores.get(d), _ + _)
-      }
-      var tot = 0L
-      raw.forEach((_, v) => tot += v)
-      val t = tot
-      val out = new java.util.HashMap[Any, Long]()
-      nodes.forEach(nd => out.put(nd, raw.getOrDefault(nd, 0L) * Hits.Scale / t))
-      out
-    }
-    var hubs = new java.util.HashMap[Any, Long]()
-    nodes.forEach(nd => hubs.put(nd, init))
-    var auth = hubs
-    var i = 0
-    while (i < iterations) {
-      auth = halfStep(hubs, fromSrc = true)
-      hubs = halfStep(auth, fromSrc = false)
-      i += 1
-    }
-    val schema = StructType(Seq(StructField("node", nodeType),
-      StructField("auth_fp", LongType), StructField("hub_fp", LongType),
-      StructField("auth", DoubleType), StructField("hub", DoubleType)))
-    val out = scala.collection.mutable.ArrayBuffer.empty[Row]
-    nodes.forEach { nd =>
-      val a = auth.get(nd); val h = hubs.get(nd)
-      out += Row(nd, a, h, a.toDouble / Hits.Scale.toDouble, h.toDouble / Hits.Scale.toDouble)
-    }
-    localDf(spark, schema, out.toSeq)
-  }
-
-  // ------------------------------------------------------------------ PPR
-  /** Mirrors [[Ppr.run]] given the already-evaluated seed set. */
-  def ppr(spark: SparkSession, nodeType: DataType, edges: Array[(Any, Any)],
-          seeds: Set[Any], iterations: Int): DataFrame = {
-    require(seeds.nonEmpty, "personalized PageRank needs at least one seed node")
-    val deg = new java.util.HashMap[Any, Long]()
-    edges.foreach { case (s, _) => deg.merge(s, 1L, _ + _) }
-    val nodes = nodeSet(edges)
-    val init = PageRank.Scale / seeds.size.toLong
-    val base = init * 15L / 100L
-    var ranks = new java.util.HashMap[Any, Long]()
-    nodes.forEach(nd => ranks.put(nd, if (seeds(nd)) init else 0L))
-    var i = 0
-    while (i < iterations) {
-      val inflow = new java.util.HashMap[Any, Long]()
-      val r = ranks
-      edges.foreach { case (s, d) =>
-        val rs = r.get(s)
-        if (rs > 0L) inflow.merge(d, rs * 85L / (100L * deg.get(s)), _ + _)
-      }
-      val next = new java.util.HashMap[Any, Long]()
-      nodes.forEach { nd =>
-        next.put(nd, (if (seeds(nd)) base else 0L) + inflow.getOrDefault(nd, 0L))
-      }
-      ranks = next
-      i += 1
-    }
-    val schema = StructType(Seq(StructField("node", nodeType),
-      StructField("rank_fp", LongType), StructField("rank", DoubleType)))
-    val out = scala.collection.mutable.ArrayBuffer.empty[Row]
-    nodes.forEach { nd =>
-      val r = ranks.get(nd)
-      out += Row(nd, r, r.toDouble / PageRank.Scale.toDouble)
-    }
-    localDf(spark, schema, out.toSeq)
   }
 
   // ------------------------------------------------------------------ BFS

@@ -1,31 +1,15 @@
 package graft.kg
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** PageRank over the entity graph the KG pipeline emits — node importance
   * for entity salience ranking and canonical-id tie-breaking.
   *
-  * Determinism design: ranks are kept as FIXED-POINT Longs (micro-units of
-  * the total mass), never Doubles. Long sums are exact and associative, so
-  * the per-iteration `groupBy(dst).sum(contrib)` produces bit-identical
-  * ranks at ANY partitioning/parallelism — the repo invariant (no
-  * core-count-dependent float summation) extended to an iterative graph
-  * job. Damping is the rational 85/100; contributions use integer division
-  * (floor), so a little mass evaporates per hop (as it does for dangling
-  * nodes — the standard "drop dangling mass" variant). That loss is itself
-  * deterministic.
-  *
-  * Scale design: the edge set is hash-partitioned by `src` ONCE and
-  * localCheckpoint'ed; every iteration's rank join reuses that
-  * materialization, so each of the `iterations` rounds costs one shuffle of
-  * the (node, rank) table only — edges (the big side at 10^12 docs) never
-  * move after the first materialization. Out-degrees are precomputed and
-  * folded into the same table. Each round's ranks are localCheckpoint'ed
-  * too: that truncates lineage, without which the logical plan doubles per
-  * round (both join inputs reference the previous round) — 2^rounds plan
-  * nodes. On a real cluster swap localCheckpoint for a reliable
-  * `checkpoint` dir to survive executor loss mid-computation.
+  * Fixed-point ranks (micro-units of [[Scale]]), damping 85/100, integer
+  * floor division — bit-identical at any parallelism; the loop, its
+  * determinism and its scale design live in [[RankPropagation]]. PageRank is
+  * [[Ppr]] with every node seeded, so both run [[propagate]].
   */
 object PageRank {
 
@@ -35,47 +19,19 @@ object PageRank {
   /** Ranks for the directed graph `edges(src, obj)`. Output:
     * (node, rank_fp bigint, rank double = rank_fp/Scale). */
   def run(edges: DataFrame, iterations: Int = 10,
-          srcCol: String = "src", dstCol: String = "dst"): DataFrame = {
-    val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst")).distinct()
-      .repartition(col("src"))
-      // localCheckpoint, not persist: truncates LINEAGE, so each iteration's
-      // plan references a materialized RDD instead of re-inlining the whole
-      // upstream pipeline — with plain persist the logical plan doubles per
-      // iteration (ranks ⋈ edges both reference the previous round) and 10
-      // rounds produce a 2^10-reference tree that OOMs plan stringification
-      // long before any data moves. Same pattern as ConnectedComponents.
-      .localCheckpoint()
-    // small-graph early-out: below the bound the whole fixpoint runs as a
-    // driver-local loop with identical Long arithmetic (bit-exact,
-    // LocalIterParitySpec); the count is a cheap cached-RDD scan
-    val eCnt = e.count()
-    if (eCnt > 0 && eCnt <= LocalIter.maxEdges(e.sparkSession))
-      return LocalIter.pageRank(e.sparkSession, e.schema.fields(0).dataType,
-        e.collect().map(r => (r.get(0), r.get(1))), iterations)
-    val outDeg = e.groupBy("src").agg(count(lit(1)).as("deg"))
-    val eDeg = e.join(outDeg, "src").localCheckpoint()
-    val nodes = e.select(col("src").as("node")).union(e.select(col("dst").as("node")))
-      .distinct().localCheckpoint()
-    val n = nodes.count()
-    if (n == 0) { // empty graph → empty result with the right schema
-      return nodes.select(col("node"), lit(0L).as("rank_fp"), lit(0.0).as("rank"))
-    }
-    val init = Scale / n
-    val base = init * 15L / 100L
+          srcCol: String = "src", dstCol: String = "dst"): DataFrame =
+    propagate(edges, None, iterations, srcCol, dstCol)
 
-    var ranks = nodes.select(col("node"), lit(init).as("rank_fp")).localCheckpoint()
-    var i = 0
-    while (i < iterations) {
-      val contribs = eDeg.join(ranks, eDeg("src") === ranks("node"))
-        .select(col("dst").as("node"),
-          expr("rank_fp * 85L div (100L * deg)").as("c")) // integer div: exact Long floor, never a double
-        .groupBy("node").agg(sum(col("c")).as("inflow"))
-      ranks = nodes.join(contribs, Seq("node"), "left_outer")
-        .select(col("node"), (lit(base) + coalesce(col("inflow"), lit(0L))).as("rank_fp"))
-        .localCheckpoint() // eager: materializes AND truncates this round's lineage
-      i += 1
-    }
-    ranks.select(col("node"), col("rank_fp"),
-      (col("rank_fp").cast("double") / lit(Scale.toDouble)).as("rank"))
-  }
+  /** Damped ranks over the distinct edges, restarting at the nodes
+    * `seedPred` selects (every node when None): each edge carries
+    * `rank_fp * 85 div (100 * deg)` of its source's rank, `deg` the source's
+    * out-degree (its total out-weight at weight 1). */
+  private[kg] def propagate(edges: DataFrame, seedPred: Option[Column], iterations: Int,
+                            srcCol: String, dstCol: String): DataFrame =
+    RankPropagation.run(
+      RankPropagation.edges(edges.select(col(srcCol).as("src"), col(dstCol).as("dst")).distinct()
+        .withColumn("w", lit(1L))),
+      RankPropagation.Rule("w_src", (_, deg) => deg,
+        "rank_fp * 85L div (100L * p)", (rank, deg) => rank * 85L / (100L * deg)),
+      seedPred, iterations)
 }

@@ -1,7 +1,6 @@
 package graft.kg
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.functions._
 
 /** Personalized PageRank — seed-relative node relevance over the link graph.
   * Where [[PageRank]] answers "how important is this page globally", PPR
@@ -19,13 +18,10 @@ import org.apache.spark.sql.functions._
   * DuckDB oracle unrolls the same iterations bit-exactly
   * ([[oracleSqlFromEdges]]).
   *
-  * Scale: everything PageRank does (edges hash-partitioned by src ONCE and
-  * localCheckpoint'ed, one slim (node, rank) shuffle per round, per-round
-  * lineage truncation) PLUS the PPR-specific win: non-seed nodes start at
-  * exactly 0 and the contribution join filters `rank_fp > 0`, so round r
-  * shuffles only the out-edges of nodes the seed mass has actually reached —
-  * early rounds are frontier-sized, not |V|-sized (exact: a zero rank
-  * floor-divides to a zero contribution, so skipping it changes no sum).
+  * Scale: the [[RankPropagation]] loop — non-seed nodes start at exactly 0
+  * and the contribution join skips zero ranks, so round r shuffles only the
+  * out-edges of nodes the seed mass has actually reached: early rounds are
+  * frontier-sized, not |V|-sized.
   */
 object Ppr {
 
@@ -34,54 +30,8 @@ object Ppr {
     * Output: (node, rank_fp bigint, rank double) for EVERY node — unreached
     * nodes report exactly 0. */
   def run(edges: DataFrame, seedPred: Column, iterations: Int = 10,
-          srcCol: String = "src", dstCol: String = "dst"): DataFrame = {
-    val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst")).distinct()
-      .repartition(col("src"))
-      .localCheckpoint() // lineage truncation — the iterative-job invariant
-    // small-graph early-out: the seed predicate is evaluated by Catalyst
-    // over a LocalRelation of the node set (identical expression
-    // semantics), then the fixpoint runs driver-local (bit-exact,
-    // LocalIterParitySpec)
-    val eCnt = e.count()
-    if (eCnt > 0 && eCnt <= LocalIter.maxEdges(e.sparkSession)) {
-      val localEdges = e.collect().map(r => (r.get(0), r.get(1)))
-      val nodeType = e.schema.fields(0).dataType
-      val seedSet = LocalIter.evalSeeds(e.sparkSession, nodeType,
-        LocalIter.nodeSet(localEdges), seedPred)
-      return LocalIter.ppr(e.sparkSession, nodeType, localEdges, seedSet, iterations)
-    }
-    val outDeg = e.groupBy("src").agg(count(lit(1)).as("deg"))
-    val eDeg = e.join(outDeg, "src").localCheckpoint()
-    val nodes = e.select(col("src").as("node")).union(e.select(col("dst").as("node")))
-      .distinct()
-    // the seed flag rides the node table so the per-round restart term is a
-    // column product, never a re-evaluation of the predicate
-    val seeded = nodes.withColumn("is_seed", when(seedPred, 1L).otherwise(0L))
-      .localCheckpoint()
-    val nSeeds = seeded.filter(col("is_seed") === 1L).count()
-    require(nSeeds > 0, "personalized PageRank needs at least one seed node")
-    val init = PageRank.Scale / nSeeds
-    val base = init * 15L / 100L
-
-    var ranks = seeded
-      .select(col("node"), col("is_seed"), (col("is_seed") * init).as("rank_fp"))
-      .localCheckpoint()
-    var i = 0
-    while (i < iterations) {
-      val contribs = eDeg
-        .join(ranks.filter(col("rank_fp") > 0L), eDeg("src") === col("node"))
-        .select(col("dst").as("node"),
-          expr("rank_fp * 85L div (100L * deg)").as("c")) // exact Long floor
-        .groupBy("node").agg(sum(col("c")).as("inflow"))
-      ranks = seeded.join(contribs, Seq("node"), "left_outer")
-        .select(col("node"), col("is_seed"),
-          (col("is_seed") * base + coalesce(col("inflow"), lit(0L))).as("rank_fp"))
-        .localCheckpoint()
-      i += 1
-    }
-    ranks.select(col("node"), col("rank_fp"),
-      (col("rank_fp").cast("double") / lit(PageRank.Scale.toDouble)).as("rank"))
-  }
+          srcCol: String = "src", dstCol: String = "dst"): DataFrame =
+    PageRank.propagate(edges, Some(seedPred), iterations, srcCol, dstCol)
 
   /** The unrolled fixed-point PPR oracle (the q54/q66 PageRank pattern):
     * each round is one contribution aggregation + one left join against the

@@ -1,6 +1,6 @@
 package graft.kg
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Observation}
 import org.apache.spark.sql.functions._
 
 /** Weighted PageRank — link-multiplicity-aware importance over rollup graphs
@@ -19,9 +19,8 @@ import org.apache.spark.sql.functions._
   * same contract as the unweighted operator's integer-division evaporation,
   * and the DuckDB oracle unrolls the identical expression bit-exactly.
   *
-  * Scale: identical to [[PageRank]] — weighted edges collapse once
-  * (duplicate (src,dst) sum their weights), partition by src once,
-  * localCheckpoint; each round shuffles only the slim (node, rank) table.
+  * Scale: the [[RankPropagation]] loop — weighted edges collapse once
+  * (duplicate (src,dst) sum their weights) and are partitioned by src once.
   */
 object WeightedPageRank {
 
@@ -32,46 +31,19 @@ object WeightedPageRank {
     * non-positive weights are rejected. */
   def run(edges: DataFrame, iterations: Int = 10, srcCol: String = "src",
           dstCol: String = "dst", wCol: String = "w"): DataFrame = {
-    val spark = edges.sparkSession
-    val e0 = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"),
-        col(wCol).cast("long").as("w"))
-      .groupBy("src", "dst").agg(sum(col("w")).as("w"))
-      .repartition(col("src"))
-      .localCheckpoint()
-    // small-graph early-out (bit-exact driver-local loop incl. the
-    // positive-weight requirement, LocalIterParitySpec)
-    val eCnt = e0.count()
-    if (eCnt > 0 && eCnt <= LocalIter.maxEdges(spark))
-      return LocalIter.weightedPageRank(spark, e0.schema.fields(0).dataType,
-        e0.collect().map(r => (r.get(0), r.get(1), r.getLong(2))), iterations)
-    require(e0.filter(col("w") <= 0L).isEmpty, "edge weights must be positive")
-    val wOut = e0.groupBy("src").agg(sum(col("w")).as("w_src"))
-    val eFrac = e0.join(wOut, "src")
-      .select(col("src"), col("dst"),
-        expr(s"w * ${FracScale}L div w_src").as("frac"))
-      .localCheckpoint()
-    val nodes = e0.select(col("src").as("node")).union(e0.select(col("dst").as("node")))
-      .distinct().localCheckpoint()
-    val n = nodes.count()
-    if (n == 0)
-      return nodes.select(col("node"), lit(0L).as("rank_fp"), lit(0.0).as("rank"))
-    val init = PageRank.Scale / n
-    val base = init * 15L / 100L
-
-    var ranks = nodes.select(col("node"), lit(init).as("rank_fp")).localCheckpoint()
-    var i = 0
-    while (i < iterations) {
-      val contribs = eFrac.join(ranks, eFrac("src") === ranks("node"))
-        .select(col("dst").as("node"),
-          expr(s"(rank_fp * 85L div 100L) * frac div ${FracScale}L").as("c"))
-        .groupBy("node").agg(sum(col("c")).as("inflow"))
-      ranks = nodes.join(contribs, Seq("node"), "left_outer")
-        .select(col("node"), (lit(base) + coalesce(col("inflow"), lit(0L))).as("rank_fp"))
-        .localCheckpoint()
-      i += 1
-    }
-    ranks.select(col("node"), col("rank_fp"),
-      (col("rank_fp").cast("double") / lit(PageRank.Scale.toDouble)).as("rank"))
+    // counted inside the edge table's own materialization job, for both
+    // paths; the metric is absent when Spark prunes a provably empty input
+    val nonPositive = Observation()
+    val e = RankPropagation.edges(
+      edges.select(col(srcCol).as("src"), col(dstCol).as("dst"), col(wCol).cast("long").as("w"))
+        .groupBy("src", "dst").agg(sum(col("w")).as("w"))
+        .observe(nonPositive, count_if(col("w") <= 0L).as("n")))
+    require(nonPositive.get.getOrElse("n", 0L) == 0L, "edge weights must be positive")
+    RankPropagation.run(e,
+      RankPropagation.Rule(s"w * ${FracScale}L div w_src", (w, wSrc) => w * FracScale / wSrc,
+        s"(rank_fp * 85L div 100L) * p div ${FracScale}L",
+        (rank, frac) => (rank * 85L / 100L) * frac / FracScale),
+      None, iterations)
   }
 
   /** Unrolled fixed-point oracle (the q54/q83 pattern); `edgeSql` must yield

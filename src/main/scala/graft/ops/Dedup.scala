@@ -263,7 +263,7 @@ object Dedup {
     // answer — emit the final frame as a LocalRelation instead of paying
     // the generic sym-distinct / node-distinct / label-join round-trips
     val eCnt = edges.count()
-    if (eCnt <= graft.kg.LocalIter.maxEdges(edges.sparkSession)) {
+    if (eCnt > 0 && eCnt <= graft.kg.LocalIter.maxEdges(edges.sparkSession)) {
       import org.apache.spark.sql.types.{BooleanType, LongType, StructField, StructType}
       val ord = graft.kg.LocalIter.orderingFor(org.apache.spark.sql.types.StringType).get
       val lbl = graft.kg.LocalIter.ccLabels(

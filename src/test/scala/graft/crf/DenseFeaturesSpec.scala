@@ -50,9 +50,7 @@ class DenseFeaturesSpec extends AnyFunSuite {
   }
 
   test("dense atoms appear in a trained model and survive save/load + decode") {
-    val examples = graft.io.MarkdownReader.read(
-      java.nio.file.Files.readString(java.nio.file.Paths.get(
-        "/root/reference/examples/restaurent_search.md")))
+    val examples = RestaurantCorpus.examples
     val cfg = CrfConfig.restaurantConfig.copy(
       features = IndexedSeq(
         IndexedSeq("low"),
@@ -84,9 +82,7 @@ class DenseFeaturesSpec extends AnyFunSuite {
   }
 
   test("decoder cache is not poisoned by per-sentence dense presence (OOV rule)") {
-    val examples = graft.io.MarkdownReader.read(
-      java.nio.file.Files.readString(java.nio.file.Paths.get(
-        "/root/reference/examples/restaurent_search.md")))
+    val examples = RestaurantCorpus.examples
     val cfg = CrfConfig.restaurantConfig.copy(
       features = IndexedSeq(IndexedSeq("low"),
         IndexedSeq("low", "bias", "suffix3", "dense_features"), IndexedSeq("low")),

@@ -10,10 +10,7 @@ import graft.kg.PagesGen
 class MinFreqSpec extends AnyFunSuite {
   lazy val spark = SparkTestBase.spark
 
-  private def restaurantExamples: Seq[Example] =
-    graft.io.MarkdownReader.read(
-      java.nio.file.Files.readString(java.nio.file.Paths.get(
-        "/root/reference/examples/restaurent_search.md")))
+  private def restaurantExamples: Seq[Example] = RestaurantCorpus.examples
 
   test("minFreq=0 keeps every observed feature (crfsuite default)") {
     val cfg = CrfConfig.restaurantConfig

@@ -7,9 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * (the reference README's 1.000 report), deterministically. */
 class OnlineTrainersSpec extends AnyFunSuite {
 
-  private lazy val examples = graft.io.MarkdownReader.read(
-    java.nio.file.Files.readString(java.nio.file.Paths.get(
-      "/root/reference/examples/restaurent_search.md")))
+  private lazy val examples = RestaurantCorpus.examples
 
   for (algo <- Seq("l2sgd", "ap", "pa", "arow")) {
     test(s"$algo reaches micro F1 = 1.0 on the restaurant corpus") {

@@ -1,21 +1,16 @@
 package graft.crf
 
 import org.scalatest.funsuite.AnyFunSuite
-import graft.io.{MarkdownReader, ModelIO}
+import graft.io.ModelIO
 
 /** End-to-end parity gate #1 (SURVEY §7 step 1): train on the reference's own
-  * restaurant corpus (data fixture from
-  * `/root/reference/examples/restaurent_search.md`, config from
+  * restaurant corpus ([[RestaurantCorpus]], config from the reference's
   * `examples/default-config.json`) and reproduce the reference's published
   * all-1.000 train-set report (`/root/reference/README.md:110-122`) plus
   * byte-identical predicted span values. */
 class RestaurantE2ESpec extends AnyFunSuite {
 
-  lazy val corpus: IndexedSeq[Example] = {
-    val src = scala.io.Source.fromInputStream(
-      getClass.getResourceAsStream("/restaurant_search.md"), "UTF-8")
-    try MarkdownReader.read(src.mkString) finally src.close()
-  }
+  lazy val corpus: IndexedSeq[Example] = RestaurantCorpus.examples
   lazy val model: CrfModel = Trainer.trainExamples(corpus, CrfConfig.restaurantConfig)
 
   test("corpus parses to 15 examples") {

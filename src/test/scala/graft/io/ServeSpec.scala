@@ -10,9 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class ServeSpec extends AnyFunSuite {
 
   private lazy val model = {
-    val examples = MarkdownReader.read(
-      java.nio.file.Files.readString(java.nio.file.Paths.get(
-        "/root/reference/examples/restaurent_search.md")))
+    val examples = graft.crf.RestaurantCorpus.examples
     graft.crf.Trainer.trainExamples(examples, graft.crf.CrfConfig.restaurantConfig)
   }
 

@@ -3,13 +3,16 @@ package graft.kg
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.DataType
 import graft.SparkTestBase
 
 /** The driver-local small-graph fixpoints must be BIT-IDENTICAL to the
   * distributed paths — same Long arithmetic, same orderings. Each test runs
   * the operator twice: once under the default bound (local path taken) and
   * once with `spark.graft.localIterMaxEdges = 0` (distributed path forced),
-  * and compares full result maps. */
+  * and compares full result maps. The degenerate graphs (empty, one edge)
+  * must also agree when the operator rejects them: the same `require`
+  * message from both paths. */
 class LocalIterParitySpec extends AnyFunSuite {
   lazy val spark = SparkTestBase.spark
   import spark.implicits._
@@ -102,5 +105,72 @@ class LocalIterParitySpec extends AnyFunSuite {
     val dist = distributed(rows(ConnectedComponents.run(nodes, e)))
     assert(local === dist)
     assert(local.forall(_(1) == s"C:$b")) // U+FFFD is the UTF-8 minimum
+  }
+
+  // ------------------------------------------------------ degenerate graphs
+  private val NoSeed = "requirement failed: personalized PageRank needs at least one seed node"
+  private lazy val noEdges = Seq.empty[(String, String)].toDF("src", "dst")
+  private lazy val oneEdge = Seq(("a", "b")).toDF("src", "dst")
+
+  /** Runs `f` on both paths: each must give the same column types and rows,
+    * or fail the same `require`. Returns the agreed outcome. */
+  private def samePaths(f: => DataFrame): Either[String, (Seq[(String, DataType)], Set[Seq[Any]])] = {
+    def attempt =
+      try { val df = f; Right((df.schema.map(c => (c.name, c.dataType)), rows(df))) }
+      catch { case e: IllegalArgumentException => Left(e.getMessage) }
+    val local = attempt
+    assert(local === distributed(attempt))
+    local
+  }
+
+  private def rowsOf(f: => DataFrame): Set[Seq[Any]] = samePaths(f).fold(fail(_), _._2)
+
+  test("PageRank, WPR and HITS: an empty graph gives an empty result typed like a one-edge graph's") {
+    val ops: Seq[(String, DataFrame => DataFrame)] = Seq(
+      "PageRank" -> (PageRank.run(_, iterations = 3)),
+      "WPR" -> (e => WeightedPageRank.run(e.withColumn("w", lit(3L)), iterations = 3)),
+      "HITS" -> (Hits.run(_, iterations = 3)))
+    for ((name, op) <- ops) {
+      val (emptySchema, emptyRows) = samePaths(op(noEdges)).fold(fail(_), identity)
+      val (oneSchema, oneRows) = samePaths(op(oneEdge)).fold(fail(_), identity)
+      assert(emptyRows.isEmpty, name)
+      assert(emptySchema === oneSchema, name)
+      assert(oneRows.map(_.head) === Set("a", "b"), name)
+    }
+  }
+
+  test("PageRank and WPR on one edge: the source keeps the restart term, the target adds its share") {
+    val base = PageRank.Scale / 2 * 15L / 100L
+    val want = Map("a" -> base, "b" -> (base + base * 85L / 100L))
+    assert(rowsOf(PageRank.run(oneEdge, iterations = 3)).map(r => r(0) -> r(1)).toMap === want)
+    assert(rowsOf(WeightedPageRank.run(oneEdge.withColumn("w", lit(3L)), iterations = 3))
+      .map(r => r(0) -> r(1)).toMap === want)
+  }
+
+  test("HITS on one edge: the source is the pure hub, the target the pure authority") {
+    assert(rowsOf(Hits.run(oneEdge, iterations = 3)).map(_.take(3)) ===
+      Set(Seq("a", 0L, Hits.Scale), Seq("b", Hits.Scale, 0L)))
+  }
+
+  test("PPR: empty graph and unmatched seed fail the same require; one seeded edge ranks") {
+    assert(samePaths(Ppr.run(noEdges, col("node") === "a")) === Left(NoSeed))
+    assert(samePaths(Ppr.run(oneEdge, col("node") === "zzz")) === Left(NoSeed))
+    val base = PageRank.Scale * 15L / 100L
+    assert(rowsOf(Ppr.run(oneEdge, col("node") === "a", iterations = 3)).map(r => r(0) -> r(1)).toMap ===
+      Map("a" -> base, "b" -> base * 85L / 100L))
+  }
+
+  test("WPR: a non-positive weight fails the same require on a one-edge graph") {
+    assert(samePaths(WeightedPageRank.run(Seq(("a", "b", 0L)).toDF("src", "dst", "w"))) ===
+      Left("requirement failed: edge weights must be positive"))
+  }
+
+  test("connected components: empty and one-edge graphs, isolated nodes self-label") {
+    val noPairs = Seq.empty[(String, String)].toDF("node_a", "node_b")
+    assert(rowsOf(ConnectedComponents.run(Seq.empty[String].toDF("node"), noPairs)).isEmpty)
+    assert(rowsOf(ConnectedComponents.run(Seq("x").toDF("node"), noPairs)) === Set(Seq("x", "C:x")))
+    assert(rowsOf(ConnectedComponents.run(Seq("a", "b", "x").toDF("node"),
+        Seq(("a", "b")).toDF("node_a", "node_b"))) ===
+      Set(Seq("a", "C:a"), Seq("b", "C:a"), Seq("x", "C:x")))
   }
 }
