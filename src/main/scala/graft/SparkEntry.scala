@@ -922,26 +922,22 @@ object SparkEntry {
   val KgPages = 300L
 
   private def kgMentions(s: SparkSession): DataFrame = {
-    import s.implicits._
     val pages = graft.kg.PagesGen.pages(s, KgPages, 42L)
     val sents = graft.kg.KgPipeline.sentences(pages)
-    graft.kg.KgPipeline.mentions(sents, kgModel).toDF()
+    graft.kg.KgPipeline.mentions(sents, kgModel)
       .withColumn("confidence", round(col("confidence"), 4))
   }
 
   private val kgQueries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q50_kg_mentions" -> ((s, _) => kgMentions(s).drop("partition_id")),
     "q51_kg_links" -> ((s, _) => {
-      import s.implicits._
-      graft.kg.KgPipeline.links(kgMentions(s).as[graft.kg.MentionRow],
-        graft.kg.KgPipeline.aliasDf(s)).withColumn("score", round(col("score"), 4))
+      graft.kg.KgPipeline.links(kgMentions(s), graft.kg.KgPipeline.aliasDf(s))
+        .withColumn("score", round(col("score"), 4))
     }),
     "q52_kg_triples" -> ((s, _) => {
-      import s.implicits._
       val pages = graft.kg.PagesGen.pages(s, KgPages, 42L)
       val sents = graft.kg.KgPipeline.sentences(pages)
-      val links = graft.kg.KgPipeline.links(kgMentions(s).as[graft.kg.MentionRow],
-        graft.kg.KgPipeline.aliasDf(s))
+      val links = graft.kg.KgPipeline.links(kgMentions(s), graft.kg.KgPipeline.aliasDf(s))
       graft.kg.KgPipeline.triples(links, sents)
         .withColumn("conf", round(col("conf"), 4)).drop("n_urls")
     }),
@@ -952,8 +948,7 @@ object SparkEntry {
       import s.implicits._
       val pages = graft.kg.PagesGen.pages(s, KgPages, 42L)
       val sents = graft.kg.KgPipeline.sentences(pages)
-      val links = graft.kg.KgPipeline.links(kgMentions(s).as[graft.kg.MentionRow],
-        graft.kg.KgPipeline.aliasDf(s))
+      val links = graft.kg.KgPipeline.links(kgMentions(s), graft.kg.KgPipeline.aliasDf(s))
       val triples = graft.kg.KgPipeline.triples(links, sents)
       // single-pass degree profile: the old out ∪ in union referenced the
       // un-materialized triples plan TWICE, re-running the whole CRF chain
@@ -968,11 +963,9 @@ object SparkEntry {
         .withColumn("degree", col("out_deg") + col("in_deg"))
     }),
     "q54_kg_pagerank" -> ((s, _) => {
-      import s.implicits._
       val pages = graft.kg.PagesGen.pages(s, KgPages, 42L)
       val sents = graft.kg.KgPipeline.sentences(pages)
-      val links = graft.kg.KgPipeline.links(kgMentions(s).as[graft.kg.MentionRow],
-        graft.kg.KgPipeline.aliasDf(s))
+      val links = graft.kg.KgPipeline.links(kgMentions(s), graft.kg.KgPipeline.aliasDf(s))
       val triples = graft.kg.KgPipeline.triples(links, sents)
       graft.kg.PageRank.run(
         triples.select(col("subj").as("src"), col("obj").as("dst")), iterations = 10)
@@ -1228,19 +1221,15 @@ object SparkEntry {
       // the oracle recomputes pairs/marginals/NPMI from the q51 links PIN in
       // DuckDB — a cross-engine value check of the whole aggregation (the
       // pin's own values are gated by q51's match), same pattern as q55
-      import s.implicits._
-      val links = graft.kg.KgPipeline.links(kgMentions(s).as[graft.kg.MentionRow],
-        graft.kg.KgPipeline.aliasDf(s))
+      val links = graft.kg.KgPipeline.links(kgMentions(s), graft.kg.KgPipeline.aliasDf(s))
       graft.kg.KgPipeline.cooccurrence(links)
     }),
     "q53_kg_canonical" -> ((s, _) => {
-      import s.implicits._
       // mentions feeds BOTH links and canonical — persist so the CRF decode
       // runs once, not re-inlined per reference (the round-2 q53 regression;
       // PipelineCli gets the same effect from its parquet checkpoints)
       val mentions = kgMentions(s)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        .as[graft.kg.MentionRow]
       val links = graft.kg.KgPipeline.links(mentions, graft.kg.KgPipeline.aliasDf(s))
       graft.kg.KgPipeline.canonical(mentions, links)
     }))

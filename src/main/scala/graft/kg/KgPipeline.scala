@@ -1,20 +1,19 @@
 package graft.kg
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
 import graft.crf.{CrfConfig, CrfModel}
-
-case class SentenceRow(url: String, sent_id: Int, text: String)
-case class MentionRow(url: String, sent_id: Int, start: Int, end: Int, value: String,
-                      entity: String, confidence: Double, partition_id: Int)
+import graft.ops.Dedup.explodeOrderedPairs
+import graft.plans.GraftFunctions.crf_tag
 
 /** The Spark-native KG-construction pipeline (north_rule): pages → sentences →
   * CRF mentions → alias links → canonicalization → triples → graph tables.
   *
   * Scale design (SURVEY §4):
-  *  - model crosses to executors ONCE via broadcast; decode is a typed
-  *    `mapPartitions` (no per-row closure state, no driver loop)
+  *  - sentences and mentions are built-in expressions end to end:
+  *    `posexplode(split(text))`, then `inline(crf_tag(text))` — the model
+  *    crosses to executors ONCE via the broadcast `crf_tag` carries, and
+  *    Catalyst prunes columns through the decode (no encoder round-trips)
   *  - explicit `repartition(pmod(xxhash64(url), P))` before the heavy CRF
   *    stage: deterministic placement, no skew from source file layout
   *  - alias linking is a broadcast hash join (dictionary ≪ mentions)
@@ -29,57 +28,37 @@ case class MentionRow(url: String, sent_id: Int, start: Int, end: Int, value: St
 object KgPipeline {
 
   // ---------------------------------------------------------------- sentences
-  /** pages → one row per sentence. Filter non-English pages (input_hint: other
-    * langs pass through untouched, i.e. never enter extraction). The page text
-    * is NEWLINE-joined sentences; splitting on '\n' reproduces each sentence
-    * byte-identically (the per-row invariant). */
-  def sentences(pages: Dataset[Page]): Dataset[SentenceRow] = {
-    val spark = pages.sparkSession
-    import spark.implicits._
-    pages.filter($"lang" === "en")
-      .flatMap(p => p.text.split('\n').iterator.zipWithIndex.map { case (s, i) => SentenceRow(p.url, i, s) })
+  /** pages → one row per sentence `(url, sent_id, text)`. Filter non-English
+    * pages (input_hint: other langs pass through untouched, i.e. never enter
+    * extraction). The page text is NEWLINE-joined sentences; splitting on
+    * '\n' reproduces each sentence byte-identically (the per-row
+    * invariant). */
+  def sentences(pages: Dataset[Page]): DataFrame = sentenceRows(pages.toDF(), col("url"))
+
+  /** [[sentences]] keeping the `keep` columns of each page. Rows follow Java
+    * `String.split('\n')`, which drops trailing empty strings: trailing
+    * newlines are trimmed before the split, and a page of newlines only
+    * yields no sentence (an empty page still yields one empty sentence). */
+  private[graft] def sentenceRows(pages: DataFrame, keep: Column*): DataFrame = {
+    val body = rtrim(col("text"), "\n")
+    pages.filter(col("lang") === "en" && (body =!= "" || col("text") === ""))
+      .select(keep :+ posexplode(split(body, "\n")).as(Seq("sent_id", "text")): _*)
   }
 
   // ----------------------------------------------------------------- mentions
-  /** CRF mention extraction: broadcast model, explicit url-hash repartition,
-    * batched per-partition decode, per-partition lineage column + counters.
-    * `partitions = -1` skips the repartition — for inputs already evenly
-    * hash-distributed (e.g. the deterministic generator), the shuffle buys
-    * nothing and its disk IO is a scaling bottleneck. */
-  /** Named-accumulator counter metrics (north_rule): registered on the Spark
-    * UI and readable by the caller after an action. */
-  case class StageCounters(sentences: org.apache.spark.util.LongAccumulator,
-                           mentions: org.apache.spark.util.LongAccumulator)
-
-  def mentions(sents: Dataset[SentenceRow], model: CrfModel, partitions: Int = 0,
-               counters: Option[StageCounters] = None): Dataset[MentionRow] = {
-    val spark = sents.sparkSession
-    import spark.implicits._
-    val bc = spark.sparkContext.broadcast(model)
-    val cs = counters.getOrElse(StageCounters(
-      spark.sparkContext.longAccumulator("kg.sentences"),
-      spark.sparkContext.longAccumulator("kg.mentions")))
-    val sentCounter = cs.sentences
-    val mentionCounter = cs.mentions
-    val p = if (partitions > 0) partitions else spark.sparkContext.defaultParallelism
+  /** CRF mention extraction: explicit url-hash repartition, then one
+    * `inline(crf_tag(text))` per sentence plus the per-partition lineage
+    * column `partition_id`. Rows per stage partition are in the checkpoint
+    * manifest. `partitions = -1` skips the repartition — for inputs already
+    * evenly hash-distributed (e.g. the deterministic generator), the shuffle
+    * buys nothing and its disk IO is a scaling bottleneck. */
+  def mentions(sents: DataFrame, model: CrfModel, partitions: Int = 0): DataFrame = {
+    val p = if (partitions > 0) partitions else sents.sparkSession.sparkContext.defaultParallelism
     val distributed =
       if (partitions < 0) sents
-      else sents.repartition(p, pmod(xxhash64($"url"), lit(p)))
-    distributed
-      .mapPartitions { iter =>
-        // per-thread decoder reused across partitions (CrfDecoder.forModel):
-        // the (slot, token) contribution cache (Zipfian hit rates) warms
-        // once per executor core instead of once per partition
-        val decoder = graft.crf.CrfDecoder.forModel(bc.value)
-        val pid = org.apache.spark.TaskContext.getPartitionId()
-        iter.flatMap { s =>
-          sentCounter.add(1)
-          decoder.process(s.text).map { sp =>
-            mentionCounter.add(1)
-            MentionRow(s.url, s.sent_id, sp.start, sp.end, sp.value, sp.entity, sp.confidence, pid)
-          }
-        }
-      }
+      else sents.repartition(p, pmod(xxhash64(col("url")), lit(p)))
+    distributed.select(col("url"), col("sent_id"), inline(crf_tag(col("text"), model)),
+      spark_partition_id().as("partition_id"))
   }
 
   // -------------------------------------------------------------------- links
@@ -92,7 +71,7 @@ object KgPipeline {
     * stage. Ties on score break to the larger entity_id (struct ordering) —
     * deterministic across partitionings. (Window rank-k stays the tool for
     * k > 1; see SparkEntry q04.) */
-  def links(mentions: Dataset[MentionRow], alias: DataFrame): DataFrame = {
+  def links(mentions: DataFrame, alias: DataFrame): DataFrame = {
     val scored = mentions
       .join(broadcast(alias), lower(mentions("value")) === alias("alias") &&
         substring(alias("entity_id"), 1, 3) === mentions("entity"), "inner")
@@ -122,7 +101,7 @@ object KgPipeline {
     * gazetteer-sized (≪ corpus), the join is blocked, and the groupBy feeding
     * it is a salted two-phase count — safe at 10^12 docs because it only ever
     * sees DISTINCT surfaces. */
-  def canonical(mentions: Dataset[MentionRow], links: DataFrame): DataFrame = {
+  def canonical(mentions: DataFrame, links: DataFrame): DataFrame = {
     val spark = mentions.sparkSession
     import spark.implicits._
 
@@ -148,12 +127,12 @@ object KgPipeline {
     // is a stop-word-like key whose pairs are noise, and the cap bounds the
     // quadratic fan-out per task
     val maxBlock = 1000
-    val simPairs = withBlock.groupBy($"block")
+    val blocks = withBlock.groupBy($"block")
       .agg(sort_array(collect_list(struct($"node", $"surface"))).as("ns"))
       .filter(size($"ns").between(2, maxBlock))
-      .select(explode(blockPairs($"ns")).as("p"))
-      .filter(jaccard3($"p._1.surface", $"p._2.surface") >= 0.5)
-      .select($"p._1.node".as("node_a"), $"p._2.node".as("node_b"))
+    val simPairs = explodeOrderedPairs(blocks, "ns")
+      .filter(jaccard3($"a.surface", $"b.surface") >= 0.5)
+      .select($"a.node".as("node_a"), $"b.node".as("node_b"))
 
     // surface → linked entity id edges; referenced three times (both allNodes
     // unions + the edge set) and distinct-collapsed already — small, persist
@@ -229,7 +208,7 @@ object KgPipeline {
     * sentence (collect_list is safe: ≤ a handful of mentions per sentence),
     * joined back to sentence text, and each ordered pair is matched against
     * the relation patterns on the text BETWEEN the two mentions. */
-  def triples(links: DataFrame, sents: Dataset[SentenceRow]): DataFrame = {
+  def triples(links: DataFrame, sents: DataFrame): DataFrame = {
     val spark = links.sparkSession
     import spark.implicits._
 
@@ -259,14 +238,14 @@ object KgPipeline {
     }.reduce(_ || _)
     val joined = perSentence.join(sents.filter(canMatch), Seq("url", "sent_id"))
 
-    val pairs = joined.select($"url", $"text", explode(pairCombos($"ms")).as("pr"))
+    val pairs = explodeOrderedPairs(joined, "ms", "url", "text")
       .select($"url", $"text",
-        $"pr._1.start".as("s1"), $"pr._1.end".as("e1"),
-        substring($"pr._1.entity_id", 1, 3).as("k1"),
-        $"pr._1.entity_id".as("id1"), $"pr._1.score".as("sc1"),
-        $"pr._2.start".as("s2"), $"pr._2.end".as("e2"),
-        substring($"pr._2.entity_id", 1, 3).as("k2"),
-        $"pr._2.entity_id".as("id2"), $"pr._2.score".as("sc2"))
+        $"a.start".as("s1"), $"a.end".as("e1"),
+        substring($"a.entity_id", 1, 3).as("k1"),
+        $"a.entity_id".as("id1"), $"a.score".as("sc1"),
+        $"b.start".as("s2"), $"b.end".as("e2"),
+        substring($"b.entity_id", 1, 3).as("k2"),
+        $"b.entity_id".as("id2"), $"b.score".as("sc2"))
       .filter($"e1" < $"s2")
       .withColumn("between", expr("substring(text, e1 + 1, s2 - e1)"))
 
@@ -303,17 +282,6 @@ object KgPipeline {
       .agg(sum($"c0").as("n_sources"), max($"m0").as("conf"), count(lit(1)).as("n_urls"))
   }
 
-  /** All unordered pairs within one (bounded) array — built-ins only. */
-  private def blockPairs(xs: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    flatten(transform(xs, (x, i) =>
-      transform(slice(xs, i + lit(2), lit(1000000)), y => struct(x.as("_1"), y.as("_2")))))
-
-  /** All unordered pairs of the (tiny) per-sentence mention array, as a
-    * Column — built-ins only, stays in codegen. */
-  private def pairCombos(ms: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    flatten(transform(ms, (m1, i) =>
-      transform(slice(ms, i + 2, lit(1000000)), m2 => struct(m1.as("_1"), m2.as("_2")))))
-
   // ------------------------------------------------------------ co-occurrence
   /** Sentence-level entity co-occurrence graph with NPMI association — the
     * classic "which entities appear together" KG edge complement to the
@@ -323,7 +291,7 @@ object KgPipeline {
     * entity ids of the sentence (`collect_set` + `sort_array` — bounded,
     * a sentence holds ≤ a handful of entities, and sorted so the pair
     * expansion is deterministic at any parallelism). Pairs expand MAP-SIDE
-    * with the same built-in combination expression as `triples` (no
+    * with the same `Dedup.explodeOrderedPairs` as `triples` (no
     * self-join — the quadratic fan-out never crosses an exchange), and pair
     * counts aggregate in two map-side-combinable phases: per (a, b, url)
     * first, then per (a, b) — which yields an EXACT distinct-url count
@@ -346,9 +314,8 @@ object KgPipeline {
       .agg(sort_array(collect_set($"entity_id")).as("ents"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
-    val pairs = perSent.filter(size($"ents") >= 2)
-      .select($"url", explode(pairCombos($"ents")).as("p"))
-      .select($"url", $"p._1".as("entity_a"), $"p._2".as("entity_b"))
+    val pairs = explodeOrderedPairs(perSent.filter(size($"ents") >= 2), "ents", "url")
+      .select($"url", $"a".as("entity_a"), $"b".as("entity_b"))
     val pairCounts = pairs
       .groupBy($"entity_a", $"entity_b", $"url").agg(count(lit(1)).as("c"))
       .groupBy($"entity_a", $"entity_b")
@@ -378,7 +345,7 @@ object KgPipeline {
     * (domain, url) spread a hot domain across reducers by its pages, then
     * the final merge partial-aggregates map-side (same shape as the triples
     * dedup; exact distinct-url counts, no per-group HLL buffers). */
-  def domainStats(mentions: Dataset[MentionRow]): DataFrame = {
+  def domainStats(mentions: DataFrame): DataFrame = {
     val spark = mentions.sparkSession
     import spark.implicits._
     mentions

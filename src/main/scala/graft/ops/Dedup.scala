@@ -123,16 +123,21 @@ object Dedup {
   }
 
   /** All ordered pairs (a < b by array position) of each row's sorted
-    * `listCol` array, as two bare columns — expanded with
-    * posexplode + slice + explode, which run in GenerateExec/codegen,
-    * instead of the nested HOF lambdas of [[pairCombos]] (interpreted eval
-    * — measured ~2× slower on the multi-million-row pair streams of the
-    * jaccard/containment miners). */
-  private def explodeOrderedPairs(grouped: DataFrame, listCol: String): DataFrame =
+    * `listCol` array, as two bare columns `a`, `b` after the pass-through
+    * `keep` columns — expanded with posexplode + slice + explode, which run
+    * in GenerateExec/codegen, instead of nested `transform` lambdas
+    * (interpreted eval — measured ~2× slower on the multi-million-row pair
+    * streams of the jaccard/containment miners). The one pair-expansion
+    * helper: the miners here and the KG canonical/triples/cooccurrence
+    * stages all use it. */
+  private[graft] def explodeOrderedPairs(grouped: DataFrame, listCol: String,
+                                         keep: String*): DataFrame = {
+    val kept = keep.map(col)
     grouped
-      .select(posexplode(col(listCol)).as(Seq("i", "a")), col(listCol))
-      .select(col("a"),
-        explode(slice(col(listCol), col("i") + lit(2), lit(1000000))).as("b"))
+      .select(kept ++ Seq(posexplode(col(listCol)).as(Seq("i", "a")), col(listCol)): _*)
+      .select(kept ++ Seq(col("a"),
+        explode(slice(col(listCol), col("i") + lit(2), lit(1000000))).as("b")): _*)
+  }
 
   /** Containment near-dup pairs — the asymmetric score Jaccard structurally
     * misses: a short document quoted verbatim inside a long one shares ALL

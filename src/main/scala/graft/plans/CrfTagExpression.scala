@@ -1,47 +1,48 @@
 package graft.plans
 
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.types.StringType
 import org.apache.spark.unsafe.types.UTF8String
 import graft.crf.{CrfDecoder, CrfModel}
 
 /** `crf_tag(text)` as a native Catalyst expression: runs the CRF decoder on a
   * string column and returns `array<struct<start,end,value,entity,confidence>>`.
   *
-  * This is the SQL surface for mention extraction (SURVEY §7 "optional
-  * polish") — the same decode the typed `mapPartitions` path runs, but usable
-  * from `spark.sql("SELECT crf_tag(text) FROM pages")` and composable with
-  * `explode`/`inline`. Registered per-session via [[GraftExtensions]]
+  * This is the ONE Spark-side mention decode: `KgPipeline.mentions`
+  * (`inline(crf_tag(text))`), the streaming window counts and SQL
+  * (`spark.sql("SELECT crf_tag(text) FROM pages")`) all run it. Registered
+  * per-session via [[GraftExtensions]]
   * (`spark.sql.extensions=graft.plans.GraftExtensions`) or
-  * [[GraftFunctions.register]].
+  * [[GraftFunctions.register]]; the Column API is [[GraftFunctions.crf_tag]].
   *
   * Execution notes:
   *  - `doGenCode` emits a direct call into the decoder via a codegen
   *    reference object (the decode itself is a JVM model call — the win over
-  *    the previous CodegenFallback is skipping the interpreted
-  *    `Expression.eval` hop and its row projection, same as the text-hash
-  *    kernels).
-  *  - The model is carried in the expression tree (task-serialized once per
-  *    stage, like a closure); the decoder (with its vocabulary cache) is
-  *    lazily built once per task/thread, NOT per row.
+  *    a CodegenFallback is skipping the interpreted `Expression.eval` hop and
+  *    its row projection, same as the text-hash kernels).
+  *  - The expression carries a BROADCAST handle, not the model: the model
+  *    crosses to each executor once, and every task there reads the same
+  *    `bc.value` object. `CrfDecoder.forModel` keys its per-thread decoder
+  *    (with the (slot, token) contribution cache) by model identity, so the
+  *    cache warms once per executor thread and survives across tasks, stages
+  *    and micro-batches.
   */
-case class CrfTagExpression(child: Expression, model: CrfModel)
+case class CrfTagExpression(child: Expression, model: Broadcast[CrfModel])
     extends UnaryExpression
     with org.apache.spark.sql.catalyst.expressions.ExpectsInputTypes {
   // analysis-time type error / implicit cast like every built-in string fn,
   // instead of an executor-side ClassCastException
   override def inputTypes = Seq(StringType)
 
-
   override def dataType: DataType = CrfTagExpression.spanArrayType
   override def nullable: Boolean = true
   override def prettyName: String = "crf_tag"
-
-  @transient private lazy val decoder = new CrfDecoder(model)
+  // plan strings show `crf_tag(text)`, not the broadcast handle
+  override protected def flatArguments: Iterator[Any] = Iterator(child)
 
   override def nullSafeEval(input: Any): Any = evalText(input.asInstanceOf[UTF8String])
 
@@ -52,7 +53,7 @@ case class CrfTagExpression(child: Expression, model: CrfModel)
 
   /** The kernel — public so the generated code can call it directly. */
   def evalText(input: UTF8String): ArrayData = {
-    val spans = decoder.process(input.toString)
+    val spans = CrfDecoder.forModel(model.value).process(input.toString)
     new GenericArrayData(spans.map { s =>
       InternalRow(s.start, s.end, UTF8String.fromString(s.value),
         UTF8String.fromString(s.entity), s.confidence)
@@ -73,27 +74,39 @@ object CrfTagExpression {
   val spanArrayType: DataType = ArrayType(spanStructType, containsNull = false)
 }
 
-/** Session-level registration of graft SQL functions. The model comes from
-  * `spark.graft.model.path` (SQLConf) or the deterministic pipeline model. */
+/** Session-level registration of graft SQL functions, and the Column-API
+  * form of `crf_tag`. */
 object GraftFunctions {
   import org.apache.spark.sql.SparkSession
   import org.apache.spark.sql.catalyst.FunctionIdentifier
   import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
+  /** Register `crf_tag` on an existing session; the model is broadcast once
+    * here and every use of the function shares that broadcast. */
   def register(spark: SparkSession, model: CrfModel): Unit = {
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("crf_tag"),
+    val bc = spark.sparkContext.broadcast(model)
+    val (id, info, builder) = crfTagFunction(bc)
+    spark.sessionState.functionRegistry.registerFunction(id, info, builder)
+  }
+
+  /** The `crf_tag` function entry shared by [[register]] and
+    * [[GraftExtensions]]; `model` is evaluated each time a query resolves
+    * the function. */
+  private[plans] def crfTagFunction(model: => Broadcast[CrfModel])
+      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) =
+    (FunctionIdentifier("crf_tag"),
       new ExpressionInfo("graft.plans.CrfTagExpression", "crf_tag"),
       (children: Seq[Expression]) => {
         require(children.length == 1, "crf_tag(text) takes exactly one argument")
         CrfTagExpression(children.head, model)
       })
-  }
 
-  /** Column-API form: `df.select(crf_tag($"text"))`. */
+  /** Column-API form: `df.select(crf_tag($"text", model))`. Broadcasts the
+    * model from the driver on each call — build the column once per plan. */
   def crf_tag(c: org.apache.spark.sql.Column, model: CrfModel): org.apache.spark.sql.Column =
     org.apache.spark.sql.GraftColumnBridge.column(
-      CrfTagExpression(org.apache.spark.sql.GraftColumnBridge.expression(c), model))
+      CrfTagExpression(org.apache.spark.sql.GraftColumnBridge.expression(c),
+        org.apache.spark.SparkContext.getOrCreate().broadcast(model)))
 
   /** The native text kernels as SQL functions — ONE table consumed by both
     * the session-level [[registerKernels]] and the [[GraftExtensions]]
@@ -143,19 +156,11 @@ object GraftFunctions {
 }
 
 /** `SparkSessionExtensions` hook: loads the model from the path in
-  * `spark.graft.model.path` at first use (injected function). */
+  * `spark.graft.model.path` at first use (injected function) and broadcasts
+  * it from the driver each time a query resolves `crf_tag`. */
 class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
-  import org.apache.spark.sql.catalyst.FunctionIdentifier
-  import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
-
   override def apply(ext: org.apache.spark.sql.SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      FunctionIdentifier("crf_tag"),
-      new ExpressionInfo("graft.plans.CrfTagExpression", "crf_tag"),
-      (children: Seq[Expression]) => {
-        require(children.length == 1, "crf_tag(text) takes exactly one argument")
-        CrfTagExpression(children.head, GraftExtensions.modelFromConf())
-      }))
+    ext.injectFunction(GraftFunctions.crfTagFunction(GraftExtensions.modelFromConf()))
     // the native text kernels as plain SQL functions — `spark.sql("SELECT
     // word_shingles(text, 3) ...")` composes them without the Scala API;
     // same table as GraftFunctions.registerKernels (shared constant)
@@ -172,11 +177,12 @@ object GraftExtensions {
   // session's model forever — conf changes or other sessions would silently
   // tag with the wrong model
   private val cached = new java.util.concurrent.ConcurrentHashMap[String, CrfModel]()
-  private[plans] def modelFromConf(): CrfModel = {
+  private[plans] def modelFromConf(): Broadcast[CrfModel] = {
     val path = org.apache.spark.sql.internal.SQLConf.get
       .getConfString("spark.graft.model.path", "")
-    cached.computeIfAbsent(path, p =>
+    val model = cached.computeIfAbsent(path, p =>
       if (p.nonEmpty) graft.io.ModelIO.load(p)
       else graft.kg.KgPipeline.trainModel(42L))
+    org.apache.spark.SparkContext.getOrCreate().broadcast(model)
   }
 }

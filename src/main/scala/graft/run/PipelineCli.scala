@@ -6,8 +6,8 @@ import graft.kg._
 import graft.io.ModelIO
 
 /** End-to-end KG-construction job (north_rule): synthesize/ingest pages, run
-  * every stage with checkpoint/resume, report per-stage counters and mention
-  * P/R vs gold.
+  * every stage with checkpoint/resume (each stage manifest holds its rows per
+  * partition), report stage row counts and mention P/R vs gold.
   *
   * Usage: PipelineCli <outRoot> [--pages N] [--seed S] [--cpus N] [--input dir]
   */
@@ -73,16 +73,11 @@ object PipelineCli {
       if (fromHtml) HtmlText.pagesFromHtml(raw.as[Page]).toDF() else raw
     }
     val sents = Checkpoints.stage(spark, outRoot, "sentences", log) {
-      KgPipeline.sentences(pages.as[Page]).toDF()
-    }.as[SentenceRow]
-    val counters = KgPipeline.StageCounters(
-      spark.sparkContext.longAccumulator("kg.sentences"),
-      spark.sparkContext.longAccumulator("kg.mentions"))
+      KgPipeline.sentences(pages.as[Page])
+    }
     val mentions = Checkpoints.stage(spark, outRoot, "mentions", log) {
-      KgPipeline.mentions(sents, model, counters = Some(counters)).toDF()
-    }.as[MentionRow]
-    if (counters.sentences.value > 0)
-      log(s"[metrics] counters: sentences_decoded=${counters.sentences.value} mentions_emitted=${counters.mentions.value}")
+      KgPipeline.mentions(sents, model)
+    }
     val links = Checkpoints.stage(spark, outRoot, "links", log) {
       KgPipeline.links(mentions, KgPipeline.aliasDf(spark))
     }
@@ -112,7 +107,7 @@ object PipelineCli {
     val nPred = mentions.count()
     val (p, r) = if (inputDir.isDefined) (-1.0, -1.0) else {
       val gold = PagesGen.gold(spark, nPages, seed).toDF()
-      val hit = mentions.toDF().join(gold, Seq("url", "sent_id", "start", "end", "entity"), "inner").count()
+      val hit = mentions.join(gold, Seq("url", "sent_id", "start", "end", "entity"), "inner").count()
       val nGold = gold.count()
       (if (nPred == 0) 0.0 else hit.toDouble / nPred,
         if (nGold == 0) 0.0 else hit.toDouble / nGold)

@@ -4,7 +4,8 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import graft.crf.CrfModel
-import graft.kg.{KgPipeline, MentionRow, Page, SentenceRow}
+import graft.kg.{KgPipeline, Page}
+import graft.plans.GraftFunctions.crf_tag
 
 /** Structured Streaming surface for the KG pipeline: incremental mention
   * extraction over a stream of pages (`readStream` → transforms →
@@ -12,44 +13,22 @@ import graft.kg.{KgPipeline, MentionRow, Page, SentenceRow}
   * per-entity running state via `mapGroupsWithState`.
   *
   * The reference is batch-only (its `serve.py` is request/response), so this
-  * is an engine-side addition: the same broadcast-model `mapPartitions`
-  * decode runs unchanged inside micro-batches — batch/streaming parity by
-  * construction (the Dataset transform is shared with `KgPipeline`).
+  * is an engine-side addition: the batch pipeline's sentence split and
+  * `crf_tag` decode run unchanged inside micro-batches — batch/streaming
+  * parity by construction.
   */
 object StreamingMentions {
-
-  /** pages stream → mentions stream (same decode path as batch). */
-  def mentionStream(pages: Dataset[Page], model: CrfModel): Dataset[MentionRow] = {
-    val spark = pages.sparkSession
-    import spark.implicits._
-    // streaming Datasets forbid repartition-by-expression pre-shuffle; the
-    // micro-batch source partitioning stands in for it (partitions = -1)
-    val sents = KgPipeline.sentences(pages)
-    KgPipeline.mentions(sents, model, partitions = -1)
-  }
 
   /** Watermarked tumbling-window mention counts per entity kind:
     * (window, entity) → count, 10-minute windows, 30-minute watermark. */
   def windowedEntityCounts(pages: Dataset[Page], model: CrfModel): DataFrame = {
-    val spark = pages.sparkSession
-    import spark.implicits._
     val withTs = pages.withWatermark("warc_ts", "30 minutes")
-    // model crosses as a BROADCAST (not a closure capture): each micro-batch
-    // deserializes a fresh task closure, so a captured model would be a new
-    // object per batch and forModel's identity-keyed decoder cache would
-    // rebuild every batch — the broadcast value is per-executor-stable, so
-    // the warmed decoder really is reused across rows AND micro-batches
-    // (same discipline as StreamingTriples.rawTripleStream)
-    val bcModel = spark.sparkContext.broadcast(model)
-    val mentions = withTs.as[Page].mapPartitions { iter =>
-      val decoder = graft.crf.CrfDecoder.forModel(bcModel.value)
-      iter.flatMap { p =>
-        if (p.lang != "en") Iterator.empty
-        else p.text.split('\n').iterator.flatMap(s => decoder.process(s))
-          .map(sp => (p.warc_ts, sp.entity))
-      }
-    }.toDF("warc_ts", "entity")
-    mentions
+    // the query plan is built once, so every micro-batch decodes through the
+    // same model broadcast: forModel's identity-keyed decoder stays warm
+    // across rows AND micro-batches (same discipline as
+    // StreamingTriples.rawTripleStream)
+    KgPipeline.sentenceRows(withTs.toDF(), col("warc_ts"))
+      .select(col("warc_ts"), inline(crf_tag(col("text"), model)))
       .groupBy(window(col("warc_ts"), "10 minutes"), col("entity"))
       .agg(count(lit(1)).as("n_mentions"))
   }

@@ -122,4 +122,30 @@ class KgPipelineSpec extends AnyFunSuite {
         .sortBy(t => (t._1, t._2))
     assert(run(1).toSeq === run(7).toSeq)
   }
+
+  test("checkpoints on a file:/// URI root: write, resume, invalidate, recompute") {
+    // a space in the directory name: input_file_name() URI-encodes it
+    val dir = java.nio.file.Files.createTempDirectory("kg uri")
+    val root = s"file://$dir"
+    var computes = 0
+    def run(): (Long, Long) = {
+      val pages = Checkpoints.stage(spark, root, "pages", _ => ()) {
+        computes += 1; PagesGen.pages(spark, 20, 42L).toDF()
+      }
+      val sents = Checkpoints.stage(spark, root, "sentences", _ => ()) {
+        computes += 1; KgPipeline.sentences(pages.as(org.apache.spark.sql.Encoders.product[Page]))
+      }
+      (pages.count(), sents.count())
+    }
+    val first = run()
+    assert(computes === 2 && first._2 > first._1)
+    assert(Checkpoints.isComplete(root, "pages") && Checkpoints.isComplete(root, "sentences"))
+    val m = java.nio.file.Files.readString(Checkpoints.manifestPath(dir.toString, "sentences"))
+    assert(m.contains(s"\"rows\":${first._2}") && m.contains("part-"), m)
+    assert(run() === first && computes === 2, "resume must skip both computes")
+    Checkpoints.invalidate(root, "sentences")
+    assert(!Checkpoints.isComplete(root, "sentences"))
+    assert(!java.nio.file.Files.exists(dir.resolve("sentences")))
+    assert(run() === first && computes === 3, "only the invalidated stage recomputes")
+  }
 }

@@ -3,10 +3,11 @@ package graft.plans
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.SparkTestBase
-import graft.kg.{KgPipeline, Synth}
+import graft.kg.{KgPipeline, PagesGen, Synth}
 
-/** The `crf_tag` Catalyst expression must decode spans identically to the
-  * typed mapPartitions path, from both the Column API and SQL. */
+/** The `crf_tag` Catalyst expression must decode spans identically to
+  * `CrfDecoder`, from both the Column API and SQL, and ship the model to
+  * executors as a broadcast. */
 class CrfTagExpressionSpec extends AnyFunSuite {
   lazy val spark = SparkTestBase.spark
   lazy val model = KgPipeline.trainModel(42L, nTrain = 200)
@@ -85,6 +86,34 @@ class CrfTagExpressionSpec extends AnyFunSuite {
     } finally prev match {
       case Some(v) => spark.conf.set(key, v)
       case None => spark.conf.unset(key)
+    }
+  }
+
+  test("crf_tag carries a broadcast handle, and mentions decode once per sentence") {
+    def javaBytes(o: AnyRef): Int = {
+      val bytes = new java.io.ByteArrayOutputStream()
+      val out = new java.io.ObjectOutputStream(bytes)
+      out.writeObject(o)
+      out.close()
+      bytes.size()
+    }
+    val expr = CrfTagExpression(
+      org.apache.spark.sql.catalyst.expressions.Literal("Alice works at Hooli ."),
+      spark.sparkContext.broadcast(model))
+    val (exprBytes, modelBytes) = (javaBytes(expr), javaBytes(model))
+    assert(exprBytes * 20 < modelBytes,
+      s"serialized crf_tag is $exprBytes bytes vs the model's $modelBytes")
+
+    val sents = KgPipeline.sentences(PagesGen.pages(spark, 20, 42L))
+    for (partitions <- Seq(0, -1)) {
+      val plan = KgPipeline.mentions(sents, model, partitions).queryExecution.executedPlan match {
+        case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => a.executedPlan
+        case p => p
+      }
+      val decodes = plan.collect { case node =>
+        node.expressions.map(_.collect { case c: CrfTagExpression => c }.size).sum
+      }.sum
+      assert(decodes === 1, s"partitions = $partitions:\n$plan")
     }
   }
 }
