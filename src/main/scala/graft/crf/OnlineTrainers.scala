@@ -1,10 +1,12 @@
 package graft.crf
 
 /** The reference's non-lbfgs crfsuite training algorithms
-  * (ref compat.py:15-23: `l2sgd`, `ap`, `pa`, `arow`), re-implemented on the
-  * same FeatureIndex / EncSent / Viterbi infrastructure as the L-BFGS
-  * trainer. These are online structured learners — per sentence, decode with
-  * the current weights and update toward the gold path:
+  * (ref compat.py:15-23: `l2sgd`, `ap`, `pa`, `arow`): the update rules
+  * only. [[Trainer.train]] builds the index, encodes the sentences and
+  * assembles the model; potentials, the transition block and the NLL
+  * gradient are the training core's too. These are online structured
+  * learners — per sentence, decode with the current weights and update
+  * toward the gold path:
   *
   *  - l2sgd: stochastic gradient descent on the CRF NLL with L2 (Pegasos
   *    learning-rate schedule η_t = 1/(λ(t0+t)), λ = 2·c2/N)
@@ -22,39 +24,7 @@ package graft.crf
   * seed-fixed shuffled order — deterministic across runs and machines. */
 object OnlineTrainers {
 
-  import Trainer.{EncSent, FeatureIndex}
-
-  def supports(algorithm: String): Boolean =
-    Set("l2sgd", "ap", "pa", "arow").contains(algorithm)
-
-  /** Node potentials ψ[t][y] for one encoded sentence under weights w. */
-  private def potentials(idx: FeatureIndex, w: Array[Double], s: EncSent): Array[Array[Double]] = {
-    val L = idx.labels.length
-    val T = s.gold.length
-    val psi = Array.ofDim[Double](T, L)
-    var t = 0
-    while (t < T) {
-      val ids = s.attrIds(t); val ws = s.attrW(t)
-      var k = 0
-      while (k < ids.length) {
-        val params = idx.attrParam(ids(k))
-        var y = 0
-        while (y < L) {
-          val p = params(y)
-          if (p >= 0) psi(t)(y) += w(p) * ws(k)
-          y += 1
-        }
-        k += 1
-      }
-      t += 1
-    }
-    psi
-  }
-
-  private def transOf(idx: FeatureIndex, w: Array[Double]): Array[Array[Double]] = {
-    val L = idx.labels.length
-    Array.tabulate(L, L)((i, j) => w(idx.numStateParams + i * L + j))
-  }
+  import Trainer.{EncSent, FeatureIndex, potentials, sentenceNllGrad, transOf}
 
   /** Sparse Δf = f(gold) − f(pred) as (paramIdx → value). Only state params
     * with an allocated slot contribute (observed-features model, like the
@@ -100,83 +70,22 @@ object OnlineTrainers {
     order
   }
 
-  def train(sents: Seq[(IndexedSeq[Array[FeatAtom]], IndexedSeq[String])],
-            config: CrfConfig): CrfModel = {
-    require(supports(config.algorithm), s"unsupported algorithm: ${config.algorithm}")
-    val idx = Trainer.buildIndex(sents, config.minFreq, config.allPossibleStates)
-    val enc = Trainer.encode(idx, sents).filter(_.gold.nonEmpty).toArray
-    // crfsuite's own defaults for these algorithms are ~100 epochs/iterations
-    // (max_iterations); the CrfConfig default 1000 is the lbfgs budget — cap
-    // the online passes at 100 unless the user set something smaller.
-    val epochs = math.min(config.maxIter, 100)
-    val w = config.algorithm match {
-      case "l2sgd" => l2sgd(idx, enc, config, epochs)
-      case "ap"    => averagedPerceptron(idx, enc, epochs)
-      case "pa"    => passiveAggressive(idx, enc, epochs, c = 1.0)
-      case "arow"  => arow(idx, enc, epochs, r = 1.0)
-    }
-    toModel(idx, w, config)
-  }
-
-  /** Stochastic gradient descent on the per-sentence CRF NLL + L2. */
-  private def l2sgd(idx: FeatureIndex, enc: Array[EncSent], config: CrfConfig,
-                    epochs: Int): Array[Double] = {
+  /** Stochastic gradient descent on the per-sentence CRF NLL + L2: each
+    * step adds −η × the sentence gradient straight into `w`. */
+  private[crf] def l2sgd(idx: FeatureIndex, enc: Array[EncSent], config: CrfConfig,
+                         epochs: Int): Array[Double] = {
     val n = idx.numParams
-    val L = idx.labels.length
-    val nS = idx.numStateParams
     val w = new Array[Double](n)
     val lambda = 2.0 * math.max(config.c2, 1e-6) / enc.length
     val t0 = 1.0 / lambda // Pegasos-style offset: η_1 well below 1/λ
     var t = 0L
     for (epoch <- 0 until epochs; si <- epochOrder(enc.length, epoch)) {
-      val s = enc(si)
       // clamp: eta*lambda must stay < 1 or the L2 shrink factor goes
       // non-positive (weights zeroed/sign-flipped when lambda = 2*c2/N >= 1,
       // e.g. tiny corpora with large c2); crfsuite solves this with eta0
       // calibration, a cap is the simple equivalent
       val eta = math.min(1.0 / (lambda * (t0 + t)), 0.9 / lambda)
-      val psi = potentials(idx, w, s)
-      val trans = transOf(idx, w)
-      val (marg, logZ, alpha, beta) = Inference.forwardBackward(psi, trans)
-      // state updates: −η(E[f] − f(gold)) per occurring attr
-      val T = s.gold.length
-      var tt = 0
-      while (tt < T) {
-        val ids = s.attrIds(tt); val ws = s.attrW(tt)
-        var k = 0
-        while (k < ids.length) {
-          val params = idx.attrParam(ids(k))
-          var y = 0
-          while (y < L) {
-            val p = params(y)
-            if (p >= 0) {
-              var g = marg(tt)(y) * ws(k)
-              if (y == s.gold(tt)) g -= ws(k)
-              w(p) -= eta * g
-            }
-            y += 1
-          }
-          k += 1
-        }
-        tt += 1
-      }
-      // transition updates via pairwise marginals
-      tt = 0
-      while (tt < T - 1) {
-        var y = 0
-        while (y < L) {
-          var y2 = 0
-          while (y2 < L) {
-            val xi = math.exp(alpha(tt)(y) + trans(y)(y2) + psi(tt + 1)(y2) + beta(tt + 1)(y2) - logZ)
-            var g = xi
-            if (y == s.gold(tt) && y2 == s.gold(tt + 1)) g -= 1.0
-            w(nS + y * L + y2) -= eta * g
-            y2 += 1
-          }
-          y += 1
-        }
-        tt += 1
-      }
+      sentenceNllGrad(idx, w, enc(si), w, -eta)
       // L2 shrink (scaled to the per-sentence share)
       val shrink = 1.0 - eta * lambda
       var i = 0
@@ -187,8 +96,8 @@ object OnlineTrainers {
   }
 
   /** Averaged structured perceptron. */
-  private def averagedPerceptron(idx: FeatureIndex, enc: Array[EncSent],
-                                 epochs: Int): Array[Double] = {
+  private[crf] def averagedPerceptron(idx: FeatureIndex, enc: Array[EncSent],
+                                      epochs: Int): Array[Double] = {
     val n = idx.numParams
     val w = new Array[Double](n)
     val u = new Array[Double](n) // c-weighted update sums (Daumé averaging trick)
@@ -209,8 +118,8 @@ object OnlineTrainers {
   }
 
   /** Passive-aggressive PA-I with √Hamming-augmented hinge. */
-  private def passiveAggressive(idx: FeatureIndex, enc: Array[EncSent],
-                                epochs: Int, c: Double): Array[Double] = {
+  private[crf] def passiveAggressive(idx: FeatureIndex, enc: Array[EncSent],
+                                     epochs: Int, c: Double): Array[Double] = {
     val n = idx.numParams
     val w = new Array[Double](n)
     for (epoch <- 0 until epochs; si <- epochOrder(enc.length, epoch)) {
@@ -238,8 +147,8 @@ object OnlineTrainers {
   }
 
   /** AROW with diagonal confidence. */
-  private def arow(idx: FeatureIndex, enc: Array[EncSent], epochs: Int,
-                   r: Double): Array[Double] = {
+  private[crf] def arow(idx: FeatureIndex, enc: Array[EncSent], epochs: Int,
+                        r: Double): Array[Double] = {
     val n = idx.numParams
     val w = new Array[Double](n)
     val sigma = Array.fill(n)(1.0)
@@ -268,17 +177,5 @@ object OnlineTrainers {
       }
     }
     w
-  }
-
-  private def toModel(idx: FeatureIndex, w: Array[Double], config: CrfConfig): CrfModel = {
-    val L = idx.labels.length
-    val stateW = idx.attrs.indices.iterator.map { a =>
-      val arr = new Array[Double](L)
-      var y = 0
-      while (y < L) { val p = idx.attrParam(a)(y); if (p >= 0) arr(y) = w(p); y += 1 }
-      idx.attrs(a) -> arr
-    }.toMap
-    val transW = Array.tabulate(L, L)((i, j) => w(idx.numStateParams + i * L + j))
-    CrfModel(idx.labels, stateW, transW, config)
   }
 }

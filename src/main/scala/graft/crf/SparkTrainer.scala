@@ -1,13 +1,15 @@
 package graft.crf
 
-import org.apache.spark.sql.{Dataset, SparkSession}
-import breeze.linalg.DenseVector
-import breeze.optimize.{DiffFunction, LBFGS, OWLQN}
+import org.apache.spark.sql.Dataset
 
 /** Distributed CRF training: feature extraction as a Dataset map, L-BFGS /
-  * OWL-QN on the driver with the loss/gradient computed by `treeAggregate`
-  * over executor-resident encoded sentences — the MLlib pattern
-  * (weights broadcast per iteration, gradients combined up a tree).
+  * OWL-QN on the driver with the loss/gradient computed per partition over
+  * executor-resident encoded sentences — the MLlib pattern (weights
+  * broadcast per iteration), except that the per-partition partials are
+  * collected and summed on the driver in partition-id order.
+  *
+  * The slot layout, encoder, NLL gradient, objective and model assembly are
+  * [[Trainer]]'s; this path only supplies the dictionaries and the gradient.
   *
   * The reference trains single-process (libcrfsuite). Curated corpora fit on
   * the driver (use `Trainer.train`); this path exists for corpus-scale
@@ -49,7 +51,6 @@ object SparkTrainer {
     //    the |value| sum, matching Trainer.buildIndex — a signed sum would
     //    silently cut zero-centered dense slots whose weights cancel.
     val labelSeq = featurized.flatMap(_._3).distinct().collect().sorted.toIndexedSeq
-    val lIdx = labelSeq.zipWithIndex.toMap
     val minFreq = config.minFreq
     val observedPairs = featurized.rdd.flatMap { case (attrs, ws, tags) =>
       attrs.iterator.zip(ws.iterator).zip(tags.iterator).flatMap { case ((as, vs), t) =>
@@ -57,31 +58,13 @@ object SparkTrainer {
       }
     }.reduceByKey(_ + _).filter(_._2 > minFreq).keys.collect()
     val attrSeq = observedPairs.map(_._1).distinct.sorted.toIndexedSeq
-    val aIdx = attrSeq.zipWithIndex.toMap
-    val L = labelSeq.length
-    var pCount = 0
-    val attrParam =
-      if (config.allPossibleStates) {
-        // crfsuite all_possible_states=True: full A×L grid (negative state
-        // features), same semantics as the local trainer's index build
-        Array.fill(attrSeq.length)(Array.tabulate(L) { _ => val i = pCount; pCount += 1; i })
-      } else {
-        val observed = Array.fill(attrSeq.length)(new Array[Boolean](L))
-        observedPairs.foreach { case (a, t) => observed(aIdx(a))(lIdx(t)) = true }
-        observed.map(_.map { o => if (o) { val i = pCount; pCount += 1; i } else -1 })
-      }
-    val idx = new Trainer.FeatureIndex(labelSeq, attrSeq, attrParam, pCount)
-    val n = idx.numParams
+    val observed = observedPairs.toSet
+    val idx = Trainer.FeatureIndex(labelSeq, attrSeq, config)((a, y) => observed((attrSeq(a), labelSeq(y))))
 
     // 3. encode sentences against the dictionaries, keep distributed
     val bcIdx = spark.sparkContext.broadcast(idx)
     val encoded: Dataset[Trainer.EncSent] = featurized.map { case (attrs, ws, tags) =>
-      val ix = bcIdx.value
-      val ids = attrs.map(_.flatMap(ix.attrIdx.get))
-      val weights = attrs.zip(ws).map { case (as, vs) =>
-        as.iterator.zip(vs.iterator).collect { case (a, v) if ix.attrIdx.contains(a) => v }.toArray
-      }
-      Trainer.EncSent(ids, weights, tags.map(ix.labelIdx))
+      Trainer.encodeSent(bcIdx.value, attrs, ws, tags)
     }
     encoded.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     encoded.count() // materialize before the iteration loop
@@ -97,51 +80,15 @@ object SparkTrainer {
     //    fixed input partitioning; the partitioning itself comes from the
     //    caller's Dataset, not from the executor count.)
     val encRdd = encoded.rdd
-    val f = new DiffFunction[DenseVector[Double]] {
-      def calculate(wv: DenseVector[Double]): (Double, DenseVector[Double]) = {
-        val bcW = spark.sparkContext.broadcast(wv.data)
-        // locals only — the closures must not capture this DiffFunction
-        // (it holds the non-serializable SparkSession)
-        val localIdx = bcIdx
-        val localW = bcW
-        val nn = n
-        val partials = encRdd.mapPartitionsWithIndex { (pid, it) =>
-          val g = new Array[Double](nn)
-          var l = 0.0
-          it.foreach(s => l += Trainer.sentenceNllGradPublic(localIdx.value, localW.value, s, g))
-          Iterator.single((pid, l, g))
-        }.collect().sortBy(_._1)
-        var loss = 0.0
-        val grad = new Array[Double](n)
-        partials.foreach { case (_, l, g) =>
-          loss += l
-          var i = 0
-          while (i < n) { grad(i) += g(i); i += 1 }
-        }
-        bcW.destroy()
-        var totLoss = loss
-        if (config.c2 > 0) {
-          val w = wv.data
-          var i = 0
-          while (i < n) { totLoss += config.c2 * w(i) * w(i); grad(i) += 2 * config.c2 * w(i); i += 1 }
-        }
-        (totLoss, DenseVector(grad))
-      }
+    val w = Trainer.minimize(idx.numParams, config) { w =>
+      val bcW = spark.sparkContext.broadcast(w)
+      val partials = encRdd.mapPartitionsWithIndex { (pid, it) =>
+        Iterator.single((pid, Trainer.nllGrad(bcIdx.value, bcW.value, it)))
+      }.collect().sortBy(_._1).map(_._2)
+      bcW.destroy()
+      partials
     }
-    val init = DenseVector.zeros[Double](n)
-    val wOpt =
-      if (config.c1 > 0) new OWLQN[Int, DenseVector[Double]](config.maxIter, 6, config.c1, 1e-8).minimize(f, init)
-      else new LBFGS[DenseVector[Double]](config.maxIter, 6, 1e-8).minimize(f, init)
     encoded.unpersist()
-
-    val w = wOpt.data
-    val stateW = attrSeq.indices.iterator.map { a =>
-      val arr = new Array[Double](L)
-      var y = 0
-      while (y < L) { val p = attrParam(a)(y); if (p >= 0) arr(y) = w(p); y += 1 }
-      attrSeq(a) -> arr
-    }.toMap
-    val transW = Array.tabulate(L, L)((i, j) => w(idx.numStateParams + i * L + j))
-    CrfModel(labelSeq, stateW, transW, config)
+    Trainer.toModel(idx, w, config)
   }
 }
