@@ -46,12 +46,12 @@ object KCore {
       .union(und.select(col("v").as("src"), col("u").as("dst")))
       .localCheckpoint()
     // small-graph early-out: driver-local peel with the identical round
-    // budget (bit-exact, LocalIterParitySpec); bound doubled — `ed` carries
-    // both directions of every undirected edge
-    val eCnt = ed.count()
-    if (eCnt > 0 && eCnt <= 2 * LocalIter.maxEdges(ed.sparkSession))
+    // budget (bit-exact, LocalIterParitySpec); `ed` carries both directions
+    // of every undirected edge
+    val small = LocalIter.collectSmall(ed, rowsPerEdge = 2)
+    if (small.isDefined)
       return LocalIter.kcore(ed.sparkSession, ed.schema.fields(0).dataType,
-        ed.collect().map(r => (r.get(0), r.get(1))), k, maxRounds)
+        small.get.map(r => (r.get(0), r.get(1))), k, maxRounds)
     var converged = false
     var round = 0
     while (!converged && round < maxRounds) {

@@ -106,8 +106,8 @@ object KgPipeline {
     import spark.implicits._
 
     // distinct surfaces, salted pre-aggregation (hot surfaces on hot domains).
-    // surfaces is referenced THREE times below (block pairs, allNodes, the
-    // final cc join) — without persist each reference re-inlines the whole
+    // surfaces is referenced twice below (block pairs, the final label
+    // join) — without persist each reference re-inlines the whole
     // upstream pipeline INCLUDING the CRF decode when mentions isn't a
     // checkpointed parquet (the q53 driver path paid the decode ~5×; same
     // unpersisted-multi-reference class as the round-2 MinHash fix). The
@@ -134,44 +134,17 @@ object KgPipeline {
       .filter(jaccard3($"a.surface", $"b.surface") >= 0.5)
       .select($"a.node".as("node_a"), $"b.node".as("node_b"))
 
-    // surface → linked entity id edges; referenced three times (both allNodes
-    // unions + the edge set) and distinct-collapsed already — small, persist
+    // surface → linked entity id edges (the CC core deduplicates)
     val linkEdges = links
       .select(concat($"entity", lit(":"), lower($"value")).as("node_a"),
         concat(lit("ID:"), $"entity_id").as("node_b"))
-      .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
-    val edges = simPairs.union(linkEdges).localCheckpoint()
-
-    // small-graph fast path, one step beyond ConnectedComponents' own: the
-    // output only needs labels for SURFACE nodes (ID: nodes exist solely to
-    // glue components through the dictionary), so the collected union-find
-    // labels broadcast-join straight onto the persisted surfaces frame —
-    // surfaces in no edge self-label — skipping the generic sym/node/label
-    // materializations. Identical labeling: the component minimum is taken
-    // over ALL edge nodes (incl. ID:), exactly like the distributed CC.
-    val eCnt = edges.count()
-    if (eCnt > 0 && eCnt <= 2 * LocalIter.maxEdges(spark)) {
-      import org.apache.spark.sql.types.{StringType, StructField, StructType}
-      val lbl = LocalIter.ccLabels(edges.collect().map(r => (r.get(0), r.get(1))),
-        LocalIter.orderingFor(StringType).get)
-      val lblDf = LocalIter.localDf(spark,
-        StructType(Seq(StructField("node", StringType), StructField("comp", StringType))),
-        lbl.toSeq.map { case (n, c) => org.apache.spark.sql.Row(n, c) })
-      return surfaces.join(broadcast(lblDf), Seq("node"), "left")
-        .select($"entity", $"surface", $"n_mentions",
-          concat(lit("C:"), coalesce($"comp", $"node")).as("canon_id"))
-    }
-
-    val allNodes = surfaces.select($"node").union(linkEdges.select($"node_a"))
-      .union(linkEdges.select($"node_b")).distinct()
-
-    val cc = ConnectedComponents.run(allNodes, edges)
-    // canon_id = representative node per component
-    cc.join(surfaces, cc("node") === surfaces("node"))
-      .select(surfaces("entity"), surfaces("surface"), surfaces("n_mentions"),
-        cc("canon_id"))
+    // the component minimum is taken over ALL edge nodes (incl. ID: nodes,
+    // which exist solely to glue components through the dictionary);
+    // surfaces in no edge self-label
+    surfaces.join(ConnectedComponents.labels(simPairs.union(linkEdges)), Seq("node"), "left")
+      .select($"entity", $"surface", $"n_mentions",
+        concat(lit("C:"), coalesce($"comp", $"node")).as("canon_id"))
   }
 
   /** char-3-gram Jaccard as a Column expression (codegen-friendly: pure

@@ -5,7 +5,8 @@ import org.apache.spark.sql.types._
 
 /** Bounded driver-local execution of the iterative graph fixpoints for
   * SMALL graphs: the rank family (its loops live in [[RankPropagation]] and
-  * [[Hits]]), BFS, k-core and connected components — the
+  * [[Hits]]), BFS, k-core and connected components (its union-find lives in
+  * [[ConnectedComponents]]), plus the k-means and perceptron fits — the
   * `Bpe.learnMerges` discipline applied to the whole iterative family.
   *
   * Why: each distributed round of these algorithms costs a fixed scheduler
@@ -14,16 +15,21 @@ import org.apache.spark.sql.types._
   * graphs the operators ALSO legitimately meet (post-aggregation host
   * graphs, dup-pair components, alias clusters — pair mining and rollups
   * shrink the data by orders of magnitude before the fixpoint runs), ten
-  * rounds of scheduler floor dominate the query. So: once the edge set is
-  * materialized and counted, if it is under `spark.graft.localIterMaxEdges`
-  * (default 200k edges — a few MB on the driver; set 0 to disable) the
-  * fixpoint runs as a driver-local loop over the collected edges with the
-  * IDENTICAL exact integer arithmetic, and the distributed path is
-  * untouched above the bound.
+  * rounds of scheduler floor dominate the query. So: once the input is
+  * materialized, ONE gate, [[collectSmall]], decides for every operator. It
+  * counts the collected rows — for k-core and connected components, whose
+  * frames hold both directions, the undirected edges — against
+  * `spark.graft.localIterMaxEdges` (default 200k — a few MB on the driver).
+  * At or under the bound the fixpoint runs as a driver-local loop over the
+  * collected rows with the IDENTICAL exact integer arithmetic; above it the
+  * distributed path runs untouched. Empty inputs always stay distributed,
+  * so bound 0 forces the distributed path in every operator, the
+  * perceptron included.
   *
-  * Bit-exactness contract (parity-gated in LocalIterParitySpec): every
-  * algorithm here uses only exact Long arithmetic (sums are associative and
-  * commutative — accumulation order cannot matter; all division operands
+  * Bit-exactness contract (parity-gated in LocalIterParitySpec and
+  * LocalFitParitySpec): every algorithm here uses only exact Long
+  * arithmetic (sums are associative and commutative — accumulation order
+  * cannot matter; all division operands
   * are positive, so JVM `/` is the SQL `div` floor) and, where an ordering
   * is needed (component minima), compares strings in UTF-8 BYTE order —
   * Spark's UTF8String binary ordering, which differs from Java's UTF-16
@@ -34,15 +40,17 @@ object LocalIter {
     * (2-3 fields); 200k edges ≈ single-digit MB — far under the driver
     * heap, and the same order as the other bounded driver collects in this
     * repo (Bpe pair stats, IVF centroid fits). */
-  def maxEdges(spark: SparkSession): Long =
+  private def maxEdges(spark: SparkSession): Long =
     spark.conf.get("spark.graft.localIterMaxEdges", "200000").toLong
 
-  /** The rows of the materialized edge set `e` when it is small enough for
-    * the driver-local path. Empty graphs stay distributed, so bound 0 forces
-    * the distributed path for every input. */
-  def collectSmall(e: DataFrame): Option[Array[Row]] = {
+  /** The one local-vs-distributed gate: the rows of the materialized frame
+    * `e` when it holds at most `rowsPerEdge` × the bound rows (2 for edge
+    * frames that carry both directions of every undirected edge), else
+    * None. Empty frames stay distributed, so bound 0 forces the distributed
+    * path for every input. */
+  def collectSmall(e: DataFrame, rowsPerEdge: Int = 1): Option[Array[Row]] = {
     val n = e.count() // a cheap scan of the materialized edges
-    if (n > 0 && n <= maxEdges(e.sparkSession)) Some(e.collect()) else None
+    if (n > 0 && n <= rowsPerEdge * maxEdges(e.sparkSession)) Some(e.collect()) else None
   }
 
   /** Spark-semantics ordering for the node types these graphs carry:
@@ -154,39 +162,5 @@ object LocalIter {
     val out = scala.collection.mutable.ArrayBuffer.empty[Row]
     coreDeg.forEach((nd, d) => out += Row(nd, d))
     localDf(spark, schema, out.toSeq)
-  }
-
-  // ------------------------------------------------- connected components
-  /** Union-find over the collected symmetric edge set; every edge-endpoint
-    * node maps to its component minimum (the distributed min-label
-    * fixpoint's result). Nodes that appear in no edge are NOT returned —
-    * they label themselves, which the caller applies as a coalesce. */
-  def ccLabels(edges: Array[(Any, Any)],
-               ord: Ordering[Any]): scala.collection.mutable.HashMap[Any, Any] = {
-    val parent = new java.util.HashMap[Any, Any]()
-    def find(x: Any): Any = {
-      var root = x
-      while (parent.get(root) != root) root = parent.get(root)
-      var cur = x // path compression
-      while (parent.get(cur) != root) {
-        val nxt = parent.get(cur); parent.put(cur, root); cur = nxt
-      }
-      root
-    }
-    edges.foreach { case (a, b) =>
-      if (!parent.containsKey(a)) parent.put(a, a)
-      if (!parent.containsKey(b)) parent.put(b, b)
-      val ra = find(a); val rb = find(b)
-      if (ra != rb) parent.put(ra, rb)
-    }
-    val minOf = new java.util.HashMap[Any, Any]()
-    parent.keySet().forEach { nd =>
-      val root = find(nd)
-      val cur = minOf.get(root)
-      if (cur == null || ord.lt(nd, cur)) minOf.put(root, nd)
-    }
-    val labels = scala.collection.mutable.HashMap.empty[Any, Any]
-    parent.keySet().forEach(nd => labels.put(nd, minOf.get(find(nd))))
-    labels
   }
 }

@@ -77,6 +77,18 @@ object Dedup {
     * not candidates). */
   def jaccardPairs(docs: DataFrame, threshold: Double = 0.8, n: Int = 3,
                    maxDf: Int = 50, textCol: String = "text"): DataFrame = {
+    postingPairs(docs, n, maxDf, textCol)
+      .withColumn("jaccard", col("inter").cast("double") /
+        (col("na") + col("nb") - col("inter")).cast("double"))
+      .filter(col("jaccard") >= threshold)
+      .select(col("a").as("doc_a"), col("b").as("doc_b"), round(col("jaccard"), 4).as("jaccard"))
+  }
+
+  /** The posting-pair core of [[jaccardPairs]] and [[containmentPairs]]:
+    * (a, b, inter, na, nb) for every doc pair a < b sharing a shingle hash
+    * whose posting list holds 2..`maxDf` docs — `inter` the number of such
+    * shared shingles, `na`/`nb` each doc's distinct-shingle count. */
+  private def postingPairs(docs: DataFrame, n: Int, maxDf: Int, textCol: String): DataFrame = {
     // group-by-shingle → emit pairs: ONE pass over the posting list (a
     // self-join would scan/explode the corpus twice — no exchange reuse
     // across a broadcast boundary), no window sort, per-shingle pair count
@@ -86,7 +98,7 @@ object Dedup {
     //
     // The pair stream is the plan's dominant term (Σ C(df,2) rows — 5.3M at
     // sf0.1 for 6k final pairs), so pair rows carry ONLY (a, b): the
-    // per-doc set sizes needed for the jaccard denominator broadcast-join
+    // per-doc set sizes needed for the ratio denominators broadcast-join
     // back AFTER the pair aggregation (docs-sized slim table vs +2 longs on
     // every pair row — guide §2.3, shuffle keys not payloads).
     //
@@ -100,6 +112,7 @@ object Dedup {
     // magnitude (boilerplate-heavy shingle dfs near the cap) — revisit
     // with measurements if maxDf-sized postings ever dominate; see
     // OPTIMIZATION_r06.md ("tried and reverted").
+    //
     // Inputs.spread: the shingle kernel is the heavy scan-side pass — on
     // unsplittable (single-row-group) input it would run on ONE task
     val withSh = Inputs.spread(docs)
@@ -116,10 +129,6 @@ object Dedup {
       .agg(count(lit(1)).as("inter"))
       .join(broadcast(sizes.select(col("doc_id").as("a"), col("n_sh").as("na"))), Seq("a"))
       .join(broadcast(sizes.select(col("doc_id").as("b"), col("n_sh").as("nb"))), Seq("b"))
-      .withColumn("jaccard", col("inter").cast("double") /
-        (col("na") + col("nb") - col("inter")).cast("double"))
-      .filter(col("jaccard") >= threshold)
-      .select(col("a").as("doc_a"), col("b").as("doc_b"), round(col("jaccard"), 4).as("jaccard"))
   }
 
   /** All ordered pairs (a < b by array position) of each row's sorted
@@ -143,26 +152,12 @@ object Dedup {
     * misses: a short document quoted verbatim inside a long one shares ALL
     * its shingles (containment = inter/min(na,nb) = 1.0) yet scores jaccard
     * ≈ na/nb ≈ 0. This is the quote/excerpt/boilerplate-inclusion detector
-    * of the dedup family. Identical group-then-pair posting plan as
+    * of the dedup family. The same [[postingPairs]] plan as
     * [[jaccardPairs]] (hashed postings, maxDf stop-shingle cap, one pass) —
     * only the final ratio differs, so the 100 TB story is the same. */
   def containmentPairs(docs: DataFrame, threshold: Double = 0.9, n: Int = 3,
                        maxDf: Int = 50, textCol: String = "text"): DataFrame = {
-    // identical slim-pair shape as [[jaccardPairs]] — bare (a, b) pair rows,
-    // sizes broadcast-joined after the aggregation, one persisted kernel pass
-    val withSh = Inputs.spread(docs)
-      .select(col("doc_id"), shingleHashes(col(textCol), n).as("sh"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val posting = withSh.select(col("doc_id"), explode(col("sh")).as("shingle"))
-    val sizes = withSh.select(col("doc_id"), size(col("sh")).cast("long").as("n_sh"))
-    val byShingle = posting.groupBy(col("shingle"))
-      .agg(sort_array(collect_list(col("doc_id"))).as("ds"))
-      .filter(size(col("ds")).between(2, maxDf))
-    explodeOrderedPairs(byShingle, "ds")
-      .groupBy("a", "b")
-      .agg(count(lit(1)).as("inter"))
-      .join(broadcast(sizes.select(col("doc_id").as("a"), col("n_sh").as("na"))), Seq("a"))
-      .join(broadcast(sizes.select(col("doc_id").as("b"), col("n_sh").as("nb"))), Seq("b"))
+    postingPairs(docs, n, maxDf, textCol)
       .withColumn("containment", col("inter").cast("double") /
         least(col("na"), col("nb")).cast("double"))
       .filter(col("containment") >= threshold)
@@ -253,45 +248,13 @@ object Dedup {
     * small fraction of the corpus (pair mining already bounded it) — and
     * [[graft.kg.ConnectedComponents]] runs label propagation with the
     * O(log n) large-star/small-star fallback, so chain-shaped dup clusters
-    * (A≈B≈C≈… template families) don't stall it. doc_ids travel as
-    * fixed-width strings so the component minimum is the numeric minimum. */
-  def dupClusters(pairs: DataFrame, aCol: String = "doc_a", bCol: String = "doc_b"): DataFrame = {
-    def key(c: Column) = lpad(c.cast("string"), 20, "0")
-    // materialize the (usually expensive) pair-mining plan ONCE: edges and
-    // nodes below reference it 4× between them, and Spark has no common-
-    // subtree reuse across union branches
-    val edges = pairs.select(key(col(aCol)).as("node_a"), key(col(bCol)).as("node_b"))
-      .localCheckpoint()
-    // small-graph early-out, one step beyond ConnectedComponents' own:
-    // every CC node here IS an edge endpoint (nodes derive from the pair
-    // list), so the collected union-find labels are ALREADY the complete
-    // answer — emit the final frame as a LocalRelation instead of paying
-    // the generic sym-distinct / node-distinct / label-join round-trips
-    val eCnt = edges.count()
-    if (eCnt > 0 && eCnt <= graft.kg.LocalIter.maxEdges(edges.sparkSession)) {
-      import org.apache.spark.sql.types.{BooleanType, LongType, StructField, StructType}
-      val ord = graft.kg.LocalIter.orderingFor(org.apache.spark.sql.types.StringType).get
-      val lbl = graft.kg.LocalIter.ccLabels(
-        edges.collect().map(r => (r.get(0), r.get(1))), ord)
-      // 20-digit zero-padded keys: byte order ≡ numeric order, so the
-      // component-minimum label decodes to the minimum doc_id
-      val rows = lbl.toSeq.map { case (n, c) =>
-        val docId = n.asInstanceOf[String].toLong
-        val cluster = c.asInstanceOf[String].toLong
-        org.apache.spark.sql.Row(docId, cluster, docId == cluster)
-      }
-      return graft.kg.LocalIter.localDf(edges.sparkSession,
-        StructType(Seq(StructField("doc_id", LongType), StructField("cluster_id", LongType),
-          StructField("kept", BooleanType))), rows)
-    }
-    val nodes = edges.select(col("node_a").as("node"))
-      .union(edges.select(col("node_b").as("node"))).distinct()
-    graft.kg.ConnectedComponents.run(nodes, edges).select(
-      col("node").cast("long").as("doc_id"),
-      // canon_id is "C:" + the zero-padded component minimum
-      substring(col("canon_id"), 3, 20).cast("long").as("cluster_id"))
+    * (A≈B≈C≈… template families) don't stall it. doc_ids travel as longs,
+    * so the component minimum is the numeric minimum doc_id. */
+  def dupClusters(pairs: DataFrame, aCol: String = "doc_a", bCol: String = "doc_b"): DataFrame =
+    graft.kg.ConnectedComponents.labels(
+        pairs.select(col(aCol).cast("long").as("node_a"), col(bCol).cast("long").as("node_b")))
+      .select(col("node").as("doc_id"), col("comp").as("cluster_id"))
       .withColumn("kept", col("doc_id") === col("cluster_id"))
-  }
 
   // --------------------------------------------------------- span-level dedup
   /** C4-style span-level dedup stats: every doc is cut into consecutive

@@ -74,12 +74,11 @@ object Kmeans {
     try {
       // bounded-corpus early-out: ONE collect of the slim quantized
       // projection replaces `iters` assignment+aggregation jobs — identical
-      // exact-integer Lloyd arithmetic (KmeansLocalParitySpec); the
+      // exact-integer Lloyd arithmetic (LocalFitParitySpec); the
       // distributed loop below is the path above the bound
-      val nRows = qdf.count()
-      if (nRows > 0 && nRows <= graft.kg.LocalIter.maxEdges(embeddings.sparkSession))
-        return fitLocal(
-          qdf.collect().map(r => (r.getLong(0), r.getSeq[Long](1).toArray)), k, iters)
+      val small = graft.kg.LocalIter.collectSmall(qdf)
+      if (small.isDefined)
+        return fitLocal(small.get.map(r => (r.getLong(0), r.getSeq[Long](1).toArray)), k, iters)
       var cents: IndexedSeq[Array[Long]] = qdf.orderBy("vec_id").limit(k).collect()
         .map(_.getSeq[Long](1).toArray).toIndexedSeq
       require(cents.nonEmpty, "k-means on an empty corpus")

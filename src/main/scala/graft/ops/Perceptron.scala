@@ -58,10 +58,10 @@ object Perceptron {
       // bounded-corpus early-out: one collect of the slim integer feature
       // rows replaces the per-epoch aggregation jobs — identical exact Long
       // update (PerceptronSpec's oracle parity covers both paths)
-      val nRows = f.count()
-      if (nRows <= graft.kg.LocalIter.maxEdges(f.sparkSession)) {
-        val rows = f.select(col("y"), col("x1"), col("x2"), col("x3")).collect()
-          .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
+      val small = graft.kg.LocalIter.collectSmall(
+        f.select(col("y"), col("x1"), col("x2"), col("x3")))
+      if (small.isDefined) {
+        val rows = small.get.map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
         var wl = Array(0L, 0L, 0L, 0L)
         (1 to epochs).foreach { _ =>
           var g0 = 0L; var g1 = 0L; var g2 = 0L; var g3 = 0L

@@ -5,6 +5,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DataType
 import graft.SparkTestBase
+import graft.ops.Dedup
 
 /** The driver-local small-graph fixpoints must be BIT-IDENTICAL to the
   * distributed paths — same Long arithmetic, same orderings. Each test runs
@@ -172,5 +173,27 @@ class LocalIterParitySpec extends AnyFunSuite {
     assert(rowsOf(ConnectedComponents.run(Seq("a", "b", "x").toDF("node"),
         Seq(("a", "b")).toDF("node_a", "node_b"))) ===
       Set(Seq("a", "C:a"), Seq("b", "C:a"), Seq("x", "C:x")))
+    val noDocPairs = Seq.empty[(Long, Long)].toDF("doc_a", "doc_b")
+    assert(rowsOf(Dedup.dupClusters(noDocPairs)).isEmpty)
+    assert(rowsOf(Dedup.dupClusters(Seq((7L, 3L)).toDF("doc_a", "doc_b"))) ===
+      Set(Seq(3L, 3L, true), Seq(7L, 3L, false)))
+  }
+
+  test("KG canonical local ≡ distributed: variants and linked ids merge, edgeless surfaces self-label") {
+    // "acme corp"/"acme corps" share the block ORG:acme with char-3-gram
+    // Jaccard 7/8; both PER surfaces link to Q7, whose ID: node is their
+    // component minimum; "paris" is alone in its block and unlinked
+    val mentions = Seq(("u1", "ORG", "Acme Corp"), ("u2", "ORG", "acme corp"),
+      ("u2", "ORG", "Acme Corps"), ("u1", "PER", "Bob Smith"),
+      ("u3", "PER", "Robert Smith"), ("u3", "LOC", "Paris"))
+      .toDF("url", "entity", "value")
+    val links = Seq(("PER", "Bob Smith", "Q7"), ("PER", "Robert Smith", "Q7"))
+      .toDF("entity", "value", "entity_id")
+    assert(rowsOf(KgPipeline.canonical(mentions, links)) === Set(
+      Seq("ORG", "acme corp", 2L, "C:ORG:acme corp"),
+      Seq("ORG", "acme corps", 1L, "C:ORG:acme corp"),
+      Seq("PER", "bob smith", 1L, "C:ID:Q7"),
+      Seq("PER", "robert smith", 1L, "C:ID:Q7"),
+      Seq("LOC", "paris", 1L, "C:LOC:paris")))
   }
 }
