@@ -74,62 +74,89 @@ object Dedup {
   /** Near-duplicate pairs with token-n-gram Jaccard ≥ `threshold`, via an
     * inverted-index join. `maxDf` drops boilerplate shingles before the join
     * (documented coverage cap — pairs sharing ONLY ultra-common shingles are
-    * not candidates). */
+    * not candidates).
+    *
+    * Each posting entry carries its doc's distinct-shingle count `n`, so a
+    * pair row holds both set sizes and the pair aggregation yields
+    * (a, b, na, nb, inter) with no size-table join — nothing corpus-sized is
+    * broadcast, and the shingle sets are read once (no persist).
+    *
+    * Length filter (exact, applied BEFORE the pair aggregation): a pair
+    * survives only if min(na, nb) / max(na, nb) ≥ `threshold`, in double as
+    * the final filter computes. It drops no output pair: inter ≤ min(na, nb)
+    * and na + nb − inter ≥ max(na, nb), and IEEE division is correctly
+    * rounded, hence monotone — so jaccard = inter / (na + nb − inter) ≤
+    * fl(min / max), and every dropped pair would also fail jaccard ≥
+    * `threshold`, at every threshold and maxDf. At sf0.1 (q22: 10k docs of
+    * 8–99 shingles) it keeps 2.15M of the 5.34M pair rows; the pair
+    * aggregation shuffles 1.80M records instead of 4.92M.
+    *
+    * Measured and rejected: (1) a hash-order positional bound,
+    * min(i, j) + 1 + min(na − i − 1, nb − j − 1) — positions in hash order
+    * are correlated across documents, so it pruned almost nothing (q22:
+    * 1.56M vs 1.80M shuffled records, 1.95 vs 1.96 s); (2) slim (a, b) group
+    * keys plus a broadcast-join of the per-doc sizes after the aggregation —
+    * q22 8 % faster than carrying sizes, but it broadcasts a corpus-sized
+    * table. A full AllPairs/SSJoin prefix filter was also measured slower
+    * (see [[orderedPostingPairs]]). */
   def jaccardPairs(docs: DataFrame, threshold: Double = 0.8, n: Int = 3,
                    maxDf: Int = 50, textCol: String = "text"): DataFrame = {
-    postingPairs(docs, n, maxDf, textCol)
+    val entry = struct(col("doc_id").as("id"), size(col("sh")).cast("long").as("n"))
+    orderedPostingPairs(shingleSets(docs, n, textCol), entry, maxDf)
+      .filter(least(col("a.n"), col("b.n")).cast("double") /
+        greatest(col("a.n"), col("b.n")).cast("double") >= threshold)
+      .groupBy(col("a.id").as("a"), col("b.id").as("b"), col("a.n").as("na"), col("b.n").as("nb"))
+      .agg(count(lit(1)).as("inter"))
       .withColumn("jaccard", col("inter").cast("double") /
         (col("na") + col("nb") - col("inter")).cast("double"))
       .filter(col("jaccard") >= threshold)
       .select(col("a").as("doc_a"), col("b").as("doc_b"), round(col("jaccard"), 4).as("jaccard"))
   }
 
-  /** The posting-pair core of [[jaccardPairs]] and [[containmentPairs]]:
-    * (a, b, inter, na, nb) for every doc pair a < b sharing a shingle hash
-    * whose posting list holds 2..`maxDf` docs — `inter` the number of such
-    * shared shingles, `na`/`nb` each doc's distinct-shingle count. */
-  private def postingPairs(docs: DataFrame, n: Int, maxDf: Int, textCol: String): DataFrame = {
-    // group-by-shingle → emit pairs: ONE pass over the posting list (a
-    // self-join would scan/explode the corpus twice — no exchange reuse
-    // across a broadcast boundary), no window sort, per-shingle pair count
-    // bounded by the stop-shingle cap (≤ maxDf·(maxDf−1)/2). The posting key
-    // is the 64-bit shingle HASH, not the string — same distinct counts
-    // (collisions ~n²/2⁶⁴), a fraction of the exchange bytes.
-    //
-    // The pair stream is the plan's dominant term (Σ C(df,2) rows — 5.3M at
-    // sf0.1 for 6k final pairs), so pair rows carry ONLY (a, b): the
-    // per-doc set sizes needed for the ratio denominators broadcast-join
-    // back AFTER the pair aggregation (docs-sized slim table vs +2 longs on
-    // every pair row — guide §2.3, shuffle keys not payloads).
-    //
-    // A full AllPairs/SSJoin prefix-filter variant (candidates from the
-    // df-ascending (1−t)-prefix of each doc's shared-shingle list + exact
-    // set verification) was implemented and MEASURED SLOWER here (q22
-    // 2.36 s → 3.61 s, q28 2.93 → 3.99 s at sf0.1): its extra doc-keyed
-    // shuffle, candidate dedupe and array-payload verify joins cost more
-    // than the 5.3M→~0.3M bare-long pair-row reduction saves. It becomes
-    // the right trade only when Σ C(df,2) outgrows the corpus by orders of
-    // magnitude (boilerplate-heavy shingle dfs near the cap) — revisit
-    // with measurements if maxDf-sized postings ever dominate; see
-    // OPTIMIZATION_r06.md ("tried and reverted").
-    //
-    // Inputs.spread: the shingle kernel is the heavy scan-side pass — on
-    // unsplittable (single-row-group) input it would run on ONE task
-    val withSh = Inputs.spread(docs)
-      .select(col("doc_id"), shingleHashes(col(textCol), n).as("sh"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val posting = withSh.select(col("doc_id"), explode(col("sh")).as("shingle"))
-    // n_sh = |distinct shingle set| (the pre-cap posting count per doc)
-    val sizes = withSh.select(col("doc_id"), size(col("sh")).cast("long").as("n_sh"))
-    val byShingle = posting.groupBy(col("shingle"))
-      .agg(sort_array(collect_list(col("doc_id"))).as("ds"))
-      .filter(size(col("ds")).between(2, maxDf))
-    explodeOrderedPairs(byShingle, "ds")
-      .groupBy("a", "b")
-      .agg(count(lit(1)).as("inter"))
-      .join(broadcast(sizes.select(col("doc_id").as("a"), col("n_sh").as("na"))), Seq("a"))
-      .join(broadcast(sizes.select(col("doc_id").as("b"), col("n_sh").as("nb"))), Seq("b"))
-  }
+  /** (doc_id, sh): each doc's distinct shingle-hash set — the input of both
+    * posting-list miners. Inputs.spread: the shingle kernel is the heavy
+    * scan-side pass — on unsplittable (single-row-group) input it would run
+    * on ONE task. */
+  private def shingleSets(docs: DataFrame, n: Int, textCol: String): DataFrame =
+    Inputs.spread(docs).select(col("doc_id"), shingleHashes(col(textCol), n).as("sh"))
+
+  /** The posting core of [[jaccardPairs]] and [[containmentPairs]]: every
+    * pair (a, b) of `entry` values (computed per row of `sets`) that share a
+    * shingle hash whose posting list holds 2..`maxDf` docs — one row per
+    * shared shingle, a < b in `entry` order (entries lead with the doc id).
+    *
+    * Group-by-shingle → emit pairs: ONE pass over the posting list (a
+    * self-join would scan/explode the corpus twice — no exchange reuse
+    * across a broadcast boundary), no window sort, per-shingle pair count
+    * bounded by the stop-shingle cap (≤ maxDf·(maxDf−1)/2). The posting key
+    * is the 64-bit shingle HASH, not the string — same distinct counts
+    * (collisions ~n²/2⁶⁴), a fraction of the exchange bytes. The pair stream
+    * is the plan's dominant term (Σ C(df,2) rows — 5.3M at sf0.1).
+    *
+    * A full AllPairs/SSJoin prefix-filter variant (candidates from the
+    * df-ascending (1−t)-prefix of each doc's shared-shingle list + exact
+    * set verification) was implemented and MEASURED SLOWER here (q22
+    * 2.36 s → 3.61 s, q28 2.93 → 3.99 s at sf0.1): its extra doc-keyed
+    * shuffle, candidate dedupe and array-payload verify joins cost more
+    * than the 5.3M→~0.3M bare-long pair-row reduction saves. It becomes
+    * the right trade only when Σ C(df,2) outgrows the corpus by orders of
+    * magnitude (boilerplate-heavy shingle dfs near the cap) — revisit
+    * with measurements if maxDf-sized postings ever dominate; see
+    * OPTIMIZATION_r06.md ("tried and reverted").
+    *
+    * explode_outer + a null filter on the generated shingle, not explode:
+    * Catalyst infers `size(sh) > 0` from a plain explode and pushes it
+    * through the projection and [[Inputs.spread]] into the scan, so the
+    * shingle kernel ran again per doc on the unspread input (q22 at sf0.1:
+    * 2.02 → 1.71 s median, 10 alternating pairs, same rows). */
+  private def orderedPostingPairs(sets: DataFrame, entry: Column, maxDf: Int): DataFrame =
+    explodeOrderedPairs(
+      sets.select(entry.as("e"), explode_outer(col("sh")).as("shingle"))
+        .filter(col("shingle").isNotNull)
+        .groupBy(col("shingle"))
+        .agg(sort_array(collect_list(col("e"))).as("ds"))
+        .filter(size(col("ds")).between(2, maxDf)),
+      "ds")
 
   /** All ordered pairs (a < b by array position) of each row's sorted
     * `listCol` array, as two bare columns `a`, `b` after the pass-through
@@ -152,12 +179,27 @@ object Dedup {
     * misses: a short document quoted verbatim inside a long one shares ALL
     * its shingles (containment = inter/min(na,nb) = 1.0) yet scores jaccard
     * ≈ na/nb ≈ 0. This is the quote/excerpt/boilerplate-inclusion detector
-    * of the dedup family. The same [[postingPairs]] plan as
-    * [[jaccardPairs]] (hashed postings, maxDf stop-shingle cap, one pass) —
-    * only the final ratio differs, so the 100 TB story is the same. */
+    * of the dedup family. The same hashed, maxDf-capped, one-pass posting
+    * core as [[jaccardPairs]] ([[orderedPostingPairs]]).
+    *
+    * Containment has no size bound to filter on, so its pair rows carry
+    * ONLY (a, b) and the per-doc set sizes broadcast-join back AFTER the
+    * pair aggregation. Carrying the sizes on the posting entries (the
+    * jaccard plan) measured slower here: q96 1.80 → 2.10 s at sf0.1 (+16 %,
+    * 16 alternating pairs). The broadcast table is one row per document —
+    * the open scale item of this miner. */
   def containmentPairs(docs: DataFrame, threshold: Double = 0.9, n: Int = 3,
                        maxDf: Int = 50, textCol: String = "text"): DataFrame = {
-    postingPairs(docs, n, maxDf, textCol)
+    // read twice (postings + sizes): persist so the shingle kernel runs once
+    val sets = shingleSets(docs, n, textCol)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // n_sh = |distinct shingle set| (the pre-cap posting count per doc)
+    val sizes = sets.select(col("doc_id"), size(col("sh")).cast("long").as("n_sh"))
+    orderedPostingPairs(sets, col("doc_id"), maxDf)
+      .groupBy("a", "b")
+      .agg(count(lit(1)).as("inter"))
+      .join(broadcast(sizes.select(col("doc_id").as("a"), col("n_sh").as("na"))), Seq("a"))
+      .join(broadcast(sizes.select(col("doc_id").as("b"), col("n_sh").as("nb"))), Seq("b"))
       .withColumn("containment", col("inter").cast("double") /
         least(col("na"), col("nb")).cast("double"))
       .filter(col("containment") >= threshold)

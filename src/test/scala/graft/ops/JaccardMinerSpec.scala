@@ -7,7 +7,9 @@ import graft.SparkTestBase
   * capped-posting semantics EXACTLY (the oracle's formulation): inter =
   * |shared shingles with 2 ≤ df ≤ maxDf|, denominators = full distinct-set
   * sizes, every pair with jaccard ≥ t present. Randomized corpora stress
-  * the prefix lemma across set sizes, duplicate families and caps. */
+  * the length filter (pairs with min/max set size < t are dropped before
+  * the pair aggregation) across set sizes, duplicate families and caps;
+  * a boundary pair sits exactly on the filter's ratio. */
 class JaccardMinerSpec extends AnyFunSuite {
   lazy val spark = SparkTestBase.spark
   import spark.implicits._
@@ -39,7 +41,7 @@ class JaccardMinerSpec extends AnyFunSuite {
     Dedup.jaccardPairs(docs.toDF("doc_id", "text"), threshold = t, maxDf = maxDf)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
 
-  test("randomized corpora: prefix-filtered miner ≡ brute force") {
+  test("randomized corpora: length-filtered miner ≡ brute force") {
     val rnd = new scala.util.Random(42)
     val vocab = Vector("alpha", "beta", "gamma", "delta", "eps", "zeta", "eta",
       "theta", "iota", "kappa", "la", "mu")
@@ -61,5 +63,44 @@ class JaccardMinerSpec extends AnyFunSuite {
     val docs = Seq(1L -> "a b", 2L -> "a b", 3L -> "a", 4L -> "x y z w q r",
       5L -> "x y z w q r", 6L -> "")
     assert(engine(docs, 0.8, 1000) === reference(docs, 0.8, 1000))
+  }
+
+  test("length filter boundary: size ratio exactly t is kept, just above t is dropped") {
+    // 4 and 5 shingles, the 4 all shared: min/max = jaccard = 0.8 exactly
+    val docs = Seq(1L -> "a b c d e f", 2L -> "a b c d e f g")
+    assert(engine(docs, 0.8, 1000) === Set((1L, 2L, 0.8)))
+    assert(engine(docs, 0.8, 1000) === reference(docs, 0.8, 1000))
+    assert(engine(docs, 0.81, 1000) === Set.empty)
+    assert(engine(docs, 0.81, 1000) === reference(docs, 0.81, 1000))
+  }
+
+  test("plan: no broadcast exchange, no cached relation, the shingle kernel in one operator") {
+    // a one-file parquet input, like the benchmark tables: Inputs.spread
+    // repartitions it before the kernel
+    val dir = java.nio.file.Files.createTempDirectory("jaccard_plan").resolve("docs").toString
+    Seq(1L -> "a b c d e f", 2L -> "a b c d e f g", 3L -> "x y z w").toDF("doc_id", "text")
+      .coalesce(1).write.parquet(dir)
+    val pairs = Dedup.jaccardPairs(spark.read.parquet(dir), threshold = 0.8, maxDf = 1000)
+    assert(pairs.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet ===
+      Set((1L, 2L, 0.8)))
+    val plan = pairs.queryExecution.executedPlan
+    val adaptive = plan.asInstanceOf[org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec]
+    assert(adaptive.isFinalPlan)
+    val nodes = Helper.nodes(plan)
+    assert(!nodes.exists(_.isInstanceOf[org.apache.spark.sql.execution.exchange.BroadcastExchangeLike]),
+      s"broadcast exchange in\n$plan")
+    assert(!nodes.exists(_.isInstanceOf[org.apache.spark.sql.execution.columnar.InMemoryTableScanExec]),
+      s"cached relation in\n$plan")
+    assert(!plan.toString.contains("InMemoryRelation"), s"cached relation in\n$plan")
+    // no inferred filter re-runs the kernel in the scan, before the spread
+    val kernelOps = nodes.filter(_.expressions.exists(_.exists(
+      _.isInstanceOf[graft.plans.WordShingleHashesExpression])))
+    assert(kernelOps.length === 1, s"shingle kernel in ${kernelOps.map(_.nodeName)} of\n$plan")
+  }
+
+  /** Every physical node, descending into adaptive query stages. */
+  private object Helper extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {
+    def nodes(p: org.apache.spark.sql.execution.SparkPlan): Seq[org.apache.spark.sql.execution.SparkPlan] =
+      collect(p) { case n => n }
   }
 }
