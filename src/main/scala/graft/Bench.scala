@@ -143,7 +143,7 @@ object Bench {
         val dt = (System.nanoTime() - t0) / 1e9
         times(name) = dt :: times(name)
         tot += dt
-        // per-query persists (MinHash/SimHash/LmScore/cooccur) are never
+        // per-query persists (LmScore/cooccur/Dsir/...) are never
         // shared across queries — release them so a 62-query sweep doesn't
         // accumulate executor cache to LRU-eviction pressure
         spark.sharedState.cacheManager.clearCache()

@@ -505,13 +505,11 @@ object SparkEntry {
     * Hamming-≤3 pair set by brute force (`bit_count(xor(...))` over all
     * id-ordered pairs) with no knowledge of the pigeonhole banding — a real
     * cross-engine check of the distributed pair mining. */
-  def simhashSigFrame(s: SparkSession, dir: String): DataFrame = {
-    def half(off: Int) =
-      aggregate(slice(col("sig"), off, 32), lit(0L), (acc, v) => acc * 2 + v)
+  def simhashSigFrame(s: SparkSession, dir: String): DataFrame =
     docsWithDups(s, dir)
-      .select(col("doc_id"), Dedup.simhashBits(col("text")).as("sig"))
-      .select(col("doc_id"), half(1).as("sig_hi"), half(33).as("sig_lo"))
-  }
+      .select(col("doc_id"), Dedup.simhash(col("text")).as("sig"))
+      .select(col("doc_id"), shiftrightunsigned(col("sig"), 32).as("sig_hi"),
+        col("sig").bitwiseAND(lit(0xFFFFFFFFL)).as("sig_lo"))
 
   /** Fixed per-source token budgets for q74 (the mixing recipe): rates
     * span keep-all (src2 at sf0.01), ~half, and near-zero, and shrink as

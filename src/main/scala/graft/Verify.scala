@@ -21,8 +21,8 @@ object Verify {
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      // several operators persist intermediate frames (MinHash candidates,
-      // LmScore tokens, cooccurrence sentence sets); queries never share
+      // several operators persist intermediate frames (LmScore tokens,
+      // cooccurrence sentence sets); queries never share
       // them, so release after each query instead of letting 62 queries'
       // caches pile up to LRU pressure in one long-lived session
       spark.sharedState.cacheManager.clearCache()

@@ -3,7 +3,7 @@ package graft.kg
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.crf.{CrfConfig, CrfModel}
-import graft.ops.Dedup.explodeOrderedPairs
+import graft.ops.Dedup.{blockPairs, explodeOrderedPairs}
 import graft.plans.GraftFunctions.crf_tag
 
 /** The Spark-native KG-construction pipeline (north_rule): pages → sentences →
@@ -107,18 +107,18 @@ object KgPipeline {
 
     // distinct surfaces, salted pre-aggregation (hot surfaces on hot domains).
     // surfaces is referenced twice below (block pairs, the final label
-    // join) — without persist each reference re-inlines the whole
+    // join) — unmaterialized, each reference re-inlines the whole
     // upstream pipeline INCLUDING the CRF decode when mentions isn't a
     // checkpointed parquet (the q53 driver path paid the decode ~5×; same
-    // unpersisted-multi-reference class as the round-2 MinHash fix). The
-    // persisted set is distinct (entity, surface) rows — gazetteer-sized,
-    // ≪ corpus, safe to cache at any scale.
+    // multi-reference class as the round-2 MinHash fix). The materialized
+    // set is distinct (entity, surface) rows — gazetteer-sized, ≪ corpus;
+    // localCheckpoint, so no cache entry outlives the call.
     val surfaces = mentions
       .withColumn("salt", pmod(xxhash64($"url"), lit(64)))
       .groupBy($"entity", lower($"value").as("surface"), $"salt").agg(count(lit(1)).as("c0"))
       .groupBy($"entity", $"surface").agg(sum($"c0").as("n_mentions"))
       .withColumn("node", concat($"entity", lit(":"), $"surface"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .localCheckpoint()
 
     val withBlock = surfaces.withColumn("block", concat($"entity", lit(":"), split($"surface", " ").getItem(0)))
 
@@ -127,10 +127,7 @@ object KgPipeline {
     // is a stop-word-like key whose pairs are noise, and the cap bounds the
     // quadratic fan-out per task
     val maxBlock = 1000
-    val blocks = withBlock.groupBy($"block")
-      .agg(sort_array(collect_list(struct($"node", $"surface"))).as("ns"))
-      .filter(size($"ns").between(2, maxBlock))
-    val simPairs = explodeOrderedPairs(blocks, "ns")
+    val simPairs = blockPairs(withBlock, Seq($"block"), struct($"node", $"surface"), maxBlock)
       .filter(jaccard3($"a.surface", $"b.surface") >= 0.5)
       .select($"a.node".as("node_a"), $"b.node".as("node_b"))
 

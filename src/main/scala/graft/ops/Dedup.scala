@@ -15,8 +15,16 @@ import org.apache.spark.sql.functions._
   *    standard guard against quadratic blowup on boilerplate)
   *  - MinHash LSH: candidates from banded signatures — cost is O(docs ×
   *    bands), never O(docs²); candidates verified with exact Jaccard
-  *  - SimHash: 64-bit signature per doc, Hamming-≤k pairs via the pigeonhole
-  *    band join (k+1 chunks, one must match exactly)
+  *  - SimHash: one 64-bit signature (a bigint) per doc, Hamming-≤k pairs
+  *    via pigeonhole banding (k+1 chunks, one must match exactly)
+  *
+  * Every candidate generator — the shingle postings of the Jaccard and
+  * containment miners, the MinHash band buckets, the SimHash band chunks and
+  * the KG canonicalization blocks — runs through ONE blocking core,
+  * [[blockPairs]]: group by the block key, sort the block's entries, keep
+  * blocks of 2..cap entries, expand the ordered pairs. Frames a miner reads
+  * more than once are materialized with `localCheckpoint()`, never
+  * `persist`, so no call leaves a cached relation behind.
   */
 object Dedup {
 
@@ -150,13 +158,24 @@ object Dedup {
     * shingle kernel ran again per doc on the unspread input (q22 at sf0.1:
     * 2.02 → 1.71 s median, 10 alternating pairs, same rows). */
   private def orderedPostingPairs(sets: DataFrame, entry: Column, maxDf: Int): DataFrame =
-    explodeOrderedPairs(
+    blockPairs(
       sets.select(entry.as("e"), explode_outer(col("sh")).as("shingle"))
-        .filter(col("shingle").isNotNull)
-        .groupBy(col("shingle"))
-        .agg(sort_array(collect_list(col("e"))).as("ds"))
-        .filter(size(col("ds")).between(2, maxDf)),
-      "ds")
+        .filter(col("shingle").isNotNull),
+      Seq(col("shingle")), col("e"), maxDf)
+
+  /** The blocking core of every candidate generator: group `rows` by the
+    * block `keys`, sort each block's `entry` values, drop blocks of fewer
+    * than 2 or more than `cap` entries, and emit every ordered pair (a < b
+    * in `entry` order) of a kept block as two bare columns `a`, `b` — one
+    * row per (pair, shared block). The cap bounds a block's pair fan-out at
+    * cap·(cap−1)/2; a block over it is a boilerplate / stop-key collision. */
+  private[graft] def blockPairs(rows: DataFrame, keys: Seq[Column], entry: Column,
+                                cap: Int): DataFrame =
+    explodeOrderedPairs(
+      rows.groupBy(keys: _*)
+        .agg(sort_array(collect_list(entry)).as("entries"))
+        .filter(size(col("entries")).between(2, cap)),
+      "entries")
 
   /** All ordered pairs (a < b by array position) of each row's sorted
     * `listCol` array, as two bare columns `a`, `b` after the pass-through
@@ -164,8 +183,8 @@ object Dedup {
     * in GenerateExec/codegen, instead of nested `transform` lambdas
     * (interpreted eval — measured ~2× slower on the multi-million-row pair
     * streams of the jaccard/containment miners). The one pair-expansion
-    * helper: the miners here and the KG canonical/triples/cooccurrence
-    * stages all use it. */
+    * helper: [[blockPairs]], the SimHash same-signature pairs and the KG
+    * triples/cooccurrence stages all use it. */
   private[graft] def explodeOrderedPairs(grouped: DataFrame, listCol: String,
                                          keep: String*): DataFrame = {
     val kept = keep.map(col)
@@ -190,9 +209,8 @@ object Dedup {
     * the open scale item of this miner. */
   def containmentPairs(docs: DataFrame, threshold: Double = 0.9, n: Int = 3,
                        maxDf: Int = 50, textCol: String = "text"): DataFrame = {
-    // read twice (postings + sizes): persist so the shingle kernel runs once
-    val sets = shingleSets(docs, n, textCol)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // read twice (postings + sizes): materialize so the shingle kernel runs once
+    val sets = shingleSets(docs, n, textCol).localCheckpoint()
     // n_sh = |distinct shingle set| (the pre-cap posting count per doc)
     val sizes = sets.select(col("doc_id"), size(col("sh")).cast("long").as("n_sh"))
     orderedPostingPairs(sets, col("doc_id"), maxDf)
@@ -249,25 +267,23 @@ object Dedup {
         explode(sequence(lit(0), lit(bands - 1))).as("band"))
       .select(col("doc_id"), col("band"),
         xxhash64((1 to r).map(j => element_at(col("sig"), col("band") * r + j)): _*).as("bucket"))
-    // cand/candSh are each referenced 2-3 times below; WITHOUT persist every
+    // cand/candSh are each referenced 2-3 times below; unmaterialized, every
     // reference re-inlines (and re-executes) the full banding pipeline —
     // plan review showed 44 parquet scans and zero ReusedExchange. Both are
     // small by construction (candidate pairs / candidate docs' shingles), so
-    // explicit persistence is the scale-correct call; Spark's LRU evicts.
-    val cand = explodeOrderedPairs(
-        banded.groupBy(col("band"), col("bucket"))
-          .agg(sort_array(collect_list(col("doc_id"))).as("ds"))
-          .filter(size(col("ds")).between(2, maxBucket)), "ds")
+    // they are materialized once (localCheckpoint: no cache entry outlives
+    // the call).
+    val cand = blockPairs(banded, Seq(col("band"), col("bucket")), col("doc_id"), maxBucket)
       .select(col("a").as("doc_a"), col("b").as("doc_b"))
       .dropDuplicates("doc_a", "doc_b")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .localCheckpoint()
     val ids = cand.select(col("doc_a").as("doc_id"))
       .union(cand.select(col("doc_b").as("doc_id"))).distinct()
     // shingle only the candidate docs: restrict BEFORE the (costly) shingle
     // projection so non-candidate text never enters the verify joins
     val candSh = docs.join(ids, Seq("doc_id"), "left_semi")
       .select(col("doc_id"), shingleHashes(col(textCol), n).as("sh"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .localCheckpoint()
     cand
       .join(candSh.select(col("doc_id").as("doc_a"), col("sh").as("sha")), Seq("doc_a"))
       .join(candSh.select(col("doc_id").as("doc_b"), col("sh").as("shb")), Seq("doc_b"))
@@ -399,68 +415,63 @@ object Dedup {
       .select(col(idCol), col("clean_text"), col("n_lines"), col("n_dup_lines"))
 
   // --------------------------------------------------------------- SimHash
-  /** 64-bit SimHash over word-unigram hashes, as an array<int> of bits (MSB
-    * first): per bit, sign of the sum of ±1 votes. Native kernel
-    * ([[graft.plans.SimhashBitsExpression]]). */
-  def simhashBits(text: Column): Column =
+  /** 64-bit SimHash over word-unigram hashes, as one bigint: bit 63 first,
+    * per bit the sign of the sum of ±1 votes. Native kernel
+    * ([[graft.plans.SimhashExpression]]). */
+  def simhash(text: Column): Column =
     org.apache.spark.sql.GraftColumnBridge.column(
-      graft.plans.SimhashBitsExpression(
+      graft.plans.SimhashExpression(
         org.apache.spark.sql.GraftColumnBridge.expression(text)))
 
-  /** Near-dup pairs with Hamming(simhash) ≤ maxDist via pigeonhole banding:
-    * split the 64-bit signature into maxDist+1 chunks; any pair within
-    * distance must agree exactly on ≥1 chunk.
+  /** Near-dup pairs (doc_a < doc_b) with Hamming(simhash) ≤ maxDist via
+    * pigeonhole banding: cut the signature into maxDist+1 chunks of
+    * 64 / (maxDist+1) bits (the low 64 mod (maxDist+1) bits fall in no
+    * chunk); a pair within distance must agree exactly on ≥1 chunk.
     *
     * Docs are first collapsed to DISTINCT signatures (duplicate-heavy corpora
-    * otherwise blow the band join up quadratically — docs sharing a signature
-    * pair at distance 0 by construction and never enter the join). */
+    * otherwise blow the band blocks up quadratically — docs sharing a
+    * signature pair at distance 0 by construction). The distinct signatures
+    * are blocked on (band, chunk) by [[blockPairs]] (no cap: a chunk shared
+    * by many signatures is still a candidate set, not boilerplate), the
+    * distance is `bit_count(xor)` of the two longs, and each surviving
+    * signature pair expands to the cross product of its two doc lists. */
   def simhashDupPairs(docs: DataFrame, maxDist: Int = 3, textCol: String = "text"): DataFrame = {
+    require(maxDist >= 0 && maxDist <= 63,
+      s"simhashDupPairs: maxDist must be in 0..63 (a 64-bit signature), got $maxDist")
     val chunks = maxDist + 1
     val width = 64 / chunks
-    val withSig = docs.select(col("doc_id"), simhashBits(col(textCol)).as("sig"))
-      .withColumn("sigstr", concat_ws("", col("sig")))
-    // referenced three times (within-pairs + both sides of the band join) —
-    // persist so the SimHash bit computation runs once, not per reference
-    val sigGroups = withSig.groupBy(col("sigstr")).agg(
-      first(col("sig")).as("sig"), sort_array(collect_list(col("doc_id"))).as("docs"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val mask = if (width == 64) -1L else (1L << width) - 1
+    // read twice (same-signature pairs + the band blocks): materialize so
+    // the SimHash kernel and the signature grouping run once
+    val sigGroups = docs.select(col("doc_id"), simhash(col(textCol)).as("sig"))
+      .groupBy(col("sig"))
+      .agg(sort_array(collect_list(col("doc_id"))).as("docs"))
+      .localCheckpoint()
 
-    // within-signature pairs: distance 0
+    // same-signature pairs: distance 0
     val within = explodeOrderedPairs(sigGroups.filter(size(col("docs")) > 1), "docs")
       .select(col("a").as("doc_a"), col("b").as("doc_b"), lit(0L).as("dist"))
 
-    // cross-signature pairs via pigeonhole bands over distinct signatures.
-    // The chunk key packs the band's `width` bits into ONE long (injective —
-    // exactly the equality semantics of the old bit-string concat) in a
-    // codegen projection instead of interpreted string-building lambdas.
-    val banded = sigGroups.select(col("sigstr"), col("sig"), col("docs"),
-        explode(sequence(lit(0), lit(chunks - 1))).as("band"))
-      .withColumn("chunk",
-        (1 to width).map(j =>
-          element_at(col("sig"), col("band") * width + j).cast("long") * lit(1L << (width - j)))
-          .reduce(_ + _))
-    val a = banded.select(col("band"), col("chunk"), col("sigstr").as("stra"),
-      col("sig").as("siga"), col("docs").as("docsa"))
-    val b = banded.select(col("band"), col("chunk"), col("sigstr").as("strb"),
-      col("sig").as("sigb"), col("docs").as("docsb"))
+    // chunk b = signature bits [64 − (b+1)·width, 64 − b·width)
+    val banded = sigGroups.select(col("sig"), col("docs"),
+      posexplode(array((0 until chunks).map(b =>
+        shiftrightunsigned(col("sig"), 64 - (b + 1) * width).bitwiseAND(lit(mask))): _*))
+        .as(Seq("band", "chunk")))
     // distance filter BEFORE the pair dedup: recomputing the (cheap) Hamming
     // distance once per shared band beats shuffling every candidate row with
-    // its 64-element signatures and doc lists through dropDuplicates —
-    // benchmarked 13× on signature-collision-heavy corpora
-    val cross = a.join(b, Seq("band", "chunk"))
-      .filter(col("stra") < col("strb"))
-      .withColumn("dist", aggregate(zip_with(col("siga"), col("sigb"),
-        (x, y) => abs(x - y)), lit(0), (acc, v) => acc + v))
+    // its doc lists through dropDuplicates
+    val cross = blockPairs(banded, Seq(col("band"), col("chunk")),
+        struct(col("sig"), col("docs")), Int.MaxValue)
+      .select(col("a.sig").as("siga"), col("b.sig").as("sigb"),
+        col("a.docs").as("docsa"), col("b.docs").as("docsb"),
+        bit_count(col("a.sig").bitwiseXOR(col("b.sig"))).cast("long").as("dist"))
       .filter(col("dist") <= maxDist)
-      .dropDuplicates("stra", "strb")
-      .select(explode(crossCombos(col("docsa"), col("docsb"))).as("p"), col("dist"))
-      .select(least(col("p._1"), col("p._2")).as("doc_a"),
-        greatest(col("p._1"), col("p._2")).as("doc_b"), col("dist").cast("long").as("dist"))
+      .dropDuplicates("siga", "sigb")
+      .select(explode(col("docsa")).as("x"), col("docsb"), col("dist"))
+      .select(col("x"), explode(col("docsb")).as("y"), col("dist"))
+      .select(least(col("x"), col("y")).as("doc_a"), greatest(col("x"), col("y")).as("doc_b"),
+        col("dist"))
 
     within.union(cross)
   }
-
-  /** Cross product of two (tiny) arrays. */
-  private def crossCombos(xs: Column, ys: Column): Column =
-    flatten(transform(xs, x => transform(ys, y => struct(x.as("_1"), y.as("_2")))))
 }

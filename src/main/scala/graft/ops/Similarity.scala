@@ -137,7 +137,7 @@ object Similarity {
     // table + one HOF pass per vector). Deliberately NOT persisted: this is
     // the FULL corpus with its embedding vectors — caching it would spill the
     // whole input to executor disk for a 2× saving on a cheap projection
-    // (unlike the candidate-pair persists in Dedup, which are small by
+    // (unlike the candidate-pair checkpoints in Dedup, which are small by
     // construction)
     val tb = explode(array((0 until nTables).map(t =>
       struct(lit(t).as("tbl"), lshBucket(col(vecCol), nBits, t).as("bucket"))): _*))

@@ -137,8 +137,8 @@ object GraftFunctions {
       fn("minhash_sig", "graft.plans.MinhashSignatureExpression", 3,
         c => MinhashSignatureExpression(c.head, intArg(c(1), "minhash_sig"),
           intArg(c(2), "minhash_sig"))),
-      fn("simhash_bits", "graft.plans.SimhashBitsExpression", 1,
-        c => SimhashBitsExpression(c.head)),
+      fn("simhash", "graft.plans.SimhashExpression", 1,
+        c => SimhashExpression(c.head)),
       fn("repetition_stats", "graft.plans.RepetitionStatsExpression", 1,
         c => RepetitionStatsExpression(c.head)),
       fn("lang_scores", "graft.plans.LangScoresExpression", 1,

@@ -12,7 +12,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * same move that took trigram language-id from 7.8 s to 0.3 s per 500 docs.
   *
   * Semantics are bit-identical to the column versions they replace
-  * (`Dedup.shingles`/`minhashSignature`/`simhashBits` before round 2):
+  * (`Dedup.shingles`/`minhashSignature`/`simhashBits` before round 2;
+  * `Dedup.simhash` packs those SimHash bits into one long):
   * tokenization is UTF8String trim/lowercase + split on the RE2-equivalent
   * whitespace class `[ \\t\\n\\f\\r]+` with limit −1 (explicit class rather
   * than Java's `\\s`, which also matches U+000B and would diverge from the
@@ -170,7 +171,10 @@ object TextHash {
     new GenericArrayData(sig)
   }
 
-  def simhashBitsArray(input: UTF8String): ArrayData = {
+  /** 64-bit SimHash, bit j of the signature (MSB first) = sign of the sum
+    * of ±1 votes from bit j of each distinct token's xxhash64 (a tie votes
+    * 1), packed into one long. */
+  def simhash(input: UTF8String): Long = {
     val toks = tokens(input)
     val seen = new java.util.HashSet[String](toks.length * 2)
     val counts = new Array[Int](64)
@@ -187,10 +191,13 @@ object TextHash {
       }
       t += 1
     }
-    val bits = new Array[Int](64)
+    var sig = 0L
     var j = 0
-    while (j < 64) { bits(j) = if (counts(j) >= 0) 1 else 0; j += 1 }
-    new GenericArrayData(bits)
+    while (j < 64) {
+      if (counts(j) >= 0) sig |= 1L << (63 - j)
+      j += 1
+    }
+    sig
   }
 
   def lshBucketOf(arr: ArrayData, nBits: Int, table: Int, elemIsFloat: Boolean): Long = {
@@ -344,24 +351,24 @@ case class LshBucketExpression(child: Expression, nBits: Int, table: Int)
     copy(child = newChild)
 }
 
-/** `simhash_bits(text)` → array<int> of 64 bits: per bit, sign of the sum of
-  * ±1 votes from each distinct token's xxhash64, MSB first (the bit order of
-  * `lpad(bin(h), 64, '0')` in the column version it replaces). */
-case class SimhashBitsExpression(child: Expression)
+/** `simhash(text)` → bigint: the 64-bit SimHash of the distinct tokens
+  * ([[TextHash.simhash]]), bit 63 first — the one signature encoding of the
+  * SimHash miner, the streaming near-dup key and the q24 signature pin. */
+case class SimhashExpression(child: Expression)
     extends UnaryExpression with ExpectsInputTypes {
   override def inputTypes = Seq(StringType)
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
+  override def dataType: DataType = LongType
   override def nullable: Boolean = true
-  override def prettyName: String = "simhash_bits"
+  override def prettyName: String = "simhash"
 
   override def nullSafeEval(input: Any): Any =
-    TextHash.simhashBitsArray(input.asInstanceOf[UTF8String])
+    TextHash.simhash(input.asInstanceOf[UTF8String])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.plans.TextHash$$.MODULE$$.simhashBitsArray($c);")
+      s"${ev.value} = graft.plans.TextHash$$.MODULE$$.simhash($c);")
 
-  override protected def withNewChildInternal(newChild: Expression): SimhashBitsExpression =
+  override protected def withNewChildInternal(newChild: Expression): SimhashExpression =
     copy(child = newChild)
 }
 

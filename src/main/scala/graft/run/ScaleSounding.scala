@@ -58,66 +58,26 @@ object ScaleSounding {
     ()
   }
 
-  /** The heavy family, parameterized by the sf0.1-equivalents multiple so
-    * knobs that DOCUMENT corpus-proportional scaling actually scale. */
-  def heavyQueries(scaleMult: Int): Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
-    "q22_jaccard_pairs" -> ((s: SparkSession, dir: String) =>
-      graft.ops.Dedup.jaccardPairs(graft.SparkEntry.docsWithDups(s, dir),
-        threshold = 0.8, n = 3, maxDf = 2000)),
-    "q23_minhash_pairs" -> ((s: SparkSession, dir: String) =>
-      graft.ops.Dedup.minhashDupPairs(graft.SparkEntry.docsWithDups(s, dir),
-        threshold = 0.8, k = 32, bands = 8)),
-    "q24_simhash_pairs" -> ((s: SparkSession, dir: String) =>
-      graft.ops.Dedup.simhashDupPairs(graft.SparkEntry.docsWithDups(s, dir), maxDist = 3)),
-    "q28_dedup_clusters" -> ((s: SparkSession, dir: String) =>
-      graft.ops.Dedup.dupClusters(graft.ops.Dedup.jaccardPairs(
-        graft.SparkEntry.docsWithDups(s, dir), threshold = 0.8, n = 3, maxDf = 2000))),
-    "q58_line_dedup" -> ((s: SparkSession, dir: String) =>
-      graft.ops.Dedup.lineDedup(graft.SparkEntry.docsWithLines(s, dir))),
-    "q64_semdedup" -> ((s: SparkSession, dir: String) => {
-      val emb = s.read.parquet(s"$dir/embeddings.parquet").select(col("vec_id"), col("embedding"))
-      val perturbed = emb.select((col("vec_id") + 1000000).as("vec_id"),
-        transform(col("embedding"), (v, i) =>
-          (v + when(i === 0, lit(0.01f)).otherwise(lit(0.0f))).cast("float")).as("embedding"))
-      graft.ops.Kmeans.semDedupPairs(emb.union(perturbed),
-        k = 8 * scaleMult, iters = 5, threshold = 0.98)
-    }),
-    "q69_cluster_sample" -> ((s: SparkSession, dir: String) =>
-      graft.ops.Kmeans.clusterBalancedSample(
-        s.read.parquet(s"$dir/embeddings.parquet").select("vec_id", "embedding"),
-        k = 8, iters = 5, cap = 20)),
-    // round-5 additions: the FastSS pair miner (the only new op with a
-    // candidate-pair fan-out to bound), the KMV sketch (must stay k-bounded
-    // after the distincts), and the two pure scan-shape ops as linear
-    // controls
-    "q87_fuzzy_link" -> ((s: SparkSession, dir: String) => {
-      val toks = s.read.parquet(s"$dir/documents.parquet")
-        .select(explode(split(lower(trim(col("text"))), "\\s+")).as("w"))
-        .filter(length(col("w")) > 0).distinct().localCheckpoint()
-      val p = (length(col("w")) / lit(2)).cast("int")
-      val variants = toks.filter(length(col("w")) >= 4)
-        .select(concat(col("w").substr(lit(1), p),
-          col("w").substr(p + lit(2), length(col("w")))).as("w"))
-      graft.ops.FuzzyLink.matchEd1(toks.union(variants).distinct(), toks, "w", "w")
-    }),
-    "q90_theta_intersect" -> ((s: SparkSession, dir: String) => {
-      val d = s.read.parquet(s"$dir/documents.parquet")
-      graft.ops.ThetaSketch.intersectEstimate(
-        d.select(explode(graft.ops.Dedup.shingles(col("text"))).as("x")), "x",
-        d.select(concat(col("text"), lit(" extratoken")).as("text"))
-          .select(explode(graft.ops.Dedup.shingles(col("text"))).as("x")), "x",
-        k = 256)
-    }),
-    "q89_chunk_windows" -> ((s: SparkSession, dir: String) =>
-      graft.ops.Chunker.chunk(
-        s.read.parquet(s"$dir/documents.parquet").select("doc_id", "text"),
-        window = 20, stride = 15, minTail = 5)),
-    "q93_weighted_sample" -> ((s: SparkSession, dir: String) =>
-      graft.ops.Sampling.weightedTopK(
-        s.read.parquet(s"$dir/documents.parquet")
-          .filter(length(trim(col("text"))) > 0)
-          .select(col("doc_id"), size(split(trim(col("text")), "\\s+")).as("w")),
-        k = 200)))
+  /** The heavy family, run exactly as [[graft.SparkEntry.queries]]
+    * defines it — except q64, whose k-means k scales with
+    * the corpus (`scaleMult` sf0.1-equivalents). The last four are the
+    * FastSS pair miner (a candidate-pair fan-out to bound), the KMV sketch
+    * (must stay k-bounded after the distincts) and two pure scan-shape ops
+    * as linear controls. */
+  def heavyQueries(scaleMult: Int): Seq[(String, (SparkSession, String) => DataFrame)] =
+    Seq("q22_jaccard_pairs", "q23_minhash_pairs", "q24_simhash_pairs", "q28_dedup_clusters",
+      "q58_line_dedup", "q64_semdedup", "q69_cluster_sample", "q87_fuzzy_link",
+      "q90_theta_intersect", "q89_chunk_windows", "q93_weighted_sample").map {
+      case n @ "q64_semdedup" => n -> ((s: SparkSession, dir: String) => {
+        val emb = s.read.parquet(s"$dir/embeddings.parquet").select(col("vec_id"), col("embedding"))
+        val perturbed = emb.select((col("vec_id") + 1000000).as("vec_id"),
+          transform(col("embedding"), (v, i) =>
+            (v + when(i === 0, lit(0.01f)).otherwise(lit(0.0f))).cast("float")).as("embedding"))
+        graft.ops.Kmeans.semDedupPairs(emb.union(perturbed),
+          k = 8 * scaleMult, iters = 5, threshold = 0.98)
+      })
+      case n => n -> graft.SparkEntry.queries(n)
+    }
 
   private def median(xs: Seq[Double]): Double = {
     val s = xs.sorted

@@ -36,21 +36,13 @@ object StreamingOps {
     * Hamming ≤ k search needs pairwise verification and stays a batch
     * concern. The streaming role is cheap high-precision suppression with
     * state bounded by the horizon, same eviction contract as `dedupStream`.
-    * The state key is the xxhash64 of the bit pattern (8 bytes/doc). */
+    * The state key is the signature itself, one long (8 bytes/doc). */
   def nearDedupStream(docs: DataFrame, tsCol: String = "event_ts",
-                      textCol: String = "text", horizon: String = "1 hour"): DataFrame = {
-    // state key = the 64 signature bits packed into ONE long (injective —
-    // it IS the simhash value), in a codegen projection; the previous
-    // xxhash64-of-comma-joined-bits built a 64-element string per doc for
-    // the same equality semantics
-    val bits = graft.ops.Dedup.simhashBits(col(textCol))
-    val packed = (1 to 64).map(j =>
-      element_at(bits, j).cast("long") * lit(1L << (64 - j))).reduce(_ + _)
-    docs.withColumn("simhash_key", packed)
+                      textCol: String = "text", horizon: String = "1 hour"): DataFrame =
+    docs.withColumn("simhash_key", graft.ops.Dedup.simhash(col(textCol)))
       .withWatermark(tsCol, horizon)
       .dropDuplicatesWithinWatermark("simhash_key")
       .drop("simhash_key")
-  }
 
   /** Streaming corpus-clean: the scan-side curation gates — language,
     * quality score, Gopher repetition rules, benchmark contamination, PII

@@ -56,7 +56,11 @@ class CrfTagExpressionSpec extends AnyFunSuite {
           org.apache.spark.sql.GraftColumnBridge.expression(col("text")), 16, 3)))
       .head().getSeq[Long](0)
     assert(sqlSig === apiSig)
-    assert(spark.sql("SELECT size(simhash_bits(text)) FROM kdocs").head().getInt(0) === 64)
+    // SQL simhash == the Scala-API dedup path's signature
+    val sqlSim = spark.sql("SELECT simhash(text) FROM kdocs").head().getLong(0)
+    val apiSim = spark.sql("SELECT text FROM kdocs")
+      .select(graft.ops.Dedup.simhash(col("text"))).head().getLong(0)
+    assert(sqlSim === apiSim)
     val lang = spark.sql("SELECT lang_scores('the house and the garden are near the street').lang")
       .head().getString(0)
     assert(lang === "en")

@@ -62,7 +62,7 @@ class TextHashKernelsSpec extends AnyFunSuite {
     }
   }
 
-  test("simhash_bits == HOF formulation") {
+  test("simhash == HOF formulation packed MSB-first into a long") {
     def hofBits(text: org.apache.spark.sql.Column) = {
       val hs = transform(array_distinct(split(lower(trim(text)), "\\s+")), t => xxhash64(t))
       def bits(h: org.apache.spark.sql.Column) =
@@ -71,9 +71,13 @@ class TextHashKernelsSpec extends AnyFunSuite {
         (acc, h) => zip_with(acc, slice(bits(h), 1, 64), _ + _))
       transform(counts, c => when(c >= 0, lit(1)).otherwise(lit(0)))
     }
-    val rows = df.select(graft.ops.Dedup.simhashBits($"text").as("k"), hofBits($"text").as("h")).collect()
+    // bit 1 of the HOF array is bit 63 of the long
+    def packed(bits: org.apache.spark.sql.Column) =
+      aggregate(bits, lit(0L), (acc, b) => shiftleft(acc, 1).bitwiseOR(b.cast("long")))
+    val rows = df.select(graft.ops.Dedup.simhash($"text").as("k"),
+      packed(hofBits($"text")).as("h")).collect()
     rows.zip(samples).foreach { case (r, s) =>
-      assert(r.getSeq[Int](0) === r.getSeq[Int](1), s"text='$s'")
+      assert(r.getLong(0) === r.getLong(1), s"text='$s'")
     }
   }
 
@@ -81,7 +85,7 @@ class TextHashKernelsSpec extends AnyFunSuite {
     val r = Seq(Option.empty[String]).toDF("text")
       .select(graft.ops.Dedup.shingles($"text", 3),
         graft.ops.Dedup.minhashSignature($"text"),
-        graft.ops.Dedup.simhashBits($"text")).collect()(0)
+        graft.ops.Dedup.simhash($"text")).collect()(0)
     assert(r.isNullAt(0) && r.isNullAt(1) && r.isNullAt(2))
   }
 
@@ -122,7 +126,7 @@ class TextHashKernelsSpec extends AnyFunSuite {
           graft.ops.Dedup.shingles($"text", 3).as("sh"),
           graft.ops.Dedup.shingleHashes($"text", 3).as("shh"),
           graft.ops.Dedup.minhashSignature($"text", 16).as("mh"),
-          graft.ops.Dedup.simhashBits($"text").as("simh"),
+          graft.ops.Dedup.simhash($"text").as("simh"),
           graft.ops.LangId.detect($"text").as("lang"))
         .collect()
       assert(out.length === samples.length)
