@@ -135,7 +135,7 @@ final class CrfDecoder(val model: CrfModel, val vectors: Option[VectorSource] = 
     }
     if (crfToks.isEmpty) return IndexedSeq.empty
     val psi = potentials(crfToks)
-    val marg = Inference.marginalsScaled(psi, model.transW)
+    val marg = Inference.marginalsScaledExp(psi, model.expTransW)
     SpanDecode.fromMarginals(model, text, Featurizer.tokensWithoutCls(tokens), marg)
   }
 }

@@ -19,6 +19,14 @@ case class CrfModel(
   @transient lazy val labelIndex: Map[String, Int] = labels.zipWithIndex.toMap
   def numLabels: Int = labels.length
 
+  /** `exp(transW)`, the scaled-domain decode's transition factors — once per
+    * model instance (on Spark: once per executor's broadcast value). */
+  @transient lazy val expTransW: Array[Array[Double]] = Inference.expOf(transW)
+
+  /** The entity name of each label (`label.drop(2)`: "B-PER" → "PER"), by
+    * label index — what BILOU confidence pooling compares. */
+  @transient lazy val entityNames: Array[String] = labels.map(_.drop(2)).toArray
+
   /** Node log-potentials for one token: ψ(y) = Σ_atoms w(attr, y) · weight. */
   def nodePotentials(atoms: Array[FeatAtom]): Array[Double] = {
     val psi = new Array[Double](numLabels)

@@ -78,7 +78,18 @@ object Inference {
     *
     * Potentials are max-shifted per row before exponentiation so `exp` never
     * overflows regardless of weight magnitudes. */
-  def marginalsScaled(psi: Array[Array[Double]], trans: Array[Array[Double]]): Array[Array[Double]] = {
+  def marginalsScaled(psi: Array[Array[Double]], trans: Array[Array[Double]]): Array[Array[Double]] =
+    marginalsScaledExp(psi, expOf(trans))
+
+  /** Element-wise `exp` of a transition matrix — the `eTrans` argument of
+    * [[marginalsScaledExp]]; a decoder computes it once per model
+    * (`CrfModel.expTransW`), not once per sentence. */
+  def expOf(trans: Array[Array[Double]]): Array[Array[Double]] =
+    trans.map(_.map(math.exp))
+
+  /** [[marginalsScaled]] over pre-exponentiated transitions
+    * `eTrans = expOf(trans)`. */
+  def marginalsScaledExp(psi: Array[Array[Double]], eTrans: Array[Array[Double]]): Array[Array[Double]] = {
     val T = psi.length
     if (T == 0) return Array.empty
     val L = psi(0).length
@@ -92,13 +103,6 @@ object Inference {
       y = 0
       while (y < L) { ePsi(t)(y) = math.exp(psi(t)(y) - mx); y += 1 }
       t += 1
-    }
-    val eTrans = Array.ofDim[Double](L, L)
-    var i = 0
-    while (i < L) {
-      var j = 0
-      while (j < L) { eTrans(i)(j) = math.exp(trans(i)(j)); j += 1 }
-      i += 1
     }
     val alpha = Array.ofDim[Double](T, L)
     val beta = Array.ofDim[Double](T, L)

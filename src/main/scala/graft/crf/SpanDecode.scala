@@ -40,10 +40,11 @@ object SpanDecode {
     while (i < p.length) { if (p(i) > p(best)) best = i; i += 1 }
     val label = model.labels(best)
     if (model.config.bilou) {
-      val name = label.drop(2)
+      val names = model.entityNames
+      val name = names(best)
       var conf = 0.0
       i = 0
-      while (i < p.length) { if (model.labels(i).drop(2) == name) conf += p(i); i += 1 }
+      while (i < p.length) { if (names(i) == name) conf += p(i); i += 1 }
       (label, conf)
     } else (label, p(best))
   }

@@ -1,7 +1,8 @@
 package graft.kg
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 import graft.crf.{CrfConfig, CrfModel}
 import graft.ops.Dedup.{blockPairs, explodeOrderedPairs}
 import graft.plans.GraftFunctions.crf_tag
@@ -16,7 +17,14 @@ import graft.plans.GraftFunctions.crf_tag
   *    Catalyst prunes columns through the decode (no encoder round-trips)
   *  - explicit `repartition(pmod(xxhash64(url), P))` before the heavy CRF
   *    stage: deterministic placement, no skew from source file layout
-  *  - alias linking is a broadcast hash join (dictionary ≪ mentions)
+  *  - alias linking is a broadcast hash join on (surface, kind) against a
+  *    driver-built local table (dictionary ≪ mentions); the rank-1 pick is
+  *    an `array_max` over the mention's candidates on the same row, so the
+  *    link stage adds no exchange, sort or aggregate to the decode stage
+  *  - relation matching is ONE native expression per sentence,
+  *    `relation_triples(text, ms)`, whose body is the page-local matcher
+  *    ([[PageLocal.relationTriples]]) — one implementation for batch,
+  *    streaming and serving
   *  - triple dedup is a two-phase aggregation with url as the natural salt
   *    (hot (s,p,o) keys — e.g. popular entities on hot domains — spread
   *    across reducers by url first, then merge map-side)
@@ -62,33 +70,29 @@ object KgPipeline {
   }
 
   // -------------------------------------------------------------------- links
-  /** Alias-dictionary entity linking: broadcast hash join on the lowercased
-    * surface, kind must match, then rank-1 per mention by score.
+  /** Alias-dictionary entity linking: broadcast hash join of each mention on
+    * (lowercased surface, entity kind) against [[aliasDf]], then the rank-1
+    * candidate picked on the mention row itself —
+    * `array_max(transform(cands, c -> struct(c.prior * confidence, c.entity_id)))`:
+    * highest score, ties to the larger entity_id (struct ordering),
+    * deterministic across partitionings. Mentions with no candidate drop.
     *
-    * Rank-1 selection uses `max(struct(score, …))` instead of a row_number
-    * window: a hash aggregate with map-side partial combine — no global sort
-    * of the mention stream, which benchmarked as the pipeline's second-worst
-    * stage. Ties on score break to the larger entity_id (struct ordering) —
-    * deterministic across partitionings. (Window rank-k stays the tool for
-    * k > 1; see SparkEntry q04.) */
+    * No exchange, sort or aggregate: the pick runs inside the decode stage.
+    * One output row per mention row, so the pick is rank-1 per
+    * (url, sent_id, start) whenever each url appears once in the input —
+    * url is the pipeline's page key (a repeated url would repeat its
+    * mentions, and [[triples]]' join to the sentences multiplies them
+    * already). */
   def links(mentions: DataFrame, alias: DataFrame): DataFrame = {
-    val scored = mentions
+    val top = array_max(transform(alias("cands"), c =>
+      struct((c("prior") * mentions("confidence")).as("score"), c("entity_id").as("entity_id"))))
+    mentions
       .join(broadcast(alias), lower(mentions("value")) === alias("alias") &&
-        substring(alias("entity_id"), 1, 3) === mentions("entity"), "inner")
-      .withColumn("score", col("prior") * col("confidence"))
-    scored
-      // ONE exchange on (url, sent_id) serves this whole tail: hash
-      // partitioning on a SUBSET of the grouping keys satisfies the agg's
-      // clustered distribution, and the partitioning survives into the
-      // downstream per-sentence grouping and the sentences join in
-      // `triples` — 3 exchanges collapse to 1 (+ the sents side)
-      .repartition(col("url"), col("sent_id"))
-      .groupBy(col("url"), col("sent_id"), col("start"))
-      .agg(max(struct(col("score"), col("entity_id"), col("end"), col("value"),
-        col("entity"))).as("top"))
-      .select(col("url"), col("sent_id"), col("start"), col("top.end").as("end"),
-        col("top.value").as("value"), col("top.entity").as("entity"),
-        col("top.entity_id").as("entity_id"), col("top.score").as("score"))
+        mentions("entity") === alias("kind"), "inner")
+      .select(mentions("url"), mentions("sent_id"), mentions("start"), mentions("end"),
+        mentions("value"), mentions("entity"), top.as("top"))
+      .select(col("url"), col("sent_id"), col("start"), col("end"), col("value"),
+        col("entity"), col("top.entity_id").as("entity_id"), col("top.score").as("score"))
   }
 
   // ---------------------------------------------------------------- canonical
@@ -160,9 +164,10 @@ object KgPipeline {
   /** One relation pattern: subject kind, object kind, the trigger on the
     * between-text (Left = plain `contains`, Right = regex `rlike`), and the
     * predicate it yields. SINGLE source for both the map-side `canMatch`
-    * pre-filter and the predicate CASE in [[triples]] — deriving them
-    * separately once let an edit to one silently drop triples in the other.
-    * Order matters: first matching pattern wins. */
+    * pre-filter in [[triples]] and the matcher
+    * [[PageLocal.relationTriples]] — deriving them separately once let an
+    * edit to one silently drop triples in the other. Order matters: first
+    * matching pattern wins. */
   final case class RelationPattern(k1: String, k2: String,
                                    trigger: Either[String, String], predicate: String)
 
@@ -176,8 +181,9 @@ object KgPipeline {
 
   /** Relation extraction + salted dedup. Linked mentions are grouped per
     * sentence (collect_list is safe: ≤ a handful of mentions per sentence),
-    * joined back to sentence text, and each ordered pair is matched against
-    * the relation patterns on the text BETWEEN the two mentions. */
+    * joined back to sentence text, and `relation_triples` (the one relation
+    * matcher, [[PageLocal.relationTriples]]) matches each ordered pair on
+    * the text BETWEEN the two mentions. */
   def triples(links: DataFrame, sents: DataFrame): DataFrame = {
     val spark = links.sparkSession
     import spark.implicits._
@@ -185,56 +191,30 @@ object KgPipeline {
     val perSentence = links
       .groupBy($"url", $"sent_id")
       // sort_array: collect_list order depends on shuffle partitioning; the
-      // pair orientation filter below needs text order (start ascending) —
-      // struct comparison is lexicographic, so start must be the first field
-      // (start is unique per sentence — links emits one row per start — so
-      // later fields never even tie-break). The entity KIND is NOT carried:
-      // it is definitionally the first 3 chars of entity_id (the links join
-      // matches on that prefix), so the per-mention structs crossing this
-      // exchange stay one string slimmer.
+      // pair orientation needs text order (start ascending) — struct
+      // comparison is lexicographic, so start must be the first field
+      // (start is unique per sentence — links emits one row per mention —
+      // so later fields never even tie-break). The entity KIND is NOT
+      // carried: it is definitionally the first 3 chars of entity_id (the
+      // links join matches on it), so the per-mention structs crossing
+      // this exchange stay one string slimmer.
       .agg(sort_array(collect_list(struct($"start", $"end", $"entity_id", $"score"))).as("ms"))
       .filter(size($"ms") >= 2)
 
     // only sentences whose text can yield SOME relation pattern need to cross
-    // the join shuffle: `between` is always a substring of `text`, so a
-    // sentence containing none of the trigger phrases can never produce a
+    // the join shuffle: the between-text is always a substring of `text`, so
+    // a sentence containing none of the trigger phrases can never produce a
     // predicate. The filter runs map-side inside the scan (cheap contains +
-    // one regex) and cuts the shuffled sentence bytes — the dominant cost of
-    // this stage — by the corpus' non-relational fraction. Derived from the
-    // SAME relationPatterns table as the predicate CASE below.
+    // one regex) and cuts the shuffled sentence bytes by the corpus'
+    // non-relational fraction. Derived from the SAME relationPatterns table
+    // as the matcher.
     val canMatch = relationPatterns.map(_.trigger).distinct.map {
       case Left(phrase) => $"text".contains(phrase)
       case Right(re)    => $"text".rlike(re)
     }.reduce(_ || _)
-    val joined = perSentence.join(sents.filter(canMatch), Seq("url", "sent_id"))
-
-    val pairs = explodeOrderedPairs(joined, "ms", "url", "text")
-      .select($"url", $"text",
-        $"a.start".as("s1"), $"a.end".as("e1"),
-        substring($"a.entity_id", 1, 3).as("k1"),
-        $"a.entity_id".as("id1"), $"a.score".as("sc1"),
-        $"b.start".as("s2"), $"b.end".as("e2"),
-        substring($"b.entity_id", 1, 3).as("k2"),
-        $"b.entity_id".as("id2"), $"b.score".as("sc2"))
-      .filter($"e1" < $"s2")
-      .withColumn("between", expr("substring(text, e1 + 1, s2 - e1)"))
-
-    val pred = relationPatterns.map { p =>
-      val trig = p.trigger match {
-        case Left(phrase) => $"between".contains(phrase)
-        case Right(re)    => $"between".rlike(re)
-      }
-      ($"k1" === p.k1 && $"k2" === p.k2 && trig, lit(p.predicate))
-    }.foldLeft(Option.empty[org.apache.spark.sql.Column]) {
-      case (None, (cond, out))      => Some(when(cond, out))
-      case (Some(acc), (cond, out)) => Some(acc.when(cond, out))
-    }.get
-
-    val raw = pairs
-      .withColumn("pred", pred)
-      .filter($"pred".isNotNull)
-      .select($"id1".as("subj"), $"pred", $"id2".as("obj"), $"url",
-        least($"sc1", $"sc2").as("conf"))
+    val raw = perSentence.join(sents.filter(canMatch), Seq("url", "sent_id"))
+      .select($"url", inline(relationTriples($"text", $"ms")))
+      .select($"subj", $"pred", $"obj", $"url", $"conf")
 
     // exact two-phase dedup with url as the NATURAL salt: phase 1 groups by
     // (s,p,o,url) — a hot (s,p,o) key is spread across reducers by its many
@@ -261,13 +241,13 @@ object KgPipeline {
     * entity ids of the sentence (`collect_set` + `sort_array` — bounded,
     * a sentence holds ≤ a handful of entities, and sorted so the pair
     * expansion is deterministic at any parallelism). Pairs expand MAP-SIDE
-    * with the same `Dedup.explodeOrderedPairs` as `triples` (no
-    * self-join — the quadratic fan-out never crosses an exchange), and pair
-    * counts aggregate in two map-side-combinable phases: per (a, b, url)
-    * first, then per (a, b) — which yields an EXACT distinct-url count
-    * without `countDistinct`'s Expand doubling the shuffled rows. Entity
-    * marginals and the sentence total are dictionary-sized → broadcast;
-    * nothing in the plan shuffles more than the slim per-sentence sets.
+    * with `Dedup.explodeOrderedPairs` (no self-join — the quadratic fan-out
+    * never crosses an exchange), and pair counts aggregate in two
+    * map-side-combinable phases: per (a, b, url) first, then per (a, b) —
+    * which yields an EXACT distinct-url count without `countDistinct`'s
+    * Expand doubling the shuffled rows. Entity marginals and the sentence
+    * total are dictionary-sized → broadcast; nothing in the plan shuffles
+    * more than the slim per-sentence sets.
     *
     * npmi = ln(p(a,b) / (p(a)·p(b))) / −ln p(a,b) over the universe of
     * entity-bearing sentences, with the p(a,b) = 1 singularity pinned to
@@ -276,10 +256,9 @@ object KgPipeline {
   def cooccurrence(links: DataFrame): DataFrame = {
     val spark = links.sparkSession
     import spark.implicits._
-    // `links` leaves its stage hash-partitioned on (url, sent_id) — this
-    // groupBy reuses that distribution (no new exchange). Referenced three
-    // times below (pairs, marginals, total) → persist, or each reference
-    // re-inlines the upstream CRF decode (the round-2 q53 lesson).
+    // Referenced three times below (pairs, marginals, total) → persist, or
+    // each reference re-inlines the upstream CRF decode (the round-2 q53
+    // lesson).
     val perSent = links.groupBy($"url", $"sent_id")
       .agg(sort_array(collect_set($"entity_id")).as("ents"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -349,8 +328,28 @@ object KgPipeline {
   def trainModel(seed: Long = 42L, nTrain: Int = 400): CrfModel =
     graft.crf.Trainer.trainExamples(PagesGen.trainingExamples(seed, nTrain), pipelineConfig)
 
+  /** The alias dictionary as one row per (alias, kind) with its candidates,
+    * `cands: array<struct<prior, entity_id>>` — [[PageLocal.aliasIndex]]
+    * (the one alias grouping) as a local relation: built on the driver,
+    * broadcast by [[links]] without a Spark job. */
   def aliasDf(spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    Synth.aliasDict.toDF("alias", "entity_id", "prior")
+    val rows = PageLocal.aliasIndex.toSeq.map { case ((alias, kind), cands) =>
+      Row(alias, kind, cands.map(c => Row(c.prior, c.entityId)))
+    }
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), aliasSchema)
+  }
+
+  private val aliasSchema = StructType(Seq(
+    StructField("alias", StringType, nullable = false),
+    StructField("kind", StringType, nullable = false),
+    StructField("cands", ArrayType(StructType(Seq(
+      StructField("prior", DoubleType, nullable = false),
+      StructField("entity_id", StringType, nullable = false))), containsNull = false),
+      nullable = false)))
+
+  /** `relation_triples(text, ms)` as a Column (see [[graft.plans.RelationTriplesExpression]]). */
+  private def relationTriples(text: Column, ms: Column): Column = {
+    import org.apache.spark.sql.GraftColumnBridge.{column, expression}
+    column(graft.plans.RelationTriplesExpression(expression(text), expression(ms)))
   }
 }

@@ -6,19 +6,23 @@ import graft.crf.CrfDecoder
   * → in-sentence relation matching — as plain Scala over one sentence.
   * ONE implementation shared by every non-batch surface (streaming
   * micro-batches via `streaming.StreamingTriples`, request/response via
-  * `run.ServeCli /triples`), mirroring the batch DataFrame stages exactly:
-  * same alias dictionary and max-struct tie-break order, same sorted pair
-  * orientation, same first-match `KgPipeline.relationPatterns`, same
-  * `least(conf)`. StreamingTriplesSpec pins this implementation equal to
-  * batch `KgPipeline.triples` on 200 generated pages.
+  * `run.ServeCli /triples`). The batch stages share its pieces rather than
+  * mirror them: `KgPipeline.aliasDf` is [[aliasIndex]] as a table, and
+  * `KgPipeline.triples` runs [[relationTriples]] through the native
+  * `relation_triples` expression. StreamingTriplesSpec pins this
+  * implementation equal to batch `KgPipeline.triples` on generated pages,
+  * including pages with characters outside the Basic Multilingual Plane.
   */
 object PageLocal {
 
   case class Linked(start: Int, end: Int, entity: String,
                     entityId: String, score: Double)
   case class LocalTriple(subj: String, pred: String, obj: String, conf: Double)
+  /** One alias candidate: the entity it may name and the alias prior. */
+  case class Candidate(prior: Double, entityId: String)
 
   type CompiledPatterns = Seq[(KgPipeline.RelationPattern, java.util.regex.Pattern)]
+  type AliasIndex = Map[(String, String), IndexedSeq[Candidate]]
 
   /** Right-triggers compiled once (per partition / per server). */
   def compilePatterns(
@@ -30,35 +34,39 @@ object PageLocal {
       })
     }
 
-  /** alias surface → candidate (entity_id, prior) list — the KB-scale side
-    * that the batch path broadcasts. */
-  def aliasIndex: Map[String, Seq[(String, Double)]] =
-    Synth.aliasDict.groupBy(_.alias)
-      .map { case (a, xs) => a -> xs.map(x => (x.entityId, x.prior)) }
+  /** The entity kind of an entity id: its 3-char prefix ("PER:…" → "PER"). */
+  def kindOf(entityId: String): String = entityId.take(3)
+
+  /** (alias surface, entity kind) → candidates — the KB-scale side that the
+    * batch path broadcasts (`KgPipeline.aliasDf` is this map as rows). A
+    * lookup by (surface, mention kind) returns only kind-compatible
+    * entities. */
+  def aliasIndex: AliasIndex =
+    Synth.aliasDict.groupBy(a => (a.alias, kindOf(a.entityId)))
+      .map { case (k, xs) => k -> xs.map(x => Candidate(x.prior, x.entityId)) }
 
   /** Decode one sentence and link mentions (inner semantics — unlinked
-    * mentions drop; rank-1 by the batch max-struct order (score, id)),
-    * sorted in the batch pair orientation. */
-  def linkSentence(decoder: CrfDecoder, sent: String,
-                   alias: Map[String, Seq[(String, Double)]]): Seq[Linked] =
+    * mentions drop; rank-1 by the batch order (score, entity_id)), sorted
+    * in the batch pair orientation. */
+  def linkSentence(decoder: CrfDecoder, sent: String, alias: AliasIndex): IndexedSeq[Linked] =
     decoder.process(sent).flatMap { sp =>
       // Locale.ROOT: Spark's lower() is locale-independent; a default-locale
       // toLowerCase diverges on Turkish-locale JVMs (İ/ı) and breaks parity
-      val cands = alias.getOrElse(sp.value.toLowerCase(java.util.Locale.ROOT), Nil)
-        .filter(_._1.take(3) == sp.entity)
-      if (cands.isEmpty) None
-      else {
-        val (id, prior) = cands.maxBy { case (eid, pr) => (pr * sp.confidence, eid) }
-        Some(Linked(sp.start, sp.end, sp.entity, id, prior * sp.confidence))
+      alias.get((sp.value.toLowerCase(java.util.Locale.ROOT), sp.entity)).map { cands =>
+        val best = cands.maxBy(c => (c.prior * sp.confidence, c.entityId))
+        Linked(sp.start, sp.end, sp.entity, best.entityId, best.prior * sp.confidence)
       }
     }.sortBy(m => (m.start, m.end, m.entity, m.entityId, m.score))
 
-  /** All relation triples of one sentence (first matching pattern wins,
-    * conf = min of the pair's link scores). */
-  def sentenceTriples(decoder: CrfDecoder, sent: String,
-                      alias: Map[String, Seq[(String, Double)]],
-                      compiled: CompiledPatterns): Iterator[LocalTriple] = {
-    val linked = linkSentence(decoder, sent, alias)
+  /** The relation triples of one sentence's linked mentions, `linked`
+    * sorted by start: every ordered pair (m1 before m2, `m1.end < m2.start`)
+    * is matched on the text between the two mentions against the relation
+    * patterns (first match wins), conf = min of the pair's link scores.
+    * Offsets are UTF-16 code-unit indices into `sent`, as `crf_tag` emits
+    * them. The one relation matcher: [[sentenceTriples]] and the batch
+    * `relation_triples` expression both run it. */
+  def relationTriples(sent: String, linked: IndexedSeq[Linked],
+                      compiled: CompiledPatterns): Iterator[LocalTriple] =
     for {
       i <- linked.indices.iterator
       j <- ((i + 1) until linked.length).iterator
@@ -72,5 +80,10 @@ object PageLocal {
       }
     } yield LocalTriple(m1.entityId, hit._1.predicate, m2.entityId,
       math.min(m1.score, m2.score))
-  }
+
+  /** All relation triples of one sentence: [[linkSentence]] then
+    * [[relationTriples]]. */
+  def sentenceTriples(decoder: CrfDecoder, sent: String, alias: AliasIndex,
+                      compiled: CompiledPatterns): Iterator[LocalTriple] =
+    relationTriples(sent, linkSentence(decoder, sent, alias), compiled)
 }

@@ -184,7 +184,7 @@ object Dedup {
     * (interpreted eval — measured ~2× slower on the multi-million-row pair
     * streams of the jaccard/containment miners). The one pair-expansion
     * helper: [[blockPairs]], the SimHash same-signature pairs and the KG
-    * triples/cooccurrence stages all use it. */
+    * cooccurrence stage all use it. */
   private[graft] def explodeOrderedPairs(grouped: DataFrame, listCol: String,
                                          keep: String*): DataFrame = {
     val kept = keep.map(col)

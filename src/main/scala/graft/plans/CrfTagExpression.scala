@@ -11,6 +11,11 @@ import graft.crf.{CrfDecoder, CrfModel}
 
 /** `crf_tag(text)` as a native Catalyst expression: runs the CRF decoder on a
   * string column and returns `array<struct<start,end,value,entity,confidence>>`.
+  * `start`/`end` are UTF-16 code-unit offsets into `text` (Java `String`
+  * indices, as `RuleTokenizer` walks `charAt`), not the code-point positions
+  * Spark's `substring` counts: the two differ on text outside the Basic
+  * Multilingual Plane (emoji), so cut `text` at these offsets on the JVM
+  * string, as `relation_triples` does.
   *
   * This is the ONE Spark-side mention decode: `KgPipeline.mentions`
   * (`inline(crf_tag(text))`), the streaming window counts and SQL

@@ -1,0 +1,71 @@
+package graft.plans
+
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
+import graft.kg.PageLocal
+
+/** `relation_triples(text, ms)` as a native Catalyst expression: the
+  * relation triples of one sentence `text` from its linked mentions `ms`
+  * (`array<struct<start, end, entity_id, score>>`, sorted by start), as
+  * `array<struct<subj, pred, obj, conf>>`.
+  *
+  * The body is [[graft.kg.PageLocal.relationTriples]] — the same pair
+  * orientation, `end < start` filter, first-match `KgPipeline.relationPatterns`
+  * and min-score conf as the page-local surfaces — so batch `KgPipeline.triples`
+  * cannot drift from them. The text between two mentions is cut with Java
+  * `String.substring`, in the UTF-16 code-unit offsets `crf_tag` emits. The
+  * mention kind is `PageLocal.kindOf(entity_id)`, as in the alias table.
+  *
+  * Codegen follows `crf_tag`: a direct call into the kernel through a
+  * reference object, no interpreted `eval` hop.
+  */
+case class RelationTriplesExpression(left: Expression, right: Expression)
+    extends BinaryExpression with ExpectsInputTypes {
+  override def inputTypes = Seq(StringType, RelationTriplesExpression.mentionArrayType)
+  override def dataType: DataType = RelationTriplesExpression.tripleArrayType
+  override def prettyName: String = "relation_triples"
+
+  @transient private lazy val compiled = PageLocal.compilePatterns()
+
+  override def nullSafeEval(text: Any, ms: Any): Any =
+    evalSentence(text.asInstanceOf[UTF8String], ms.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val ref = ctx.addReferenceObj("relationTriples", this, classOf[RelationTriplesExpression].getName)
+    nullSafeCodeGen(ctx, ev, (t, m) => s"${ev.value} = $ref.evalSentence($t, $m);")
+  }
+
+  /** The kernel — public so the generated code can call it directly. */
+  def evalSentence(text: UTF8String, ms: ArrayData): ArrayData = {
+    val linked = IndexedSeq.tabulate(ms.numElements()) { i =>
+      val m = ms.getStruct(i, 4)
+      val id = m.getUTF8String(2).toString
+      PageLocal.Linked(m.getInt(0), m.getInt(1), PageLocal.kindOf(id), id, m.getDouble(3))
+    }
+    new GenericArrayData(PageLocal.relationTriples(text.toString, linked, compiled).map { t =>
+      InternalRow(UTF8String.fromString(t.subj), UTF8String.fromString(t.pred),
+        UTF8String.fromString(t.obj), t.conf)
+    }.toArray[Any])
+  }
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): RelationTriplesExpression =
+    copy(left = newLeft, right = newRight)
+}
+
+object RelationTriplesExpression {
+  val mentionArrayType: DataType = ArrayType(StructType(Seq(
+    StructField("start", IntegerType),
+    StructField("end", IntegerType),
+    StructField("entity_id", StringType),
+    StructField("score", DoubleType))))
+  val tripleArrayType: DataType = ArrayType(StructType(Seq(
+    StructField("subj", StringType, nullable = false),
+    StructField("pred", StringType, nullable = false),
+    StructField("obj", StringType, nullable = false),
+    StructField("conf", DoubleType, nullable = false))), containsNull = false)
+}

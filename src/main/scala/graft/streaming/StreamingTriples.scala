@@ -19,11 +19,11 @@ import graft.kg.Page
   * aggregation is stateful, and that is a standard watermarked windowed
   * aggregation with eviction.
   *
-  * The per-page Scala logic mirrors the batch stages exactly (same decoder,
-  * same alias dictionary and rank-1 tie-break struct order, same sorted
-  * pair orientation, same first-match relation patterns from the SHARED
-  * `KgPipeline.relationPatterns` table, same `least(conf)`); the
-  * StreamingTriplesSpec parity gate holds stream output equal to batch
+  * The per-page Scala logic is the batch stages' own: the same decoder, the
+  * same (alias, kind) index `KgPipeline.aliasDf` is built from, the same
+  * rank-1 order (score, entity_id), and the same relation matcher
+  * (`PageLocal.relationTriples`, which batch runs as `relation_triples`);
+  * the StreamingTriplesSpec parity gate holds stream output equal to batch
   * `KgPipeline.triples` on the same pages.
   */
 object StreamingTriples {
@@ -37,7 +37,7 @@ object StreamingTriples {
     val spark = pages.sparkSession
     import spark.implicits._
     val bcModel = spark.sparkContext.broadcast(model)
-    // alias surface → candidate (entity_id, prior) list; KB-scale broadcast
+    // (alias surface, kind) → candidates; KB-scale broadcast
     val bcAlias = spark.sparkContext.broadcast(graft.kg.PageLocal.aliasIndex)
 
     // COLUMN filter, not a typed lambda: pushes to the source and avoids

@@ -55,6 +55,32 @@ class InferenceSpec extends AnyFunSuite {
       assert(math.abs(logMarg(t)(y) - scaled(t)(y)) < 1e-12, s"($t)($y)")
   }
 
+  test("cached exp(transitions) decode path is bit-identical to the per-call exp") {
+    val rnd = new scala.util.Random(7)
+    val labels = IndexedSeq("O", "B-PER", "I-PER", "L-PER", "U-PER", "B-ORG", "L-ORG", "U-LOC")
+    val L = labels.length
+    val trans = Array.fill(L, L)(rnd.nextGaussian() * 3)
+    val model = CrfModel(labels, Map.empty, trans, CrfConfig())
+    assert(model.expTransW eq model.expTransW, "exp(transW) is computed once per model")
+    def bits(m: Array[Array[Double]]) = m.map(_.map(java.lang.Double.doubleToRawLongBits).toSeq).toSeq
+    for (len <- Seq(1, 2, 7, 40)) {
+      val psi = Array.fill(len, L)(rnd.nextGaussian() * 10)
+      val cached = Inference.marginalsScaledExp(psi, model.expTransW)
+      assert(bits(cached) === bits(Inference.marginalsScaled(psi, trans)), s"T=$len")
+      // BILOU pooling over the cached entity names: the same sum, in the
+      // same order, as pooling over `label.drop(2)` per label
+      for (t <- 0 until len) {
+        val (label, conf) = SpanDecode.mostLikelyEntity(model, cached, t)
+        val p = cached(t)
+        val best = p.indices.reduceLeft((b, i) => if (p(i) > p(b)) i else b)
+        var ref = 0.0
+        p.indices.foreach(i => if (labels(i).drop(2) == labels(best).drop(2)) ref += p(i))
+        assert(label === labels(best))
+        assert(java.lang.Double.doubleToRawLongBits(conf) === java.lang.Double.doubleToRawLongBits(ref))
+      }
+    }
+  }
+
   test("single-token chain") {
     val psi = Array(Array(0.2, 1.0))
     val trans = Array(Array(0.0, 0.0), Array(0.0, 0.0))

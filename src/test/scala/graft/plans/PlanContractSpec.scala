@@ -51,6 +51,32 @@ class PlanContractSpec extends AnyFunSuite {
     assert(!plan.contains("Window"), "no window sort in the bm25 plan")
   }
 
+  test("KG link/triple tail: links is exchange- and sort-free, triples matches in one kernel") {
+    import spark.implicits._
+    val mentions = Seq(
+      ("u1", 0, 0, 9, "Acme Corp", "ORG", 0.9, 0),
+      ("u1", 0, 20, 25, "Paris", "LOC", 0.8, 0))
+      .toDF("url", "sent_id", "start", "end", "value", "entity", "confidence", "partition_id")
+    val alias = graft.kg.KgPipeline.aliasDf(spark)
+    assert(alias.queryExecution.optimizedPlan
+      .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation],
+      "the alias side must be a driver-built local relation")
+    val links = graft.kg.KgPipeline.links(mentions, alias)
+    links.collect()
+    val linkPlan = physical(links)
+    assert(exchanges(linkPlan) === 0, s"links must not shuffle:\n$linkPlan")
+    assert(!linkPlan.contains("Sort"), s"links must not sort or sort-aggregate:\n$linkPlan")
+    assert(linkPlan.contains("BroadcastHashJoin") && linkPlan.contains("LocalTableScan"),
+      s"links must broadcast-join the local alias table:\n$linkPlan")
+
+    val sents = Seq(("u1", 0, "Acme Corp is in Paris.")).toDF("url", "sent_id", "text")
+    val triplesPlan = physical(graft.kg.KgPipeline.triples(links, sents))
+    assert("relation_triples\\(".r.findAllIn(triplesPlan).size === 1,
+      s"relation matching must run once, in relation_triples:\n$triplesPlan")
+    assert(!triplesPlan.contains("substring") && !triplesPlan.contains("CASE WHEN"),
+      s"no per-pattern CASE over a between substring:\n$triplesPlan")
+  }
+
   test("q37 contamination: corpus side shuffles only the doc_id aggregation") {
     val df = graft.SparkEntry.queries("q37_contamination")(spark, sfDir)
     val plan = physical(df)

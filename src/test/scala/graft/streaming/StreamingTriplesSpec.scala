@@ -47,6 +47,33 @@ class StreamingTriplesSpec extends AnyFunSuite {
     assert(streamed.nonEmpty && streamed.values.map(_._1).sum > 100)
   }
 
+  test("batch triples equal the page-local chain on text outside the BMP") {
+    // four emoji (two UTF-16 code units each) before every sentence: crf_tag
+    // offsets are UTF-16 indices, so any between-text cut in code points
+    // lands in the wrong place and drops or invents relations
+    val prefix = "\uD83D\uDE00\uD83D\uDE80\uD83C\uDF0D\uD83E\uDD16 "
+    val pages = PagesGen.pages(spark, 40L, 42L)
+      .map(p => p.copy(text = p.text.split('\n').map(prefix + _).mkString("\n")))
+      .collect()
+    val sents = KgPipeline.sentences(spark.createDataset(pages.toSeq))
+    val links = KgPipeline.links(KgPipeline.mentions(sents, model), KgPipeline.aliasDf(spark))
+    val batch = KgPipeline.triples(links, sents).select($"subj", $"pred", $"obj", $"n_sources")
+      .collect().map(r => (r.getString(0), r.getString(1), r.getString(2)) -> r.getLong(3)).toMap
+
+    val decoder = new graft.crf.CrfDecoder(model)
+    val alias = graft.kg.PageLocal.aliasIndex
+    val compiled = graft.kg.PageLocal.compilePatterns()
+    val local = pages.toSeq.filter(_.lang == "en")
+      .flatMap(_.text.split('\n').flatMap(s =>
+        graft.kg.PageLocal.sentenceTriples(decoder, s, alias, compiled)))
+      .groupBy(t => (t.subj, t.pred, t.obj)).map { case (k, ts) => k -> ts.length.toLong }
+
+    assert(local.values.sum > 100, "the pages must yield relations")
+    val differ = (batch.keySet ++ local.keySet).filter(k => batch.get(k) != local.get(k))
+    assert(differ.isEmpty, s"${differ.size} triples differ (batch ${batch.values.sum}, " +
+      s"page-local ${local.values.sum} occurrences), e.g. ${differ.take(3)}")
+  }
+
   test("windowed rollup: watermarked aggregation emits per-window counts") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx = spark.sqlContext
