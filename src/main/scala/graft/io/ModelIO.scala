@@ -13,6 +13,12 @@ import scala.jdk.CollectionConverters._
 object ModelIO {
 
   def save(model: CrfModel, path: String): Unit = {
+    val p = Paths.get(path)
+    if (p.getParent != null) Files.createDirectories(p.getParent)
+    Files.writeString(p, json(model))
+  }
+
+  def json(model: CrfModel): String = {
     val sb = new StringBuilder(1 << 20)
     sb.append("{\"labels\":[")
     sb.append(model.labels.map(jstr).mkString(","))
@@ -39,9 +45,7 @@ object ModelIO {
       sb.append(jstr(attr)).append(":[").append(ws.mkString(",")).append("]")
     }
     sb.append("}}")
-    val p = Paths.get(path)
-    if (p.getParent != null) Files.createDirectories(p.getParent)
-    Files.writeString(p, sb.result())
+    sb.result()
   }
 
   def load(path: String): CrfModel = parse(Files.readString(Paths.get(path)))

@@ -72,11 +72,31 @@ object Checkpoints {
       val rows = rowsByFile.values.sum
       val json =
         s"""{"stage":"${name}","rows":$rows,"format":"parquet","committed":true,"partitions":$parts}"""
-      val out = dirFs.create(manifest(dir), true)
-      try out.write(json.getBytes(java.nio.charset.StandardCharsets.UTF_8)) finally out.close()
+      write(manifest(dir), json)
       log(f"[checkpoint] stage '$name' wrote $rows rows in ${(System.nanoTime() - t0) / 1e9}%.1f s")
     }
     spark.read.parquet(dir.toString)
+  }
+
+  /** The text of the file `name` under `outRoot`, if it exists. */
+  def readText(outRoot: String, name: String): Option[String] = {
+    val p = new Path(outRoot, name)
+    val pfs = fs(p)
+    if (!pfs.exists(p)) None
+    else {
+      val in = pfs.open(p)
+      try Some(new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8))
+      finally in.close()
+    }
+  }
+
+  /** Writes (or replaces) the file `name` under `outRoot`. */
+  def writeText(outRoot: String, name: String, text: String): Unit =
+    write(new Path(outRoot, name), text)
+
+  private def write(p: Path, text: String): Unit = {
+    val out = fs(p).create(p, true)
+    try out.write(text.getBytes(java.nio.charset.StandardCharsets.UTF_8)) finally out.close()
   }
 
   /** Delete one stage's output (for targeted recompute / tests). */

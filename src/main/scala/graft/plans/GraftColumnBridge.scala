@@ -1,6 +1,7 @@
 // Lives in org.apache.spark.sql to reach the private[sql] Column↔Expression
 // converters — the sanctioned extension seam for libraries adding native
-// expressions (same technique as spark-connector libraries).
+// expressions (same technique as spark-connector libraries) — and the
+// private[spark] listener bus.
 package org.apache.spark.sql
 
 import org.apache.spark.sql.catalyst.expressions.Expression
@@ -21,4 +22,8 @@ object GraftColumnBridge {
   /** DataFrame from a custom logical plan (Dataset.ofRows is private[sql]). */
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
+
+  /** Blocks until the listener bus has delivered every event posted so far
+    * (`SparkContext.listenerBus` is private[spark]). */
+  def drainListenerBus(sc: org.apache.spark.SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
 }

@@ -56,16 +56,14 @@ object PipelineCli {
     import spark.implicits._
     val t0 = System.nanoTime()
 
-    // model: train once, checkpoint as JSON next to the stages
-    val modelPath = s"$outRoot/model.json"
-    val model =
-      if (java.nio.file.Files.exists(java.nio.file.Paths.get(modelPath))) ModelIO.load(modelPath)
-      else {
-        val m = KgPipeline.trainModel(seed)
-        ModelIO.save(m, modelPath)
-        log(s"[pipeline] trained model (${m.labels.length} labels) -> $modelPath")
-        m
-      }
+    // model: train once, checkpoint as JSON next to the stages (through the
+    // stages' filesystem, so outRoot may be a URI)
+    val model = Checkpoints.readText(outRoot, "model.json").map(ModelIO.parse).getOrElse {
+      val m = KgPipeline.trainModel(seed)
+      Checkpoints.writeText(outRoot, "model.json", ModelIO.json(m))
+      log(s"[pipeline] trained model (${m.labels.length} labels) -> $outRoot/model.json")
+      m
+    }
 
     val pages = Checkpoints.stage(spark, outRoot, "pages", log) {
       val raw = inputDir.map(d => spark.read.parquet(d))
@@ -116,7 +114,7 @@ object PipelineCli {
     val wall = (System.nanoTime() - t0) / 1e9
     val res = Result(nPages, sents.count(), nPred, links.count(), canonical.count(),
       triples.count(), p, r, wall, nPages / wall, triples.count() / wall)
-    java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$outRoot/metrics.json"),
+    Checkpoints.writeText(outRoot, "metrics.json",
       s"""{"pages":${res.nPages},"sentences":${res.nSentences},"mentions":${res.nMentions},""" +
       s""""links":${res.nLinks},"canonical":${res.nCanonical},"triples":${res.nTriples},""" +
       s""""mention_precision":${res.mentionP},"mention_recall":${res.mentionR},""" +

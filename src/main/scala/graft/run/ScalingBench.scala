@@ -1,46 +1,51 @@
 package graft.run
 
 import graft.Bench
+import org.apache.spark.sql.SparkSession
 
-/** Scaling-efficiency evidence (north_rule: throughput scaling ≥ 0.8 from N
-  * to 4N executors; no real cluster in this sandbox — per BASELINE.md the
-  * substitute is the same job at local[8] vs local[32] on identical input).
+/** N → 4N scaling evidence (BENCH.md): the same work at a low and a high
+  * level in paired rounds. Every round measures both levels, alternating
+  * which goes first (the host's burst credits drain over a run, so a fixed
+  * order hands the second level the drained window); the round's paired
+  * efficiency is (wall_low / wall_high) / (high / low), and the headline is
+  * the median over rounds, robust to slow drift that medians of walls are
+  * not.
   *
-  * Runs the KG throughput job at both parallelism levels in one JVM
-  * (sequential SparkSessions), reports docs/sec + triples/sec at each and
-  * efficiency = (T_low / T_high) / (cpus_high / cpus_low).
+  * The protocols differ only in what a level is:
+  *   - `--cluster`: a fresh Spark standalone local-cluster per measurement,
+  *     `level` worker JVMs × `--cores` cores, each with its own heap. This is
+  *     the sandbox analogue of N → 4N executors: adding executors adds heaps
+  *     and allocators, which `local[N]` threads in one shared heap do not.
+  *   - default: a `local[level]` session in this JVM.
+  *   - `--kernel TOTAL`: no Spark; TOTAL splitmix64 iterations split over
+  *     `level` register-resident threads, a control for the host's CPU grants.
   *
-  * Usage: ScalingBench [--pages N] [--low 8] [--high 32] [--out BENCH.md]
+  * Usage: ScalingBench [--cluster | --kernel TOTAL] [--pages N] [--low L]
+  *          [--high H] [--rounds R] [--stage full|mentions|curate] [--cores C]
+  *          [--cooldown SEC] [--control] [--json FILE]
+  * Prints the summary JSON line; `--json` also writes it, with every round's
+  * decomposition, to FILE. Cluster executors append SPARK_GRAFT_EXEC_OPTS to
+  * their JVM flags.
   */
 object ScalingBench {
-  /** Measure ONE parallelism level in this JVM (fresh-JVM-per-level protocol:
-    * JIT/GC state from a previous level otherwise contaminates the next).
-    * Prints a single JSON line. */
-  def measureMain(cpus: Int, nPages: Long, stage: String): Unit = {
-    Bench.kgModelCached // train once, untimed
-    val spark = Bench.session(cpus.toString)
-    spark.sparkContext.setLogLevel("ERROR")
-    def job(n: Long) =
-      if (stage == "mentions") Bench.mentionThroughput(spark, n)
-      else Bench.kgThroughput(spark, n)
-    try {
-      job(math.max(2000L, nPages / 10)) // warmup (JIT + codegen)
-      val t0 = System.nanoTime()
-      val (d, t, n) = job(nPages)
-      val wall = (System.nanoTime() - t0) / 1e9
-      println(f"""{"cpus":$cpus,"pages":$nPages,"wall_sec":$wall%.2f,"docs_per_sec":$d%.1f,"triples_per_sec":$t%.1f,"triples":$n}""")
-    } finally spark.stop()
-  }
 
-  /** Raw-JVM control at MEASUREMENT-scale duration (no Spark, no allocation):
-    * fixed total work — `rounds` splitmix64 iterations — split over N
-    * register-resident threads. The round-2 control ran ~12 s and sat inside
-    * the host's burst-credit window; this one is sized to match the Spark
-    * measurements' multi-minute walls, so it measures the host's STEADY-STATE
-    * CPU-grant ratio for N vs 4N runnable threads with zero JVM-heap/GC/
-    * shuffle confounds. If this control scales ~1.0 at measurement duration,
-    * a Spark wall gap is the job's; if the control itself collapses, the wall
-    * ratio is measuring the host scheduler, not the code. */
+  type Job = (SparkSession, Long) => (Double, Double, Long)
+
+  /** The job each `--stage` measures: (docs/s, outputs/s, outputs). */
+  val Stages: Map[String, Job] = Map(
+    "full" -> ((s, n) => Bench.kgThroughput(s, n)),
+    "mentions" -> ((s, n) => Bench.mentionThroughput(s, n)),
+    "curate" -> Bench.curateThroughput)
+
+  def stageJob(stage: String): Job = Stages.getOrElse(stage, throw new IllegalArgumentException(
+    s"unknown --stage '$stage' (expected ${Stages.keys.toSeq.sorted.mkString(" | ")})"))
+
+  /** Fixed total work, `rounds` splitmix64 iterations, split over `threads`
+    * register-resident threads (no allocation, no memory traffic); returns
+    * (wall, process CPU) seconds. Sized to the Spark measurements' walls, it
+    * measures the host's steady-state CPU grant for N vs 4N runnable
+    * threads: if it scales ~1.0 while a Spark pair does not, the gap is the
+    * job's; if it collapses, the wall ratio measures the host scheduler. */
   def kernelControl(threads: Int, totalRounds: Long): (Double, Double) = {
     val per = totalRounds / threads
     val sink = new java.util.concurrent.atomic.AtomicLong()
@@ -58,424 +63,240 @@ object ScalingBench {
       th.start(); th
     }
     ts.foreach(_.join())
-    val wall = (System.nanoTime() - t0) / 1e9
-    val cpuSec = (osBean.getProcessCpuTime - cpu0) / 1e9
-    (wall, cpuSec)
+    ((System.nanoTime() - t0) / 1e9, (osBean.getProcessCpuTime - cpu0) / 1e9)
   }
 
-  /** One cluster measurement's full decomposition — everything the scaling
-    * artifact needs to show WHERE a wall-second went (executor CPU vs GC vs
-    * shuffle fetch vs result serialization; stall cycles show up as CPU
-    * inflation with gc/fetch/ser ≈ 0). */
-  case class ClusterSample(workers: Int, docsPerSec: Double, triplesPerSec: Double,
-                           n: Long, wall: Double, util: Double, execCpu: Double,
-                           gc: Double, fetchWait: Double, resultSer: Double) {
-    def json: String = String.format(java.util.Locale.ROOT,
-      """{"workers":%d,"wall_sec":%.2f,"docs_per_sec":%.1f,"util":%.3f,""" +
+  /** The register-resident kernel as `procs` JVM processes × `threadsPer`
+    * threads (the cluster's process layout) against the same total work in
+    * one process with procs × threadsPer threads; (single, multi) walls.
+    * multi/single ≈ 1 ⇒ the host does not penalize the process count. */
+  def mpKernelControl(procs: Int, threadsPer: Int, totalRounds: Long): (Double, Double) = {
+    val java = System.getProperty("java.home") + "/bin/java"
+    val cp = System.getProperty("java.class.path")
+    val single = kernelControl(procs * threadsPer, totalRounds)._1
+    val t0 = System.nanoTime()
+    val ps = (0 until procs).map { _ =>
+      new ProcessBuilder(java, s"-XX:ActiveProcessorCount=$threadsPer", "-cp", cp,
+        "graft.run.ScalingBench", "--kernel-child", s"${threadsPer}x${totalRounds / procs}")
+        .inheritIO().start()
+    }
+    ps.foreach(p => require(p.waitFor() == 0, "kernel child failed"))
+    (single, (System.nanoTime() - t0) / 1e9)
+  }
+
+  /** One measurement at one level: the timed work's rate, output count and
+    * wall, and the task totals that show where a wall-second went (executor
+    * CPU vs GC vs shuffle fetch vs result serialization; stall cycles show
+    * up as CPU inflation with gc/fetch/ser ≈ 0). */
+  final case class Sample(level: Int, threads: Int, docsPerSec: Double, n: Long, wall: Double,
+                          t: TaskTotals.Snapshot) {
+    /** Σ task run time / (wall × threads): whether the work keeps every
+      * thread busy; a serial bottleneck shows as a collapse at the high level. */
+    def util: Double = t.runSec / (wall * threads)
+    def json(levelKey: String): String = String.format(java.util.Locale.ROOT,
+      s"""{"$levelKey":%d,"wall_sec":%.2f,"docs_per_sec":%.1f,"util":%.3f,""" +
         """"exec_cpu_sec":%.1f,"gc_sec":%.1f,"fetch_wait_sec":%.1f,"result_ser_sec":%.1f,"n_out":%d}""",
-      Int.box(workers), Double.box(wall), Double.box(docsPerSec), Double.box(util),
-      Double.box(execCpu), Double.box(gc), Double.box(fetchWait), Double.box(resultSer),
-      Long.box(n))
+      Int.box(level), Double.box(wall), Double.box(docsPerSec), Double.box(util),
+      Double.box(t.cpuSec), Double.box(t.gcSec), Double.box(t.fetchWaitSec),
+      Double.box(t.resultSerSec), Long.box(n))
   }
 
-  /** One measurement on a fresh local-cluster (multi-process standalone):
-    * `workers` executor JVMs × `cores` cores × own 6g heap. CPU comes from
-    * task metrics (executorCpuTime), since executors are separate
-    * processes. `cores` controls per-executor width: 2 is the default
-    * container shape; 1 keeps the HIGH level's total thread demand inside
-    * this sandbox's deliverable-core envelope (see BENCH.md round 4 — with
-    * 8 demanding threads the shared memory bus charges co-tenant stall
-    * cycles as CPU), while still measuring what the north rule asks:
-    * executor-COUNT scaling across real JVMs. */
-  private def clusterMeasure(workers: Int, nPages: Long, stage: String,
-                             cores: Int = 2): ClusterSample = {
-    val addOpens = Seq(
-      "java.base/java.lang", "java.base/java.lang.invoke", "java.base/java.lang.reflect",
-      "java.base/java.io", "java.base/java.net", "java.base/java.nio",
-      "java.base/java.util", "java.base/java.util.concurrent",
-      "java.base/java.util.concurrent.atomic", "java.base/sun.nio.ch",
-      "java.base/sun.nio.cs", "java.base/sun.security.action",
-      "java.base/sun.util.calendar")
-      .map(p => s"--add-opens=$p=ALL-UNNAMED").mkString(" ") +
-      // each executor believes it owns 2 cores (like a cpuset-limited YARN/k8s
-      // container), so GC/JIT thread pools are sized for the executor, not the
-      // 32-vCPU host — otherwise every extra worker adds 32-thread GC pools
-      s" -XX:ActiveProcessorCount=$cores" +
-      // standard production executor sizing (-Xms = -Xmx): without it the
-      // JVM keeps committed heap ~2g and young GCs run constantly; measured
-      // 155 → 50 young GCs per executor on the full-pipeline probe
-      " -Xms6g" +
-      // ZGC: the round-4/5 G1 decomposition showed co-tenant executor JVMs
-      // hitting allocation failure in lockstep, whose synchronized
-      // stop-the-world copy phases crawl on this host's shared throttled
-      // memory bus (17-42 s monster pauses; 49-325 s summed GC per 4-worker
-      // measurement). ZGC relocates CONCURRENTLY — sub-ms pauses, the bus
-      // traffic overlaps mutator work instead of stalling it: the 4-worker
-      // full-pipeline probe dropped 74 s wall / 113 s GC (G1 median) →
-      // 42 s wall / 6.8 s GC at ~1.19 cpu_ratio. This is the conf a real
-      // spark-submit deployment of this pipeline would ship
-      // (spark.executor.extraJavaOptions=-XX:+UseZGC).
-      " -XX:+UseZGC" +
-      // experiment hook: extra executor JVM flags (GC logging, GC choice)
-      sys.env.get("SPARK_GRAFT_EXEC_OPTS").map(" " + _).getOrElse("")
-    val b = org.apache.spark.sql.SparkSession.builder()
+  /** What a level is: the JSON names of the protocol (`prefix`) and of its
+    * level, the cores each level unit has, the protocol's description, the
+    * workload's summary fields, and one measurement at (round, level). */
+  private final case class Protocol(prefix: String, levelKey: String, cores: Int, describe: String,
+                                    workload: String, measure: (Int, Int) => Sample)
+
+  /** One timed run of `job` on a fresh session; `warmPages` of the same job
+    * first warm the JIT and codegen, untimed. */
+  private def sparkSample(newSession: => SparkSession, level: Int, threads: Int, job: Job,
+                          warmPages: Long, nPages: Long): Sample = {
+    // a previous measurement's stopped session must not be resurrected by
+    // getOrCreate, which caches the default session across stop()
+    SparkSession.clearActiveSession()
+    SparkSession.clearDefaultSession()
+    val spark = newSession
+    spark.sparkContext.setLogLevel("ERROR")
+    val totals = TaskTotals.on(spark)
+    try {
+      if (warmPages > 0) job(spark, warmPages)
+      val ((docsPerSec, _, n), wall, t) = totals.timed(job(spark, nPages))
+      Sample(level, threads, docsPerSec, n, wall, t)
+    } finally spark.stop()
+  }
+
+  private val AddOpens = Seq("java.lang", "java.lang.invoke", "java.lang.reflect", "java.io",
+    "java.net", "java.nio", "java.util", "java.util.concurrent", "java.util.concurrent.atomic",
+    "sun.nio.ch", "sun.nio.cs", "sun.security.action", "sun.util.calendar")
+
+  /** A standalone local-cluster of `workers` executor JVMs × `cores` cores,
+    * each with its own 6g heap. */
+  private def clusterSession(workers: Int, cores: Int): SparkSession = {
+    val execOpts = AddOpens.map(p => s"--add-opens=java.base/$p=ALL-UNNAMED") ++ Seq(
+      // each executor believes it owns `cores` cores (a cpuset-limited
+      // YARN/k8s container), so its GC/JIT pools are sized for the executor,
+      // not the host: otherwise every extra worker adds host-sized GC pools
+      s"-XX:ActiveProcessorCount=$cores",
+      // production sizing, -Xms = -Xmx: with ~2g committed heap young GCs
+      // run constantly (155 → 50 young GCs per executor on the full pipeline)
+      "-Xms6g",
+      // under G1, co-tenant executors hit allocation failure in lockstep and
+      // their stop-the-world copy phases crawl on the shared memory bus
+      // (17-42 s pauses, 49-325 s GC per 4-worker measurement); ZGC
+      // relocates concurrently: the 4-worker full-pipeline probe went from
+      // 74 s wall / 113 s GC to 42 s / 6.8 s (BENCH.md)
+      "-XX:+UseZGC") ++ sys.env.get("SPARK_GRAFT_EXEC_OPTS")
+    // executors load the engine from where this JVM loaded it
+    val classes = new java.io.File(getClass.getProtectionDomain.getCodeSource.getLocation.toURI)
+    val b = SparkSession.builder()
       .master(s"local-cluster[$workers,$cores,7168]")
       .appName(s"graft-cluster-$workers")
       .config("spark.executor.memory", "6g")
       .config("spark.executor.cores", cores.toString)
-      .config("spark.executor.extraClassPath", "/root/repo/target/scala-2.13/classes")
-      .config("spark.executor.extraJavaOptions", addOpens)
+      .config("spark.executor.extraClassPath", classes.getPath)
+      .config("spark.executor.extraJavaOptions", execOpts.mkString(" "))
       .config("spark.sql.shuffle.partitions", (workers * cores).toString)
-      // 8 tasks per core: with one task per core (the default), any
-      // per-task duration variance idles whole cores at the stage tail —
-      // measured utilization at 4 workers was 0.82 with 8 fat tasks
+      // 8 tasks per core: with one task per core any per-task duration
+      // variance idles whole cores at the stage tail (utilization 0.82 at 4
+      // workers with 8 fat tasks)
       .config("spark.default.parallelism", (workers * cores * 8).toString)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
     sys.env.get("SPARK_GRAFT_LOCAL_DIR").foreach(d => b.config("spark.local.dir", d))
-    // experiment hook: extra spark confs, "k=v,k=v" (e.g. off-heap memory)
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(',').filter(_.contains("="))
-      .foreach { kv => val Array(k, v) = kv.split("=", 2); b.config(k, v) })
-    // a previous measurement's stopped session must not be resurrected by
-    // getOrCreate (it caches the default session across stop())
-    org.apache.spark.sql.SparkSession.clearActiveSession()
-    org.apache.spark.sql.SparkSession.clearDefaultSession()
-    val spark = b.getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    val runTime = new java.util.concurrent.atomic.AtomicLong(0L)
-    val cpuTime = new java.util.concurrent.atomic.AtomicLong(0L)
-    val gcTime = new java.util.concurrent.atomic.AtomicLong(0L)
-    val fetchWait = new java.util.concurrent.atomic.AtomicLong(0L)
-    val serTime = new java.util.concurrent.atomic.AtomicLong(0L)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-        if (te.taskMetrics != null) {
-          runTime.addAndGet(te.taskMetrics.executorRunTime)
-          cpuTime.addAndGet(te.taskMetrics.executorCpuTime)
-          gcTime.addAndGet(te.taskMetrics.jvmGCTime)
-          fetchWait.addAndGet(te.taskMetrics.shuffleReadMetrics.fetchWaitTime)
-          serTime.addAndGet(te.taskMetrics.resultSerializationTime)
-        }
-    }
-    def job(n: Long) =
-      if (stage == "mentions") Bench.mentionThroughput(spark, n)
-      else Bench.kgThroughput(spark, n)
-    try {
-      // fresh executor JVMs every measurement → warm their JIT before timing.
-      // Warmup input scales WITH the worker count so every executor JVM sees
-      // the same number of pages before measurement at both levels — a fixed
-      // warmup split over 4 JVMs leaves the high level 4× less compiled, and
-      // the interpreter residue reads as CPU inflation charged to scaling.
-      job(math.max(5000L, nPages / 8) * workers)
-      spark.sparkContext.addSparkListener(listener)
-      val t0 = System.nanoTime()
-      val (d, t, n) = job(nPages)
-      val wall = (System.nanoTime() - t0) / 1e9
-      val util = (runTime.get() / 1000.0) / (wall * workers * cores)
-      val s = ClusterSample(workers, d, t, n, wall, util, cpuTime.get() / 1e9,
-        gcTime.get() / 1000.0, fetchWait.get() / 1000.0, serTime.get() / 1000.0)
-      System.err.println(f"[cluster]   breakdown workers=$workers gc=${s.gc}%.1f s fetchWait=${s.fetchWait}%.1f s resultSer=${s.resultSer}%.1f s")
-      s
-    } finally spark.stop()
+    b.getOrCreate()
   }
 
-  /** Control #2 of the BENCH.md forensics: the register-resident kernel as
-    * `procs` separate JVM processes × `threadsPer` threads (the cluster's
-    * process layout, zero memory traffic), against the same total work in
-    * ONE process with procs×threadsPer threads. multi/single wall ≈ 1 ⇒
-    * process count per se is not penalized by the host. */
-  def mpKernelControl(procs: Int, threadsPer: Int, totalRounds: Long): (Double, Double) = {
-    val java = System.getProperty("java.home") + "/bin/java"
-    val cp = System.getProperty("java.class.path")
-    val single = kernelControl(procs * threadsPer, totalRounds)._1
-    val per = totalRounds / procs
-    val t0 = System.nanoTime()
-    val ps = (0 until procs).map { _ =>
-      new ProcessBuilder(java, s"-XX:ActiveProcessorCount=$threadsPer", "-cp", cp,
-        "graft.run.ScalingBench", "--kernel-child", per.toString, "--threads",
-        threadsPer.toString).inheritIO().start()
-    }
-    ps.foreach(p => require(p.waitFor() == 0, "kernel child failed"))
-    val multi = (System.nanoTime() - t0) / 1e9
-    (single, multi)
-  }
+  private final case class Round(r: Int, order: Seq[Int], kernelEff: Option[Double],
+                                 lo: Sample, hi: Sample)
 
-  private def clusterMain(nPages: Long, low: Int, high: Int, rounds: Int, stage: String,
-                          cooldownSec: Int, jsonOut: Option[String],
-                          withControl: Boolean, cores: Int): Unit = {
-    // release dists have no launcher/target build dirs, so the in-process
-    // Worker's executor-command builder needs the scala version from the env
-    // (bin/spark-submit normally injects it via load-spark-env.sh)
-    require(sys.env.contains("SPARK_SCALA_VERSION"),
-      "local-cluster mode: export SPARK_SCALA_VERSION=2.13 so Worker JVMs can build the executor command")
-    Bench.kgModelCached // train once, untimed
-    def num(d: Double) = String.format(java.util.Locale.ROOT, "%.3f", Double.box(d))
-    val effs = scala.collection.mutable.ListBuffer.empty[Double]
-    val effsExGc = scala.collection.mutable.ListBuffer.empty[Double]
-    val roundJsons = scala.collection.mutable.ListBuffer.empty[String]
-    val samples = scala.collection.mutable.Map[Int, List[ClusterSample]]().withDefaultValue(Nil)
-    for (r <- 0 until rounds) {
+  private def num(d: Double) = String.format(java.util.Locale.ROOT, "%.3f", Double.box(d))
+  private def median(xs: Seq[Double]) = if (xs.isEmpty) Double.NaN else xs.sorted.apply(xs.length / 2)
+
+  /** The paired rounds; prints the summary line and returns the document
+    * that `--json` writes. */
+  private def pairedRounds(p: Protocol, low: Int, high: Int, rounds: Int, cooldownSec: Int,
+                           control: Boolean): String = {
+    val ratio = high.toDouble / low
+    def eff(wLow: Double, wHigh: Double) = (wLow / wHigh) / ratio
+    // ~8e9 iterations ≈ 15 s at 8 threads on a 4-core host
+    val controlRounds = 8L * 1000 * 1000 * 1000
+    val rs = (0 until rounds).map { r =>
       val order = if (r % 2 == 0) Seq(low, high) else Seq(high, low)
-      val got = scala.collection.mutable.Map.empty[Int, ClusterSample]
-      // in-window register-resident control (zero memory traffic): if THIS
-      // control scales ~1.0 while the Spark pair does not, the wall gap is
-      // the job's; if the control itself collapses, the round's window is the
-      // host scheduler's. ~8e9 rounds ≈ 15 s at 8 threads on this box.
-      val kernelEff = if (withControl) {
-        val wallsK = Seq(low * cores, high * cores).map { th =>
-          th -> kernelControl(th, 8L * 1000 * 1000 * 1000)._1
-        }.toMap
-        val e = (wallsK(low * cores) / wallsK(high * cores)) / (high.toDouble / low)
-        System.err.println(f"[cluster] round $r kernel control eff = $e%.3f")
-        Some(e)
-      } else None
-      for (w <- order) {
-        // idle gap before EVERY measurement (both levels, so it is not a
-        // thumb on the scale): the host's burst credits regenerate during
-        // low demand, so each measurement starts from comparable credit
-        // state instead of inheriting the drain of the previous level
+      // in-window control: if it scales ~1.0 while the work does not, the
+      // gap is the work's; if it collapses, the window is the host's
+      val kernelEff = Option.when(control)(eff(
+        kernelControl(low * p.cores, controlRounds)._1, kernelControl(high * p.cores, controlRounds)._1))
+      val got = order.map { l =>
+        // an idle gap before every measurement (both levels): burst credits
+        // regenerate under low demand, so each measurement starts from a
+        // comparable credit state instead of the previous level's drain
         if (cooldownSec > 0) Thread.sleep(cooldownSec * 1000L)
-        val m = clusterMeasure(w, nPages, stage, cores)
-        System.err.println(f"[cluster] round $r workers=$w wall=${m.wall}%.1f s docs/s=${m.docsPerSec}%.1f util=${m.util}%.3f execCpu=${m.execCpu}%.1f s")
-        samples(w) = m :: samples(w)
-        got(w) = m
-      }
-      val e = (got(low).wall / got(high).wall) / (high.toDouble / low)
-      // GC-stall-excluded efficiency: per-executor GC pause wall (gc_sec is
-      // summed across executors; pauses stop the executor's task threads, so
-      // wall − gc/workers is the wall the job would have with the low
-      // level's GC profile). The 4-worker GC inflation is a measured host
-      // artifact: identical heap transitions take 0.8 s solo and 17–42 s
-      // with 4 co-tenant JVMs collecting in lockstep on the shared throttled
-      // bus (see BENCH.md round-4 forensics) — a real cluster has one memory
-      // bus per executor host.
-      def exGc(s: ClusterSample) = s.wall - s.gc / s.workers
-      val eExGc = (exGc(got(low)) / exGc(got(high))) / (high.toDouble / low)
-      // stall-cycle signature: executor CPU for IDENTICAL work inflating at
-      // the high level with gc/fetch/ser ≈ 0 (memory-bus contention charged
-      // as CPU). cpu_ratio ≤ 1.25 = the conserved band from the round-3
-      // forensics (clean windows measured 0.94–1.07).
-      val cpuRatio = got(high).execCpu / math.max(got(low).execCpu, 1e-9)
-      System.err.println(f"[cluster] round $r paired efficiency = $e%.3f (cpu_ratio $cpuRatio%.2f)")
-      effs += e
-      effsExGc += eExGc
-      roundJsons += (s"""{"round":$r,"order":"${order.mkString("->")}",""" +
-        kernelEff.map(k => s""""kernel_control_eff":${num(k)},""").getOrElse("") +
-        s""""pair_eff":${num(e)},"pair_eff_ex_gc":${num(eExGc)},"cpu_ratio":${num(cpuRatio)},""" +
-        s""""cpu_conserved":${cpuRatio <= 1.25},""" +
-        s""""low":${got(low).json},"high":${got(high).json}}""")
+        val s = p.measure(r, l)
+        System.err.println(f"[scaling] round $r ${p.levelKey}=$l wall=${s.wall}%.1f s " +
+          f"docs/s=${s.docsPerSec}%.1f util=${s.util}%.3f ${s.t.line}")
+        l -> s
+      }.toMap
+      Round(r, order, kernelEff, got(low), got(high))
     }
-    def med(w: Int) = samples(w).sortBy(_.wall).apply(samples(w).length / 2)
-    val (mL, mH) = (med(low), med(high))
-    require(mL.n == mH.n, s"nondeterministic output count: ${mL.n} vs ${mH.n}")
-    def median(xs: Seq[Double]) =
-      if (xs.isEmpty) Double.NaN else xs.sorted.apply(xs.length / 2)
-    val eff = median(effs.toSeq)
-    // the conserved-subset median is NOT cherry-picking: every round ships in
-    // the artifact with its full decomposition, and the subset criterion
-    // (cpu_ratio ≤ 1.25) is a host-contention tag computable from the shipped
-    // numbers — it answers "what does the job scale at when the sandbox
-    // actually delivers 2×high cores", which is the cluster-transferable
-    // question (a real cluster adds a memory bus with every executor host).
-    val conserved = effs.toSeq.zip(roundJsons).filter(_._2.contains("\"cpu_conserved\":true"))
-    val effConserved = median(conserved.map(_._1))
-    val headline = s"""{"cluster_scaling_efficiency":${num(eff)},""" +
-      s""""cluster_scaling_efficiency_cpu_conserved":${if (conserved.isEmpty) "null" else num(effConserved)},""" +
-      s""""cluster_scaling_efficiency_ex_gc":${num(median(effsExGc.toSeq))},""" +
+    // GC-stall-excluded efficiency: gc_sec sums over a level's JVMs and a
+    // pause stops their task threads, so wall − gc/level is the wall with
+    // the low level's GC profile
+    def exGc(s: Sample) = s.wall - s.t.gcSec / s.level
+    // stall-cycle signature: executor CPU for IDENTICAL work inflating at the
+    // high level with gc/fetch/ser ≈ 0 (memory-bus contention charged as
+    // CPU); ≤ 1.25 is the conserved band (clean windows measured 0.94–1.07)
+    def cpuRatio(x: Round) = x.hi.t.cpuSec / math.max(x.lo.t.cpuSec, 1e-9)
+    val effs = rs.map(x => eff(x.lo.wall, x.hi.wall))
+    val effsExGc = rs.map(x => eff(exGc(x.lo), exGc(x.hi)))
+    val conserved = rs.zip(effs).collect { case (x, e) if cpuRatio(x) <= 1.25 => e }
+    val outs = rs.flatMap(x => Seq(x.lo.n, x.hi.n)).distinct
+    require(outs.length <= 1, s"nondeterministic output count: ${outs.mkString(" vs ")}")
+    def med(side: Round => Sample) = rs.map(side).sortBy(_.wall).apply(rs.length / 2)
+    val (mL, mH) = (med(_.lo), med(_.hi))
+    // the conserved-subset median is not cherry-picking: every round ships
+    // with its decomposition and the criterion is computable from it; it
+    // answers what the work scales at when the host delivers the high
+    // level's cores, the question a real cluster (one memory bus per
+    // executor host) asks
+    val headline = s"""{"${p.prefix}scaling_efficiency":${num(median(effs))},""" +
+      s""""${p.prefix}scaling_efficiency_cpu_conserved":${if (conserved.isEmpty) "null" else num(median(conserved))},""" +
+      s""""${p.prefix}scaling_efficiency_ex_gc":${num(median(effsExGc))},""" +
       s""""cpu_conserved_rounds":${conserved.length},"rounds":${effs.map(num).mkString("[", ",", "]")},""" +
-      s""""low_workers":$low,"high_workers":$high,""" +
+      s""""low_${p.levelKey}":$low,"high_${p.levelKey}":$high,""" +
       s""""wall_low":${num(mL.wall)},"wall_high":${num(mH.wall)},""" +
       s""""docs_per_sec_low":${num(mL.docsPerSec)},"docs_per_sec_high":${num(mH.docsPerSec)},""" +
       s""""util_low":${num(mL.util)},"util_high":${num(mH.util)},""" +
-      s""""exec_cpu_low":${num(mL.execCpu)},"exec_cpu_high":${num(mH.execCpu)},""" +
-      s""""pages":$nPages,"stage":"$stage","cores_per_worker":$cores,"cooldown_sec":$cooldownSec}"""
-    // control #2, run once post-measurement: process layout vs one process
-    val mpJson = if (withControl) {
-      val (sp, mp) = mpKernelControl(high, cores, 8L * 1000 * 1000 * 1000)
-      System.err.println(f"[cluster] mp-kernel control: single-proc $sp%.1f s vs $high procs x $cores thr $mp%.1f s")
-      s""","mp_kernel_control":{"single_proc_wall":${num(sp)},"multi_proc_wall":${num(mp)},"procs":$high,"threads_per":$cores}"""
-    } else ""
-    jsonOut.foreach { p =>
-      val doc = s"""{"protocol":"spark standalone local-cluster, $low vs $high worker JVMs x $cores cores x 6g private heap, paired rounds with alternating order, median of per-round paired efficiencies; cpu_ratio = high exec CPU / low exec CPU for identical work (>1.25 with gc/fetch/ser~0 = co-tenant memory-stall cycles charged as CPU, see BENCH.md)","summary":$headline$mpJson,"rounds_detail":[${roundJsons.mkString(",")}]}"""
-      java.nio.file.Files.writeString(java.nio.file.Paths.get(p), doc + "\n")
-      System.err.println(s"[cluster] wrote $p")
-    }
+      s""""exec_cpu_low":${num(mL.t.cpuSec)},"exec_cpu_high":${num(mH.t.cpuSec)},""" +
+      s"""${p.workload},"cores_per_worker":${p.cores},"cooldown_sec":$cooldownSec}"""
     println(headline)
+    val mpJson = if (control) {
+      val (sp, mp) = mpKernelControl(high, p.cores, controlRounds)
+      s""","mp_kernel_control":{"single_proc_wall":${num(sp)},"multi_proc_wall":${num(mp)},"procs":$high,"threads_per":${p.cores}}"""
+    } else ""
+    val details = rs.indices.map { i =>
+      val x = rs(i)
+      s"""{"round":${x.r},"order":"${x.order.mkString("->")}",""" +
+        x.kernelEff.map(k => s""""kernel_control_eff":${num(k)},""").getOrElse("") +
+        s""""pair_eff":${num(effs(i))},"pair_eff_ex_gc":${num(effsExGc(i))},""" +
+        s""""cpu_ratio":${num(cpuRatio(x))},"cpu_conserved":${cpuRatio(x) <= 1.25},""" +
+        s""""low":${x.lo.json(p.levelKey)},"high":${x.hi.json(p.levelKey)}}"""
+    }
+    s"""{"protocol":"${p.describe}, paired rounds with alternating order, median of per-round paired efficiencies; cpu_ratio = high exec CPU / low exec CPU for identical work (>1.25 with gc/fetch/ser~0 = co-tenant memory-stall cycles charged as CPU, see BENCH.md)",""" +
+      s""""summary":$headline$mpJson,"rounds_detail":[${details.mkString(",")}]}"""
   }
 
   def main(args: Array[String]): Unit = {
-    val (opts, _) = Cli.parse(args)
-    val nPages = opts.get("-p").orElse(opts.get("--pages")).map(_.toLong).getOrElse(20000L)
-    opts.get("--kernel-child").foreach { n =>
-      // child of mpKernelControl: run the register-resident kernel and exit
-      kernelControl(opts.getOrElse("--threads", "2").toInt, n.toLong)
+    val (opts, _) = Cli.parse(args, Set("--cluster", "--kernel", "--kernel-child", "--pages",
+      "--low", "--high", "--rounds", "--stage", "--cores", "--cooldown", "--control", "--json"))
+    opts.get("--kernel-child").foreach { spec =>
+      // a child process of mpKernelControl: "<threads>x<iterations>"
+      val Array(threads, n) = spec.split('x')
+      kernelControl(threads.toInt, n.toLong)
       return
     }
-    opts.get("--mp-kernel").foreach { spec =>
-      // standalone control #2: "--mp-kernel <procs>x<threadsPer>"
-      val Array(p, t) = spec.split("x").map(_.toInt)
-      val (sp, mp) = mpKernelControl(p, t, opts.getOrElse("--rounds-total", "8000000000").toLong)
-      println(f"""{"mp_kernel_control":{"single_proc_wall":$sp%.3f,"multi_proc_wall":$mp%.3f,"procs":$p,"threads_per":$t}}""")
-      return
+    def int(k: String, default: Int) = opts.get(k).fold(default)(_.toInt)
+    val cluster = opts.contains("--cluster")
+    val (low, high) = (int("--low", if (cluster) 1 else 2), int("--high", if (cluster) 4 else 8))
+    val nPages = opts.get("--pages").fold(20000L)(_.toLong)
+    val stage = opts.getOrElse("--stage", "full")
+    val job = stageJob(stage)
+    val workload = s""""pages":$nPages,"stage":"$stage""""
+    val protocol = opts.get("--kernel").map(_.toLong) match {
+      case Some(total) =>
+        Protocol("kernel_", "threads", 1,
+          s"register-resident splitmix64 kernel, $total iterations over $low vs $high threads",
+          s""""total_rounds":$total""", (_, l) => {
+            val (wall, cpu) = kernelControl(l, total)
+            Sample(l, l, 0, 0, wall, TaskTotals.Snapshot(runSec = cpu, cpuSec = cpu))
+          })
+      case None if cluster =>
+        // release dists have no launcher build dirs, so the in-process
+        // Worker needs the scala version from the env to assemble the
+        // executor command (bin/spark-submit injects it through
+        // load-spark-env.sh)
+        require(sys.env.contains("SPARK_SCALA_VERSION"),
+          "local-cluster mode: export SPARK_SCALA_VERSION=2.13 so Worker JVMs can build the executor command")
+        val cores = int("--cores", 2)
+        Protocol("cluster_", "workers", cores,
+          s"spark standalone local-cluster, $low vs $high worker JVMs x $cores cores x 6g private heap",
+          workload, (_, w) =>
+            // fresh executor JVMs every measurement: the warm-up grows with
+            // the worker count so every executor JVM sees as many pages
+            // before the timed run at both levels
+            sparkSample(clusterSession(w, cores), w, w * cores, job,
+              math.max(5000L, nPages / 8) * w, nPages))
+      case None =>
+        Protocol("", "cpus", 1, s"local[$low] vs local[$high] threads in one JVM", workload,
+          (r, c) => sparkSample(Bench.session(c.toString), c, c, job,
+            if (r == 0) math.max(2000L, nPages / 20) else 0L, nPages))
     }
-    opts.get("--probe").foreach { w =>
-      // one clusterMeasure at the given worker count — for targeted
-      // decomposition experiments (pair with SPARK_GRAFT_EXEC_OPTS)
-      Bench.kgModelCached
-      val m = clusterMeasure(w.toInt, nPages, opts.getOrElse("--stage", "full"),
-        opts.getOrElse("--cores", "2").toInt)
-      println(m.json)
-      return
+    if (opts.get("--kernel").isEmpty) Bench.kgModelCached // train once, untimed
+    val doc = pairedRounds(protocol, low, high, int("--rounds", 3), int("--cooldown", 0),
+      control = opts.contains("--control"))
+    opts.get("--json").foreach { p =>
+      java.nio.file.Files.writeString(java.nio.file.Paths.get(p), doc + "\n")
+      System.err.println(s"[scaling] wrote $p")
     }
-    opts.get("--kernel").foreach { spec =>
-      // --kernel totalRounds --low N --high M --rounds R: interleaved paired
-      // raw-kernel control, same protocol as the Spark runs
-      val totalRounds = spec.toLong
-      val low = opts.getOrElse("--low", "2").toInt
-      val high = opts.getOrElse("--high", "8").toInt
-      val reps = opts.getOrElse("--rounds", "3").toInt
-      val effs = scala.collection.mutable.ListBuffer.empty[Double]
-      for (r <- 0 until reps) {
-        val order = if (r % 2 == 0) Seq(low, high) else Seq(high, low)
-        val walls = scala.collection.mutable.Map.empty[Int, Double]
-        for (c <- order) {
-          val (w, cpu) = kernelControl(c, totalRounds)
-          walls(c) = w
-          System.err.println(f"[kernel] round $r threads=$c wall=$w%.1f s cpu=$cpu%.1f s")
-        }
-        val e = (walls(low) / walls(high)) / (high.toDouble / low)
-        System.err.println(f"[kernel] round $r paired efficiency = $e%.3f")
-        effs += e
-      }
-      val med = effs.sorted.apply(effs.length / 2)
-      println(f"""{"kernel_scaling_efficiency":$med%.3f,"rounds":${effs.map(e => f"$e%.3f").mkString("[", ",", "]")},"low":$low,"high":$high,"total_rounds":$totalRounds}""")
-      return
-    }
-    opts.get("--cluster").foreach { _ =>
-      // --cluster --pages N --low 1 --high 4 --rounds R [--stage full]:
-      // the same paired protocol, but each level is a REAL multi-process
-      // Spark standalone cluster (local-cluster mode): `low`/`high` count
-      // WORKERS, each worker one executor JVM with 2 cores and ITS OWN HEAP.
-      // This is the faithful sandbox analogue of the north rule's "N → 4N
-      // executors": adding executors adds heaps and allocators, unlike
-      // local[N], which adds threads inside ONE shared heap — the wall gap
-      // local[2]→local[8] shows is dominated by exactly that shared-heap
-      // contention (raw-kernel control: the host grants 4× CPU at
-      // measurement-scale durations, efficiency 0.99).
-      clusterMain(nPages,
-        opts.getOrElse("--low", "1").toInt, opts.getOrElse("--high", "4").toInt,
-        opts.getOrElse("--rounds", "3").toInt, opts.getOrElse("--stage", "full"),
-        opts.getOrElse("--cooldown", "0").toInt,
-        jsonOut = opts.get("--json"),
-        withControl = opts.contains("--control"),
-        cores = opts.getOrElse("--cores", "2").toInt)
-      return
-    }
-    opts.get("--measure").foreach { c =>
-      measureMain(c.toInt, nPages, opts.getOrElse("--stage", "full")); return
-    }
-    val low = opts.getOrElse("--low", "8").toInt
-    val high = opts.getOrElse("--high", "32").toInt
-    val out = opts.getOrElse("--out", "BENCH.md")
-
-    Bench.kgModelCached // train once, untimed
-    val rounds = opts.getOrElse("--rounds", "3").toInt
-    val stage = opts.getOrElse("--stage", "full") // full | mentions
-
-    def job(spark: org.apache.spark.sql.SparkSession, n: Long) =
-      if (stage == "mentions") Bench.mentionThroughput(spark, n)
-      else if (stage == "curate") Bench.curateThroughput(spark, n)
-      else Bench.kgThroughput(spark, n)
-
-    // parallel utilization = Σ task executorRunTime / (wall × threads): a
-    // HOST-INDEPENDENT check that the job actually keeps N threads busy.
-    // On this burst-credit sandbox wall-clock ratios measure the host's CPU
-    // grants as much as the code; utilization close to 1.0 at the high level
-    // shows the pipeline parallelizes and the residual wall gap is the
-    // host's, not a serial bottleneck in the plan.
-    // cpuSec = JVM process CPU time actually consumed by the run — the
-    // host-grant-independent measure of WORK. cpu_low ≈ cpu_high means the
-    // 4× parallelism adds no wasted cycles (no contention/spill inflation);
-    // the wall ratio is then set by the host's CPU grants, not the code.
-    def measureOnce(cpus: Int, warm: Boolean): (Double, Double, Long, Double, Double, Double) = {
-      val spark = Bench.session(cpus.toString)
-      spark.sparkContext.setLogLevel("ERROR")
-      val taskTime = new java.util.concurrent.atomic.AtomicLong(0L)
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-          if (te.taskMetrics != null) taskTime.addAndGet(te.taskMetrics.executorRunTime)
-      }
-      val osBean = java.lang.management.ManagementFactory.getOperatingSystemMXBean
-        .asInstanceOf[com.sun.management.OperatingSystemMXBean]
-      try {
-        if (warm) job(spark, math.max(2000L, nPages / 20)) // JIT + codegen
-        spark.sparkContext.addSparkListener(listener)
-        taskTime.set(0L)
-        val cpu0 = osBean.getProcessCpuTime
-        val t0 = System.nanoTime()
-        val (d, t, n) = job(spark, nPages)
-        val wall = (System.nanoTime() - t0) / 1e9
-        val cpuSec = (osBean.getProcessCpuTime - cpu0) / 1e9
-        val util = (taskTime.get() / 1000.0) / (wall * cpus)
-        (d, t, n, wall, util, cpuSec)
-      } finally spark.stop()
-    }
-
-    // Host CPU availability fluctuates (shared sandbox with burst credits,
-    // which DRAIN over a run) — so (a) interleave the two levels, (b)
-    // ALTERNATE which level goes first each round (a fixed order
-    // systematically hands the second level more-drained credits), and (c)
-    // take the median of the PAIRED per-round efficiencies, which is robust
-    // to slow drift that medians-of-walls are not.
-    val samples = scala.collection.mutable.Map[Int, List[(Double, Double, Long, Double, Double, Double)]]()
-      .withDefaultValue(Nil)
-    val pairEffs = scala.collection.mutable.ListBuffer.empty[Double]
-    for (r <- 0 until rounds) {
-      val order = if (r % 2 == 0) Seq(low, high) else Seq(high, low)
-      val walls = scala.collection.mutable.Map.empty[Int, Double]
-      for (c <- order) {
-        val m = measureOnce(c, warm = r == 0)
-        System.err.println(f"[scaling] round $r cpus=$c wall=${m._4}%.1f s docs/s=${m._1}%.1f util=${m._5}%.3f cpu=${m._6}%.1f s")
-        samples(c) = m :: samples(c)
-        walls(c) = m._4
-      }
-      val e = (walls(low) / walls(high)) / (high.toDouble / low)
-      System.err.println(f"[scaling] round $r paired efficiency = $e%.3f")
-      pairEffs += e
-    }
-    def median(c: Int) = samples(c).sortBy(_._4).apply(samples(c).length / 2)
-    val (dLow, tLow, n1, wallLow, utilLow, cpuLow) = median(low)
-    val (dHigh, tHigh, n2, wallHigh, utilHigh, cpuHigh) = median(high)
-    val workEff = cpuLow / cpuHigh
-    require(n1 == n2, s"nondeterministic triple count: $n1 vs $n2")
-    val eff = pairEffs.sorted.apply(pairEffs.length / 2)
-
-    val md =
-      f"""# BENCH — KG pipeline scaling evidence
-         |
-         |Protocol (BASELINE.md): identical job — pages → sentences → CRF
-         |mentions → links → triples on $nPages%d generated pages (seed 42) — at
-         |two parallelism levels in this sandbox standing in for N and 4N
-         |executors. Triple counts are identical at both levels ($n1%d).
-         |
-         || parallelism | wall (s) | docs/sec | triples/sec | thread utilization | process CPU (s) |
-         || --- | --- | --- | --- | --- | --- |
-         || local[$low%d] | $wallLow%.1f | $dLow%.1f | $tLow%.1f | $utilLow%.3f | $cpuLow%.1f |
-         || local[$high%d] | $wallHigh%.1f | $dHigh%.1f | $tHigh%.1f | $utilHigh%.3f | $cpuHigh%.1f |
-         |
-         |**Scaling efficiency = $eff%.3f** (median of paired per-round
-         |(T_$low%d / T_$high%d) / ${high / low}%d; target ≥ 0.8). Per-round: ${pairEffs.map(e => f"$e%.3f").mkString(", ")}.
-         |Thread utilization = Σ task executorRunTime / (wall × threads) —
-         |host-independent evidence the job keeps all threads busy at both
-         |levels (a serial bottleneck would show as utilization collapsing at
-         |the higher level). **Work efficiency (CPU_$low%d / CPU_$high%d) =
-         |$workEff%.3f**: total process CPU consumed for the SAME work at the
-         |two levels — parallelization overhead, independent of the host's
-         |CPU grants.
-         |""".stripMargin
-    java.nio.file.Files.writeString(java.nio.file.Paths.get(out), md)
-    println(md)
-    println(f"""{"scaling_efficiency":$eff%.3f,"work_efficiency":$workEff%.3f,"util_low":$utilLow%.3f,"util_high":$utilHigh%.3f,"low_cpus":$low,"high_cpus":$high,"docs_per_sec_low":$dLow%.1f,"docs_per_sec_high":$dHigh%.1f,"pages":$nPages}""")
   }
 }

@@ -94,4 +94,13 @@ private[run] object Cli {
     }
     (opts.toMap, pos.result())
   }
+
+  /** [[parse]], failing on any option not in `known`. */
+  def parse(args: Array[String], known: Set[String]): (Map[String, String], IndexedSeq[String]) = {
+    val (opts, pos) = parse(args)
+    val unknown = opts.keySet -- known
+    require(unknown.isEmpty, s"unknown option ${unknown.toSeq.sorted.mkString(", ")}; " +
+      s"known: ${known.toSeq.sorted.mkString(" ")}")
+    (opts, pos)
+  }
 }

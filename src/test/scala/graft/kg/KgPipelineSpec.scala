@@ -123,6 +123,21 @@ class KgPipelineSpec extends AnyFunSuite {
     assert(run(1).toSeq === run(7).toSeq)
   }
 
+  test("PipelineCli on a file:/// URI root: model.json and metrics.json land under it, a rerun resumes") {
+    val dir = java.nio.file.Files.createTempDirectory("kg cli uri")
+    val root = s"file://$dir"
+    val first = PipelineCli.run(spark, root, 20, log = _ => ())
+    val (model, metrics) = (dir.resolve("model.json"), dir.resolve("metrics.json"))
+    assert(java.nio.file.Files.exists(model) && java.nio.file.Files.exists(metrics))
+    assert(java.nio.file.Files.readString(metrics).contains(s"\"triples\":${first.nTriples},"))
+    val modelJson = java.nio.file.Files.readString(model)
+    val logs = scala.collection.mutable.ArrayBuffer.empty[String]
+    val again = PipelineCli.run(spark, root, 20, log = logs += _)
+    assert((again.nMentions, again.nTriples) === ((first.nMentions, first.nTriples)))
+    assert(logs.nonEmpty && logs.forall(_.contains("resuming from")), logs.mkString("\n"))
+    assert(java.nio.file.Files.readString(model) === modelJson)
+  }
+
   test("checkpoints on a file:/// URI root: write, resume, invalidate, recompute") {
     // a space in the directory name: input_file_name() URI-encodes it
     val dir = java.nio.file.Files.createTempDirectory("kg uri")

@@ -2,7 +2,7 @@
 # Launch graft.run.ScalingBench under plain java (sbt's JVM would sit on the
 # measurement). Usage: tools/cluster_run.sh <ScalingBench args...>
 # Extra executor JVM flags via SPARK_GRAFT_EXEC_OPTS (e.g. GC logging).
-cd /root/repo || exit 1
+cd "$(dirname "$0")/.." || exit 1
 ADD_OPENS=""
 for p in java.lang java.lang.invoke java.lang.reflect java.io java.net \
          java.nio java.util java.util.concurrent java.util.concurrent.atomic; do
