@@ -1223,11 +1223,12 @@ object SparkEntry {
       graft.kg.KgPipeline.cooccurrence(links)
     }),
     "q53_kg_canonical" -> ((s, _) => {
-      // mentions feeds BOTH links and canonical — persist so the CRF decode
-      // runs once, not re-inlined per reference (the round-2 q53 regression;
-      // PipelineCli gets the same effect from its parquet checkpoints)
-      val mentions = kgMentions(s)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      // mentions feeds BOTH links and canonical — localCheckpoint so the CRF
+      // decode runs once, not re-inlined per reference (the round-2 q53
+      // regression; PipelineCli gets the same effect from its parquet
+      // checkpoints). Not eager: the decode is stored by the first job that
+      // reads it (canonical's surface checkpoint) instead of a job of its own
+      val mentions = kgMentions(s).localCheckpoint(eager = false)
       val links = graft.kg.KgPipeline.links(mentions, graft.kg.KgPipeline.aliasDf(s))
       graft.kg.KgPipeline.canonical(mentions, links)
     }))

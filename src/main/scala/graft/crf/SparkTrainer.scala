@@ -32,15 +32,15 @@ object SparkTrainer {
     val dense =
       if (config.useDenseFeatures) vectors.map((_, config.denseFeaturesClsPooling)) else None
 
-    // 1. distributed featurization → (attrs per token, tags)
+    // 1. distributed featurization → (attrs per token, tags), materialized
+    //    once: the dictionaries and the encoding below each read it
     val featurized: Dataset[(Array[Array[String]], Array[Array[Double]], Array[String])] =
       examples.map { ex =>
         val crfToks = Featurizer.goldExampleToCrfTokens(ex, bilou, dense)
         val feats = Featurizer.sentenceFeatures(crfToks, config.features)
         (feats.map(_.map(_.attr)).toArray, feats.map(_.map(_.weight)).toArray,
           crfToks.map(_.entity).toArray)
-      }.filter(_._3.nonEmpty)
-    featurized.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      }.filter(_._3.nonEmpty).localCheckpoint(eager = false)
 
     // 2. dictionaries: labels (collect keys only, not features) and the
     //    surviving (attr,label) pairs. The pair frequencies are summed
@@ -62,13 +62,11 @@ object SparkTrainer {
     val idx = Trainer.FeatureIndex(labelSeq, attrSeq, config)((a, y) => observed((attrSeq(a), labelSeq(y))))
 
     // 3. encode sentences against the dictionaries, keep distributed
+    //    (materialized once, before the iteration loop)
     val bcIdx = spark.sparkContext.broadcast(idx)
     val encoded: Dataset[Trainer.EncSent] = featurized.map { case (attrs, ws, tags) =>
       Trainer.encodeSent(bcIdx.value, attrs, ws, tags)
-    }
-    encoded.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    encoded.count() // materialize before the iteration loop
-    featurized.unpersist()
+    }.localCheckpoint(eager = false)
 
     // 4. optimizer on driver; per-partition loss+gradient partials combined
     //    on the driver in FIXED partition-id order — treeAggregate combines
@@ -88,7 +86,6 @@ object SparkTrainer {
       bcW.destroy()
       partials
     }
-    encoded.unpersist()
     Trainer.toModel(idx, w, config)
   }
 }

@@ -80,9 +80,11 @@ object KgPipeline {
     * No exchange, sort or aggregate: the pick runs inside the decode stage.
     * One output row per mention row, so the pick is rank-1 per
     * (url, sent_id, start) whenever each url appears once in the input —
-    * url is the pipeline's page key (a repeated url would repeat its
-    * mentions, and [[triples]]' join to the sentences multiplies them
-    * already). */
+    * url is the pipeline's page key. A url present twice repeats its
+    * mentions and links, and [[triples]] then counts each of its sources 8
+    * times (every mention twice in the sentence group, joined to both copies
+    * of the sentence) with n_urls and conf unchanged — today's behaviour,
+    * pinned in KgPipelineSpec ("a url repeated in the pages ..."). */
   def links(mentions: DataFrame, alias: DataFrame): DataFrame = {
     val top = array_max(transform(alias("cands"), c =>
       struct((c("prior") * mentions("confidence")).as("score"), c("entity_id").as("entity_id"))))
@@ -252,16 +254,18 @@ object KgPipeline {
     * npmi = ln(p(a,b) / (p(a)·p(b))) / −ln p(a,b) over the universe of
     * entity-bearing sentences, with the p(a,b) = 1 singularity pinned to
     * 1.0. Counts are exact Longs, so the double is reproducible at any
-    * parallelism; emitted `round(·, 4)`. */
+    * parallelism; emitted `round(·, 4)`. The per-sentence sets are a lazy
+    * local checkpoint: the first job that reads them stores them, and no
+    * cache entry outlives the call. */
   def cooccurrence(links: DataFrame): DataFrame = {
     val spark = links.sparkSession
     import spark.implicits._
-    // Referenced three times below (pairs, marginals, total) → persist, or
-    // each reference re-inlines the upstream CRF decode (the round-2 q53
+    // Referenced three times below (pairs, marginals, total) → checkpoint,
+    // or each reference re-inlines the upstream CRF decode (the round-2 q53
     // lesson).
     val perSent = links.groupBy($"url", $"sent_id")
       .agg(sort_array(collect_set($"entity_id")).as("ents"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .localCheckpoint(eager = false)
 
     val pairs = explodeOrderedPairs(perSent.filter(size($"ents") >= 2), "ents", "url")
       .select($"url", $"a".as("entity_a"), $"b".as("entity_b"))

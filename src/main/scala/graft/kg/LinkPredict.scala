@@ -23,7 +23,7 @@ import org.apache.spark.sql.functions._
   *
   * The doubled adjacency is materialized ONCE (localCheckpoint) and reused
   * by the degree aggregation and both sides of the self-join — the
-  * multi-consumer persist lesson (q53/anchorProfile).
+  * multi-consumer materialization lesson (q53/anchorProfile).
   */
 object LinkPredict {
 

@@ -43,13 +43,14 @@ object LocalIter {
   private def maxEdges(spark: SparkSession): Long =
     spark.conf.get("spark.graft.localIterMaxEdges", "200000").toLong
 
-  /** The one local-vs-distributed gate: the rows of the materialized frame
-    * `e` when it holds at most `rowsPerEdge` × the bound rows (2 for edge
+  /** The one local-vs-distributed gate: the rows of the frame `e` (a
+    * materialized edge set, or a slim projection whose count is a pruned
+    * scan) when it holds at most `rowsPerEdge` × the bound rows (2 for edge
     * frames that carry both directions of every undirected edge), else
     * None. Empty frames stay distributed, so bound 0 forces the distributed
     * path for every input. */
   def collectSmall(e: DataFrame, rowsPerEdge: Int = 1): Option[Array[Row]] = {
-    val n = e.count() // a cheap scan of the materialized edges
+    val n = e.count() // a cheap scan: materialized rows, or a pruned projection
     if (n > 0 && n <= rowsPerEdge * maxEdges(e.sparkSession)) Some(e.collect()) else None
   }
 

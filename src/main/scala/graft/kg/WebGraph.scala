@@ -53,14 +53,15 @@ object WebGraph {
     * common anchor (ties → lexicographically smallest). One aggregation
     * keyed by (dst, anchor) then a bounded-heap top-1 per dst — the
     * two-phase shape that survives hot targets (a hub's million in-links
-    * partial-aggregate map-side; no per-dst sort). */
+    * partial-aggregate map-side; no per-dst sort). The edge projection is
+    * a lazy local checkpoint: the first job that reads it stores it, and
+    * no cache entry outlives the call. */
   def anchorProfile(pages: DataFrame): DataFrame = {
     // the edge projection feeds two independent aggregation branches
-    // (perAnchor→totals/top and hosts) — persist so the html extraction,
-    // the dominant cost at scale, runs ONCE instead of once per branch
-    // (the q53-persist lesson; plan-gated in WebGraphSpec)
-    val l = links(pages).withColumn("src_host", host(col("src")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // (perAnchor→totals/top and hosts) — checkpoint it so the html
+    // extraction, the dominant cost at scale, runs ONCE instead of once
+    // per branch (the q53 lesson)
+    val l = links(pages).withColumn("src_host", host(col("src"))).localCheckpoint(eager = false)
     val perAnchor = l.groupBy("dst", "anchor")
       .agg(count(lit(1)).as("n"))
     val totals = perAnchor.groupBy("dst")

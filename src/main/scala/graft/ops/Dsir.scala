@@ -28,8 +28,10 @@ import org.apache.spark.sql.functions._
   *
   * Scale design: the weight table is AT MOST 65,536 rows no matter the
   * corpus size, so the scoring join is a broadcast — the corpus-sized gram
-  * stream never shuffles for it. Raw grams are extracted ONCE (persisted)
-  * and reused for both the q̂ counts and the scoring pass; the per-doc sum
+  * stream never shuffles for it. Raw grams are extracted ONCE
+  * (lazily localCheckpointed: the first job that reads them stores them,
+  * and no cache entry outlives the call) and reused for both the q̂ counts and the
+  * scoring pass; the per-doc sum
   * partial-aggregates map-side; selection is `orderBy().limit()` =
   * TakeOrderedAndProject, a bounded per-partition heap + driver merge of m
   * rows, never a global sort. Ties break by doc_id, so the selected set is
@@ -66,21 +68,20 @@ object Dsir {
   }
 
   /** Importance scores for every (non-empty) raw doc:
-    * (doc_id, score_fp bigint, n_grams bigint). */
+    * (doc_id, score_fp bigint, n_grams bigint). The raw grams and both
+    * bucket tables are lazy local checkpoints. */
   def score(raw: DataFrame, target: DataFrame): DataFrame = {
     // one gram-extraction pass over the raw corpus: feeds BOTH the q̂
     // bucket counts and the scoring join. (An Inputs.spread before the
     // gram pass was probed and measured FLAT-to-negative here — the
-    // persist's cache write already follows the explode, and the extra
-    // exchange of raw text costs what the parallel md5 saves.)
-    val rg = grams(raw).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // cq/cp are each consumed twice (weight join + N totals) — persist the
-    // ≤65,536-row bucket tables so the corpus-gram aggregation runs ONCE
-    // and the target extraction isn't replayed for its total
-    val cq = rg.groupBy("b").agg(count(lit(1)).as("cq"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val cp = grams(target).groupBy("b").agg(count(lit(1)).as("cp"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // materialization already follows the explode, and the extra exchange
+    // of raw text costs what the parallel md5 saves.)
+    val rg = grams(raw).localCheckpoint(eager = false)
+    // cq/cp are each consumed twice (weight join + N totals) — checkpoint
+    // the ≤65,536-row bucket tables so the corpus-gram aggregation runs
+    // ONCE and the target extraction isn't replayed for its total
+    val cq = rg.groupBy("b").agg(count(lit(1)).as("cq")).localCheckpoint(eager = false)
+    val cp = grams(target).groupBy("b").agg(count(lit(1)).as("cp")).localCheckpoint(eager = false)
     val tot = cq.agg(sum(col("cq")).as("nq"))
       .crossJoin(cp.agg(sum(col("cp")).as("np"))) // 1 row
     // raw docs only carry buckets present in cq, so cq is the spine

@@ -1,6 +1,7 @@
 package graft.ops
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 
 /** Input-distribution guard for operators with heavy scan-side kernels
   * (shingle/minhash hashing, gram md5, quality regex chains): if the
@@ -15,6 +16,16 @@ object Inputs {
 
   def spread(df: DataFrame): DataFrame = {
     val p = df.sparkSession.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions < p) df.repartition(p) else df
+    if (scanPartitions(df) < p) df.repartition(p) else df
+  }
+
+  /** The partition count of `df`'s physical plan, read without a job and
+    * without building a `Dataset.rdd` (which plans a deserializing copy and
+    * reports it as a SQL execution). A plan with an exchange is adaptive and
+    * its input is already spread by that exchange; any other plan is
+    * narrow over its scans, whose RDD knows its partitions once built. */
+  private def scanPartitions(df: DataFrame): Int = df.queryExecution.executedPlan match {
+    case _: AdaptiveSparkPlanExec => Int.MaxValue
+    case plan => plan.execute().getNumPartitions
   }
 }

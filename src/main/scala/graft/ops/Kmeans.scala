@@ -11,15 +11,15 @@ import org.apache.spark.sql.functions._
   * corpus as Spark aggregations — the shape to use when cluster membership
   * itself is the product.
   *
-  * Scale design — per iteration: one scan of the persisted quantized
-  * projection for assignment (pure codegen'd array arithmetic against
+  * Scale design — per iteration: one scan of the localCheckpointed
+  * quantized projection for assignment (pure codegen'd array arithmetic against
   * literal centroids: no shuffle, no UDF, no join) plus one
   * (cluster, dim)-keyed partial aggregation whose shuffle is k·dim rows per
   * map partition regardless of corpus size (map-side combine collapses the
   * posexplode). Driver state is the k·dim centroid matrix itself — the same
   * bounded-collect discipline as the trainer's minFreq table. The plan does
   * NOT grow with iterations (centroids re-enter as literals), so no
-  * localCheckpoint is needed, unlike PageRank/CC.
+  * per-round localCheckpoint is needed, unlike PageRank/CC.
   *
   * Determinism / cross-engine parity — all distance and update arithmetic
   * is integer: components quantize to `floor(x · scale)` longs, distances
@@ -68,38 +68,38 @@ object Kmeans {
           idCol: String = "vec_id", vecCol: String = "embedding"): IndexedSeq[Array[Long]] = {
     require(k >= 1, s"k must be >= 1, got $k")
     require(iters >= 0, s"iters must be >= 0, got $iters")
-    val qdf = embeddings
+    val proj = embeddings
       .select(col(idCol).cast("long").as("vec_id"), quantize(col(vecCol), scale).as("q"))
-      .persist()
-    try {
-      // bounded-corpus early-out: ONE collect of the slim quantized
-      // projection replaces `iters` assignment+aggregation jobs — identical
-      // exact-integer Lloyd arithmetic (LocalFitParitySpec); the
-      // distributed loop below is the path above the bound
-      val small = graft.kg.LocalIter.collectSmall(qdf)
-      if (small.isDefined)
-        return fitLocal(small.get.map(r => (r.getLong(0), r.getSeq[Long](1).toArray)), k, iters)
-      var cents: IndexedSeq[Array[Long]] = qdf.orderBy("vec_id").limit(k).collect()
-        .map(_.getSeq[Long](1).toArray).toIndexedSeq
-      require(cents.nonEmpty, "k-means on an empty corpus")
-      for (_ <- 1 to iters) {
-        // k·dim rows total after partial agg — bounded driver collect
-        val sums = withAssignment(qdf, cents)
-          .select(col("cluster"), posexplode(col("q")))
-          .groupBy("cluster", "pos")
-          .agg(sum("col").as("s"), count(lit(1)).as("n"))
-          .collect()
-        val updated = sums.groupBy(_.getLong(0)).map { case (j, rows) =>
-          val arr = cents(j.toInt).clone()
-          rows.foreach { r =>
-            arr(r.getInt(1)) = math.floor(r.getLong(2).toDouble / r.getLong(3)).toLong
-          }
-          j.toInt -> arr
+    // bounded-corpus early-out: ONE collect of the slim quantized
+    // projection replaces `iters` assignment+aggregation jobs — identical
+    // exact-integer Lloyd arithmetic (LocalFitParitySpec); the
+    // distributed loop below is the path above the bound. The gate's count
+    // prunes the projection to a row count, so the projection is only
+    // materialized on the path that reads it every iteration.
+    val small = graft.kg.LocalIter.collectSmall(proj)
+    if (small.isDefined)
+      return fitLocal(small.get.map(r => (r.getLong(0), r.getSeq[Long](1).toArray)), k, iters)
+    val qdf = proj.localCheckpoint(eager = false)
+    var cents: IndexedSeq[Array[Long]] = qdf.orderBy("vec_id").limit(k).collect()
+      .map(_.getSeq[Long](1).toArray).toIndexedSeq
+    require(cents.nonEmpty, "k-means on an empty corpus")
+    for (_ <- 1 to iters) {
+      // k·dim rows total after partial agg — bounded driver collect
+      val sums = withAssignment(qdf, cents)
+        .select(col("cluster"), posexplode(col("q")))
+        .groupBy("cluster", "pos")
+        .agg(sum("col").as("s"), count(lit(1)).as("n"))
+        .collect()
+      val updated = sums.groupBy(_.getLong(0)).map { case (j, rows) =>
+        val arr = cents(j.toInt).clone()
+        rows.foreach { r =>
+          arr(r.getInt(1)) = math.floor(r.getLong(2).toDouble / r.getLong(3)).toLong
         }
-        cents = cents.indices.map(j => updated.getOrElse(j, cents(j)))
+        j.toInt -> arr
       }
-      cents
-    } finally { qdf.unpersist(); () }
+      cents = cents.indices.map(j => updated.getOrElse(j, cents(j)))
+    }
+    cents
   }
 
   /** Driver-local Lloyd loop — the [[fit]] arithmetic verbatim: exact Long
@@ -171,17 +171,18 @@ object Kmeans {
     * as Dedup's maxDf/maxBucket caps): clusters larger than it are skipped
     * deterministically rather than detonating an O(c²) join. Cosine is
     * computed on the ORIGINAL float vectors (norms materialized before the
-    * self-join — see [[Similarity.cosineWithNorms]]). */
+    * self-join — see [[Similarity.cosineWithNorms]]). Building the frame
+    * runs the fit; the slim assignment is a lazy local checkpoint. */
   def semDedupPairs(embeddings: DataFrame, k: Int, iters: Int,
                     threshold: Double, scale: Long = 1000000L,
                     maxCluster: Long = 100000L): DataFrame = {
-    // persist the SLIM assignment (2 longs/row — never the corpus vectors):
-    // cluster sizes and both self-join sides derive from it, and without it
-    // every reference re-inlined the full assign scan — the plan audit
-    // showed 16 parquet scans of the embeddings for one query. The
+    // checkpoint the SLIM assignment (2 longs/row — never the corpus
+    // vectors): cluster sizes and both self-join sides derive from it, and
+    // without it every reference re-inlined the full assign scan — the plan
+    // audit showed 16 parquet scans of the embeddings for one query. The
     // size cap becomes a broadcast semi-join on the ≤k cluster ids.
     val a = cluster(embeddings, k, iters, scale).select("vec_id", "cluster")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .localCheckpoint(eager = false)
     val okCl = a.groupBy("cluster").agg(count(lit(1)).as("csize"))
       .filter(col("csize") <= maxCluster).select("cluster")
     val withVec = embeddings.select(col("vec_id").cast("long").as("vec_id"), col("embedding"))

@@ -22,22 +22,19 @@ import org.apache.spark.sql.functions._
   * property of this corpus-scale pipeline, not a bitwise guarantee per
   * bigram.
   *
-  * Scale design: the corpus is TOKENIZED ONCE — a persisted (doc_id, words)
-  * projection feeds unigram counts, bigram counts, the scored bigrams and
-  * the final per-doc frame (the previous formulation re-derived it per
-  * consumer: 10 scans, 5 redundant tokenizations; at a real lake scale this
-  * projection would be a parquet checkpoint — kg.Checkpoints — instead of a
-  * cache). |V| is derived from the unigram table (count of rows), never a
-  * separate pass. Counts are hash aggregations (map-side partial); the
-  * (w1, w2) model join is a plain shuffle join (model tables grow with the
-  * corpus; no broadcast assumption). The persisted projection lives until
-  * the caller releases it: one-shot jobs (CurateCli stages) release on
-  * session end, and the long-lived 62-query sweeps (Verify/Bench) clear the
-  * cache manager after each query — the bounded-cache discipline; a real
-  * lake deployment would checkpoint to parquet instead. The w1 unigram join
-  * is EXPLICITLY
-  * SALTED ([[SkewJoin]]) — unigram keys are Zipf-distributed and stop words
-  * are the canonical hot key, the north rule's explicit-skew case — then
+  * Scale design: the corpus is TOKENIZED ONCE — a localCheckpointed
+  * (doc_id, words) projection feeds unigram counts, bigram counts, the
+  * scored bigrams and the final per-doc frame (the previous formulation
+  * re-derived it per consumer: 10 scans, 5 redundant tokenizations; at a
+  * real lake scale this projection would be a parquet checkpoint —
+  * kg.Checkpoints). The checkpoint is lazy: the first job that reads the
+  * projection stores it, and no cache entry outlives the call. |V| is derived from
+  * the unigram table (count of rows), never a separate pass. Counts are
+  * hash aggregations (map-side partial); the (w1, w2) model join is a plain
+  * shuffle join (model tables grow with the corpus; no broadcast
+  * assumption). The w1 unigram join is EXPLICITLY SALTED ([[SkewJoin]]) —
+  * unigram keys are Zipf-distributed and stop words are the canonical hot
+  * key, the north rule's explicit-skew case — then
   * one count-shaped aggregation per doc. Nothing is collected to the
   * driver.
   */
@@ -63,13 +60,11 @@ object LmScore {
     * strongly negative ⇒ out-of-distribution/gibberish. */
   def meanLogProb(docs: DataFrame, trainOn: Option[DataFrame] = None,
                   textCol: String = "text"): DataFrame = {
-    // tokenize once; self-train shares the same persisted projection
-    val toks = docs.select(col("doc_id"), words(col(textCol)).as("ws"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val trainToks = trainOn
-      .map(t => t.select(col("doc_id"), words(col(textCol)).as("ws"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-      .getOrElse(toks)
+    // tokenize once; self-train shares the same checkpointed projection
+    def tokens(d: DataFrame) =
+      d.select(col("doc_id"), words(col(textCol)).as("ws")).localCheckpoint(eager = false)
+    val toks = tokens(docs)
+    val trainToks = trainOn.map(tokens).getOrElse(toks)
 
     val uni = trainToks.select(explode(col("ws")).as("w"))
       .groupBy(col("w")).agg(count(lit(1)).as("c1"))

@@ -19,7 +19,9 @@ import org.apache.spark.sql.functions._
   * the lesson of ops/LmScore.scala:21 applied at design time).
   *
   * Scale design (the q63 k-means discipline, ops/Kmeans.scala:37): the
-  * integer feature projection is computed once at scan rate and persisted;
+  * integer feature projection is computed once at scan rate (collected to
+  * the driver under the [[graft.kg.LocalIter]] bound, localCheckpointed
+  * above it);
   * each epoch is ONE map-side-combined aggregation collecting exactly
   * F+1 longs to the driver (the bounded-collect rule), and the updated
   * weights re-enter the next epoch as LITERALS — the plan never grows with
@@ -53,43 +55,43 @@ object Perceptron {
   /** Trained weights (w0=bias, w1..w3) after `epochs` full-batch passes
     * from zero init. One bounded collect of 4 longs per epoch. */
   def train(feats: DataFrame, epochs: Int): Array[Long] = {
-    val f = feats.persist()
-    try {
-      // bounded-corpus early-out: one collect of the slim integer feature
-      // rows replaces the per-epoch aggregation jobs — identical exact Long
-      // update (PerceptronSpec's oracle parity covers both paths)
-      val small = graft.kg.LocalIter.collectSmall(
-        f.select(col("y"), col("x1"), col("x2"), col("x3")))
-      if (small.isDefined) {
-        val rows = small.get.map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-        var wl = Array(0L, 0L, 0L, 0L)
-        (1 to epochs).foreach { _ =>
-          var g0 = 0L; var g1 = 0L; var g2 = 0L; var g3 = 0L
-          rows.foreach { case (y, x1, x2, x3) =>
-            val dot = wl(0) + wl(1) * x1 + wl(2) * x2 + wl(3) * x3
-            if ((y == 1L) != (dot > 0L)) { g0 += y; g1 += y * x1; g2 += y * x2; g3 += y * x3 }
-          }
-          wl = Array(wl(0) + g0, wl(1) + g1, wl(2) + g2, wl(3) + g3)
-        }
-        return wl
-      }
-      var w = Array(0L, 0L, 0L, 0L)
+    val proj = feats.select(col("y"), col("x1"), col("x2"), col("x3"))
+    // bounded-corpus early-out: one collect of the slim integer feature
+    // rows replaces the per-epoch aggregation jobs — identical exact Long
+    // update (PerceptronSpec's oracle parity covers both paths). The gate's
+    // count prunes the features to a row count, so they are only
+    // materialized on the path that reads them every epoch.
+    val small = graft.kg.LocalIter.collectSmall(proj)
+    if (small.isDefined) {
+      val rows = small.get.map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
+      var wl = Array(0L, 0L, 0L, 0L)
       (1 to epochs).foreach { _ =>
-        val dot = lit(w(0)) + lit(w(1)) * col("x1") +
-          lit(w(2)) * col("x2") + lit(w(3)) * col("x3")
-        // batch update: all rows judged against the PRE-epoch weights
-        val mis = (col("y") === 1L) =!= (dot > 0L)
-        val g = f.filter(mis)
-          .agg(coalesce(sum(col("y")), lit(0L)),
-            coalesce(sum(col("y") * col("x1")), lit(0L)),
-            coalesce(sum(col("y") * col("x2")), lit(0L)),
-            coalesce(sum(col("y") * col("x3")), lit(0L)))
-          .head()
-        w = Array(w(0) + g.getLong(0), w(1) + g.getLong(1),
-          w(2) + g.getLong(2), w(3) + g.getLong(3))
+        var g0 = 0L; var g1 = 0L; var g2 = 0L; var g3 = 0L
+        rows.foreach { case (y, x1, x2, x3) =>
+          val dot = wl(0) + wl(1) * x1 + wl(2) * x2 + wl(3) * x3
+          if ((y == 1L) != (dot > 0L)) { g0 += y; g1 += y * x1; g2 += y * x2; g3 += y * x3 }
+        }
+        wl = Array(wl(0) + g0, wl(1) + g1, wl(2) + g2, wl(3) + g3)
       }
-      w
-    } finally f.unpersist()
+      return wl
+    }
+    val f = proj.localCheckpoint(eager = false)
+    var w = Array(0L, 0L, 0L, 0L)
+    (1 to epochs).foreach { _ =>
+      val dot = lit(w(0)) + lit(w(1)) * col("x1") +
+        lit(w(2)) * col("x2") + lit(w(3)) * col("x3")
+      // batch update: all rows judged against the PRE-epoch weights
+      val mis = (col("y") === 1L) =!= (dot > 0L)
+      val g = f.filter(mis)
+        .agg(coalesce(sum(col("y")), lit(0L)),
+          coalesce(sum(col("y") * col("x1")), lit(0L)),
+          coalesce(sum(col("y") * col("x2")), lit(0L)),
+          coalesce(sum(col("y") * col("x3")), lit(0L)))
+        .head()
+      w = Array(w(0) + g.getLong(0), w(1) + g.getLong(1),
+        w(2) + g.getLong(2), w(3) + g.getLong(3))
+    }
+    w
   }
 
   /** Train on `docs` then score every doc with the final weights:

@@ -110,10 +110,10 @@ object Sampling {
   def temperatureSample(docs: DataFrame, alpha: Double = 0.5,
                         langCol: String = "lang", textCol: String = "text"): DataFrame = {
     require(alpha > 0.0 && alpha <= 1.0, s"alpha must be in (0, 1], got $alpha")
-    // persisted: consumed twice (thresholds + its min) — without it the
+    // checkpointed: consumed twice (thresholds + its min) — without it the
     // lang-column scan replays for the 1-row min (the Dsir cq/cp discipline)
     val counts = docs.groupBy(col(langCol).as("lang")).agg(count(lit(1)).as("n"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .localCheckpoint(eager = false)
     val nMin = counts.agg(min(col("n")).as("n_min")) // 1 row
     val ratio = col("n_min").cast("double") / col("n").cast("double")
     val rate = if (alpha == 0.5) sqrt(ratio) else pow(ratio, 1.0 - alpha)
@@ -135,10 +135,11 @@ object Sampling {
     * bit-reproducible in the DuckDB oracle (one exact-integer ratio, no
     * transcendentals at all).
     *
-    * Scale design: the text is scanned ONCE into a slim persisted
-    * (doc_id, source, n_tokens, bucket) projection (~40 B/row) — the totals
-    * aggregation and the keep filter both consume the projection, never the
-    * corpus bytes twice. The threshold table (rows = sources) broadcasts;
+    * Scale design: the text is scanned ONCE into a slim lazily
+    * localCheckpointed (doc_id, source, n_tokens, bucket) projection
+    * (~40 B/row), stored by the first job that reads it — the totals aggregation and the keep
+    * filter both consume the projection, never the corpus bytes twice, and
+    * no cache entry outlives the call. The threshold table (rows = sources) broadcasts;
     * the keep decision is the same scan-side md5 predicate as every sampler
     * here. Expected kept tokens per source ≈ min(B_s, T_s) (the md5 buckets
     * are uniform; exactness to the budget is a reservoir problem by design —
@@ -150,7 +151,7 @@ object Sampling {
     val slim = docs.select(col("doc_id"), col(sourceCol).as("source"),
         TextStats.tokenCount(col(textCol)).cast("long").as("n_tokens"),
         bucketHex(col("doc_id"), col(textCol)).as("bucket"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .localCheckpoint(eager = false)
     val budgetCol = budgets.foldLeft(lit(null).cast("long")) {
       case (acc, (s, b)) => when(col("source") === s, lit(b)).otherwise(acc)
     }

@@ -12,7 +12,9 @@ import org.apache.spark.sql.functions._
   * catches re-used sentences; this catches verbatim boilerplate at any
   * alignment, the dominant duplication mode in crawled webtext).
   *
-  * Scale design: one corpus scan tokenizes into a persisted slim projection;
+  * Scale design: one corpus scan tokenizes into a slim projection,
+  * lazily localCheckpointed (stored by the first job that reads it; no cache
+  * entry outlives the call);
   * n-gram occurrences ship as (doc_id, pos, 128-bit md5(gram)) — the shuffle
   * carries 16-byte keys, never the window text (the q21 fingerprint
   * discipline; a collision needs ~2^64 distinct windows). The duplicate
@@ -39,12 +41,12 @@ object SubstrDedup {
     require(n >= 2, s"window length must be >= 2, got $n")
     // tokenize ONCE: the projection feeds both the occurrence stream and the
     // final per-doc row (slim vs the corpus bytes, same rule as LmScore).
-    // Inputs.spread: the per-window md5 stream derives from this cached
-    // projection's partitioning — on unsplittable input it would run on
-    // 1-2 tasks (A/B: 1.35 s vs 1.72 s warm at sf0.1)
+    // Inputs.spread: the per-window md5 stream derives from this
+    // checkpointed projection's partitioning — on unsplittable input it
+    // would run on 1-2 tasks (A/B: 1.35 s vs 1.72 s warm at sf0.1)
     val toks = Inputs.spread(docs)
       .select(col("doc_id"), TextStats.words(col(textCol)).as("ws"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .localCheckpoint(eager = false)
     // positions explode through GenerateExec and the slice+concat+md5 run
     // in the following codegen projection — the previous transform() lambda
     // evaluated the whole window chain interpreted, per gram

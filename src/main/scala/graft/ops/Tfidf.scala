@@ -14,8 +14,9 @@ import org.apache.spark.sql.functions._
   * the word-keyed exchange is reused, not repeated), with the corpus size
   * entering as a broadcast 1-row cross join; the per-doc top-k is the
   * bounded-heap [[graft.plans.TopK]] operator — a hot document costs O(k)
-  * heap, no per-doc sort. The tf table persists because it feeds both the
-  * df aggregation and the score join (slim rows, NOT the corpus bytes).
+  * heap, no per-doc sort. The tf table is localCheckpointed because it
+  * feeds both the df aggregation and the score join (slim rows, NOT the
+  * corpus bytes); lazily, so the first job that reads it stores it.
   *
   * Determinism (the repo's fixed-point discipline): idf is floor(1e6 ·
   * ln((N+1)/(df+1))) — ONE libm ln per vocabulary word of a ratio of exact
@@ -31,7 +32,7 @@ object Tfidf {
     val tf = docs
       .select(col("doc_id"), explode(TextStats.words(col(textCol))).as("word"))
       .groupBy("doc_id", "word").agg(count(lit(1)).as("tf"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .localCheckpoint(eager = false)
     val df = tf.groupBy("word").agg(count(lit(1)).as("df"))
     val n = docs.agg(count(lit(1)).as("n_docs"))
     // df ≤ N always, so ln((N+1)/(df+1)) ≥ 0 and the floor stays a

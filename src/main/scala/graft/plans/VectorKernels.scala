@@ -17,15 +17,20 @@ import org.apache.spark.sql.types._
   * oracles + pins staying green): float→double widening per element, one
   * double multiply, left-to-right double accumulation — the exact IEEE
   * operation sequence of the HOF fold, so every cosine in the repo is
-  * unchanged to the last ulp. Inputs must be equal-length non-null
-  * `array<float>` (every embedding column in the repo; on length mismatch
-  * the shorter length wins rather than the HOF's null). */
+  * unchanged to the last ulp. Inputs must be equal-length `array<float>`
+  * without null elements (every embedding column in the repo): a length
+  * mismatch or a null element throws `IllegalArgumentException` instead of
+  * truncating or reading 0.0. A null array yields null (the expression is
+  * null-safe). */
 object VectorKernel {
   def dotF(x: ArrayData, y: ArrayData): Double = {
-    val n = math.min(x.numElements(), y.numElements())
+    val n = x.numElements()
+    require(n == y.numElements(), s"float_dot: vector lengths differ ($n vs ${y.numElements()})")
     var s = 0.0
     var i = 0
     while (i < n) {
+      if (x.isNullAt(i) || y.isNullAt(i)) throw new IllegalArgumentException(
+        s"float_dot: null vector element at index $i")
       s += x.getFloat(i).toDouble * y.getFloat(i).toDouble
       i += 1
     }
@@ -43,15 +48,25 @@ object VectorKernel {
   * LEFT-TO-RIGHT double accumulation — the exact IEEE sequence of the HOF
   * fold; ties break to the LOWEST cell index, exactly what
   * `array_min(array(struct(d, cell)…))` returned (lexicographic struct
-  * minimum). */
+  * minimum). The vector must match the centroids' dimension and hold no
+  * null element; otherwise the kernel throws `IllegalArgumentException`
+  * instead of truncating or reading 0.0. A null vector yields null. */
 object IvfKernel {
   def nearestCell(v: ArrayData, cents: Array[Array[Double]]): Int = {
+    val n = v.numElements()
+    require(n == cents(0).length,
+      s"ivf_nearest_cell: vector length $n, centroid dimension ${cents(0).length}")
+    var e = 0
+    while (e < n) {
+      if (v.isNullAt(e)) throw new IllegalArgumentException(
+        s"ivf_nearest_cell: null vector element at index $e")
+      e += 1
+    }
     var best = 0
     var bestD = Double.MaxValue
     var j = 0
     while (j < cents.length) {
       val c = cents(j)
-      val n = math.min(v.numElements(), c.length)
       var d = 0.0
       var i = 0
       while (i < n) {
@@ -70,6 +85,8 @@ object IvfKernel {
 case class IvfNearestCellExpression(child: Expression, cents: Array[Array[Double]])
     extends org.apache.spark.sql.catalyst.expressions.UnaryExpression with ExpectsInputTypes {
   require(cents.nonEmpty, "ivf_nearest_cell needs at least one centroid")
+  require(cents.forall(_.length == cents(0).length),
+    "ivf_nearest_cell: centroids of different dimensions")
   override def inputTypes = Seq(ArrayType(FloatType))
   override def dataType: DataType = IntegerType
   override def nullable: Boolean = child.nullable

@@ -218,8 +218,7 @@ object CurateCli {
     // Locale.ROOT: the f-interpolator honors the JVM default locale — a
     // comma-decimal locale would render "wall_sec":12,3 (invalid JSON)
     def num(d: Double) = String.format(java.util.Locale.ROOT, "%.1f", Double.box(d))
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(s"$outRoot/report.json"),
+    Checkpoints.writeText(outRoot, "report.json",
       (funnel.map { case (k, v) => s""""$k":$v""" } :+
         s""""wall_sec":${num(wall)}""" :+ s""""docs_per_sec":${num(docsPerSec)}""")
         .mkString("{", ",", "}"))

@@ -3,7 +3,6 @@ package graft.run
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan, WholeStageCodegenExec}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
-import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.util.QueryExecutionListener
 import org.apache.spark.sql.functions._
@@ -12,8 +11,9 @@ import scala.util.control.NonFatal
 
 /** The measurement harness for query work, beside the frozen
   * `graft.Bench`. Every call runs in interleaved rounds with a
-  * noop sink, is timed through [[TaskTotals]] and is followed by
-  * `clearCache` (queries persist frames they never release).
+  * noop sink and is timed through [[TaskTotals]]. No operator persists
+  * (frames read more than once are localCheckpointed), so a call leaves
+  * nothing in the session's cache for the next one to find.
   *
   * `Profile --sf DIR [--rounds R] qNN...` runs the named `SparkEntry`
   * queries (all of them when none is named) in a seeded shuffle per round
@@ -35,21 +35,18 @@ object Profile {
   /** Node definitions of the physical plans a call executed, summed over
     * its SQL executions (eager checkpoints and collects, then its write;
     * final adaptive plans and subqueries included, a reused exchange counted
-    * once): parquet scans, in-memory scans, exchanges and whole-stage-codegen
-    * spans. */
-  final case class PlanSummary(scans: Int, inMemoryScans: Int, exchanges: Int, codegenSpans: Int) {
-    def +(o: PlanSummary): PlanSummary = PlanSummary(scans + o.scans,
-      inMemoryScans + o.inMemoryScans, exchanges + o.exchanges, codegenSpans + o.codegenSpans)
-    def line: String =
-      s"scans=$scans inMemoryScans=$inMemoryScans exchanges=$exchanges codegenSpans=$codegenSpans"
+    * once): parquet scans, exchanges and whole-stage-codegen spans. */
+  final case class PlanSummary(scans: Int, exchanges: Int, codegenSpans: Int) {
+    def +(o: PlanSummary): PlanSummary =
+      PlanSummary(scans + o.scans, exchanges + o.exchanges, codegenSpans + o.codegenSpans)
+    def line: String = s"scans=$scans exchanges=$exchanges codegenSpans=$codegenSpans"
   }
 
   object PlanSummary extends AdaptiveSparkPlanHelper {
     def of(plan: SparkPlan): PlanSummary = {
       val nodes = collectWithSubqueries(plan) { case p => p }
       PlanSummary(nodes.count(_.isInstanceOf[FileSourceScanExec]),
-        nodes.count(_.isInstanceOf[InMemoryTableScanExec]), nodes.count(_.isInstanceOf[Exchange]),
-        nodes.count(_.isInstanceOf[WholeStageCodegenExec]))
+        nodes.count(_.isInstanceOf[Exchange]), nodes.count(_.isInstanceOf[WholeStageCodegenExec]))
     }
   }
 
@@ -74,13 +71,11 @@ object Profile {
   def rounds(spark: SparkSession, nRounds: Int)(
       calls: Int => Seq[(String, SparkSession => DataFrame)]): Seq[Record] = {
     val totals = TaskTotals.on(spark)
-    // the plans of the current call's successful executions; `Dataset.rdd`
-    // reports its plan when the RDD is built, whether or not a job runs it
-    // (`Inputs.spread` builds one only to read its partition count)
+    // the plans of the current call's successful executions
     val executed = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
     val plans = new QueryExecutionListener {
       def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
-        if (f != "rdd") executed.add(qe.executedPlan)
+        executed.add(qe.executedPlan)
       def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
     }
     spark.listenerManager.register(plans)
@@ -93,7 +88,6 @@ object Profile {
         try { call(spark).write.mode("overwrite").format("noop").save(); true }
         catch { case NonFatal(e) => System.err.println(s"[profile] $key failed: ${e.getMessage}"); false }
       }
-      spark.sharedState.cacheManager.clearCache()
       System.err.println(f"[profile] round $r $key: $wall%.2f s")
       samples(key) = samples.getOrElse(key, Vector.empty) :+ (wall -> t)
       if (ok && !summaries.contains(key))

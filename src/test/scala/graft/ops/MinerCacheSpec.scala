@@ -3,10 +3,11 @@ package graft.ops
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkTestBase
 
-/** The pair miners and KG canonicalization materialize the frames they read
-  * more than once without registering them in the session's cache: once a
-  * result is collected, nothing of the call is left cached (a library caller
-  * has no handle to unpersist it). */
+/** No operator persists: frames read more than once are localCheckpointed,
+  * never registered in the session's cache, so once a result is collected
+  * nothing of the call is left cached (a library caller has no handle to
+  * unpersist it). The pair miners and KG canonicalization are checked on a
+  * small corpus, then every `SparkEntry.queries` entry at sf0.001. */
 class MinerCacheSpec extends AnyFunSuite {
   lazy val spark = SparkTestBase.spark
   import spark.implicits._
@@ -46,4 +47,12 @@ class MinerCacheSpec extends AnyFunSuite {
     val links = Seq(("ORG", "Acme Corp", "Q1")).toDF("entity", "value", "entity_id")
     leavesNoCache(graft.kg.KgPipeline.canonical(mentions, links))
   }
+
+  for (name <- graft.SparkEntry.queries.keys.toSeq.sorted)
+    test(s"session-state sweep: $name leaves no cache") {
+      val cache = spark.sharedState.cacheManager
+      cache.clearCache()
+      graft.SparkEntry.queries(name)(spark, "/root/testdata/sf0.001").collect()
+      assert(cache.isEmpty, s"$name left a cached relation behind")
+    }
 }

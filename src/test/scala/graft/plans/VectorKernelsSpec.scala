@@ -63,6 +63,47 @@ class VectorKernelsSpec extends AnyFunSuite {
     assert(r.isNullAt(0))
   }
 
+  private def failsLoudly(run: => Any, message: String): Unit = {
+    val e = intercept[Exception](run)
+    val chain = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toSeq
+    assert(chain.exists(c => c.isInstanceOf[IllegalArgumentException] &&
+      c.getMessage.contains(message)), e)
+  }
+
+  test("float_dot fails loudly on a length mismatch or a null element") {
+    import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+    val xy = ArrayData.toArrayData(Array(1f, 2f))
+    assert(VectorKernel.dotF(xy, xy) === 5.0)
+    failsLoudly(VectorKernel.dotF(ArrayData.toArrayData(Array(1f, 2f, 3f)), xy), "lengths differ")
+    failsLoudly(VectorKernel.dotF(new GenericArrayData(Array[Any](1f, null)), xy), "null vector element")
+    failsLoudly(VectorKernel.dotF(xy, new GenericArrayData(Array[Any](null, 2f))), "null vector element")
+    // the generated path fails the task rather than truncating or reading 0.0
+    def dots(x: Seq[Option[Float]], y: Seq[Option[Float]]) = Seq((x, y)).toDF("x", "y").repartition(1)
+      .select(graft.ops.Similarity.dot(col("x").cast("array<float>"), col("y").cast("array<float>")))
+      .collect()
+    assert(dots(Seq(Some(1f), Some(2f)), Seq(Some(3f), Some(4f))).head.getDouble(0) === 11.0)
+    failsLoudly(dots(Seq(Some(1f), Some(2f), Some(3f)), Seq(Some(1f), Some(2f))), "lengths differ")
+    failsLoudly(dots(Seq(Some(1f), None), Seq(Some(1f), Some(2f))), "null vector element")
+  }
+
+  test("ivf_nearest_cell fails loudly on a dimension mismatch or a null element; a null vector is still null") {
+    import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+    val cents = Array(Array(0.0, 0.0), Array(1.0, 1.0))
+    assert(IvfKernel.nearestCell(ArrayData.toArrayData(Array(0.9f, 0.8f)), cents) === 1)
+    failsLoudly(IvfKernel.nearestCell(ArrayData.toArrayData(Array(0.9f)), cents), "centroid dimension")
+    failsLoudly(IvfKernel.nearestCell(ArrayData.toArrayData(Array(0.9f, 0.8f, 5f)), cents),
+      "centroid dimension")
+    failsLoudly(IvfKernel.nearestCell(new GenericArrayData(Array[Any](0.9f, null)), cents),
+      "null vector element")
+    def cells(vs: Option[Seq[Float]]*) = vs.toDF("v").repartition(1)
+      .select(org.apache.spark.sql.GraftColumnBridge.column(IvfNearestCellExpression(
+        org.apache.spark.sql.GraftColumnBridge.expression(col("v").cast("array<float>")), cents)))
+      .collect()
+    assert(cells(Some(Seq(0.9f, 0.8f))).head.getInt(0) === 1)
+    assert(cells(None).head.isNullAt(0))
+    failsLoudly(cells(Some(Seq(0.1f))), "centroid dimension")
+  }
+
   /** The pre-kernel k-means assignment: an array of k interpreted integer
     * HOF folds + array_min + array_position, kept verbatim as reference. */
   private def hofAssign(q: org.apache.spark.sql.Column, cents: Seq[Array[Long]]) = {

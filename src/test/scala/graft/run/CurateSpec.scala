@@ -327,4 +327,23 @@ class CurateSpec extends AnyFunSuite {
       assert(idxs === (0L until idxs.size.toLong), s"chunk gap for doc $doc")
     }
   }
+
+  test("CurateCli on a file:/// URI root: report.json lands under it, a rerun resumes") {
+    val dir = java.nio.file.Files.createTempDirectory("curate_uri")
+    val root = s"file://$dir"
+    def reportHas(funnel: Seq[String]): Unit = {
+      val json = java.nio.file.Files.readString(dir.resolve("report.json"))
+      funnel.foreach { kv =>
+        val Array(k, v) = kv.split("=")
+        assert(json.contains(s"\"$k\":$v,"), json)
+      }
+    }
+    val first = CurateCli.run(spark, root, inputDir, log = _ => ())
+    reportHas(first)
+    val logs = scala.collection.mutable.ArrayBuffer.empty[String]
+    val again = CurateCli.run(spark, root, inputDir, log = logs += _)
+    assert(again === first)
+    assert(logs.exists(_.contains("resuming from")), logs.mkString("\n"))
+    reportHas(again)
+  }
 }
