@@ -21,10 +21,18 @@ import graft.plans.GraftFunctions.crf_tag
   *    driver-built local table (dictionary ≪ mentions); the rank-1 pick is
   *    an `array_max` over the mention's candidates on the same row, so the
   *    link stage adds no exchange, sort or aggregate to the decode stage
-  *  - relation matching is ONE native expression per sentence,
-  *    `relation_triples(text, ms)`, whose body is the page-local matcher
-  *    ([[PageLocal.relationTriples]]) — one implementation for batch,
-  *    streaming and serving
+  *  - relation matching is the page-local matcher
+  *    ([[PageLocal.relationTriples]]) in one native expression per sentence
+  *    — one implementation for batch, streaming and serving. [[triples]] has
+  *    two paths: when its `links` is the unmodified in-memory plan
+  *    `links(mentions(S, model, p), alias)` over its own `sents` (the
+  *    kg_extract chain, `Bench`), it decodes, links and relates each
+  *    sentence in ONE `sentence_triples(text)` call
+  *    ([[PageLocal.sentenceTriples]]) inside the decode stage — no
+  *    per-sentence exchange and no second read of `sents`; every other
+  *    `links` (checkpointed or parquet links, derived mentions, cached
+  *    links) regroups its links per sentence, joins them to the sentence
+  *    text and runs `relation_triples(text, ms)`
   *  - triple dedup is a two-phase aggregation with url as the natural salt
   *    (hot (s,p,o) keys — e.g. popular entities on hot domains — spread
   *    across reducers by url first, then merge map-side)
@@ -65,9 +73,15 @@ object KgPipeline {
     val distributed =
       if (partitions < 0) sents
       else sents.repartition(p, pmod(xxhash64(col("url")), lit(p)))
-    distributed.select(col("url"), col("sent_id"), inline(crf_tag(col("text"), model)),
-      spark_partition_id().as("partition_id"))
+    decode(distributed, crf_tag(col("text"), model))
   }
+
+  /** [[mentions]]' projection over its (distributed) sentences, `tag` the
+    * `crf_tag` column. The fused [[triples]] path rebuilds a matched plan
+    * through it, so the two cannot disagree on what mentions builds. */
+  private def decode(distributed: DataFrame, tag: Column): DataFrame =
+    distributed.select(col("url"), col("sent_id"), inline(tag),
+      spark_partition_id().as("partition_id"))
 
   // -------------------------------------------------------------------- links
   /** Alias-dictionary entity linking: broadcast hash join of each mention on
@@ -81,10 +95,10 @@ object KgPipeline {
     * One output row per mention row, so the pick is rank-1 per
     * (url, sent_id, start) whenever each url appears once in the input —
     * url is the pipeline's page key. A url present twice repeats its
-    * mentions and links, and [[triples]] then counts each of its sources 8
-    * times (every mention twice in the sentence group, joined to both copies
-    * of the sentence) with n_urls and conf unchanged — today's behaviour,
-    * pinned in KgPipelineSpec ("a url repeated in the pages ..."). */
+    * mentions and links; [[triples]] then counts each of its sources twice,
+    * once per copy of the page, with n_urls and conf unchanged — the
+    * page-local chain's answer, on both [[triples]] paths (pinned in
+    * KgPipelineSpec, "a url repeated in the pages ..."). */
   def links(mentions: DataFrame, alias: DataFrame): DataFrame = {
     val top = array_max(transform(alias("cands"), c =>
       struct((c("prior") * mentions("confidence")).as("score"), c("entity_id").as("entity_id"))))
@@ -165,8 +179,8 @@ object KgPipeline {
   // ------------------------------------------------------------------ triples
   /** One relation pattern: subject kind, object kind, the trigger on the
     * between-text (Left = plain `contains`, Right = regex `rlike`), and the
-    * predicate it yields. SINGLE source for both the map-side `canMatch`
-    * pre-filter in [[triples]] and the matcher
+    * predicate it yields. SINGLE source for both the map-side [[canMatch]]
+    * pre-filter of [[triples]] and the matcher
     * [[PageLocal.relationTriples]] — deriving them separately once let an
     * edit to one silently drop triples in the other. Order matters: first
     * matching pattern wins. */
@@ -181,41 +195,33 @@ object KgPipeline {
     RelationPattern("PER", "LOC", Right("\\bin\\b"), "visited"),
     RelationPattern("ORG", "LOC", Right("\\bin\\b"), "located_in"))
 
-  /** Relation extraction + salted dedup. Linked mentions are grouped per
-    * sentence (collect_list is safe: ≤ a handful of mentions per sentence),
-    * joined back to sentence text, and `relation_triples` (the one relation
-    * matcher, [[PageLocal.relationTriples]]) matches each ordered pair on
-    * the text BETWEEN the two mentions. */
+  /** Relation extraction + salted dedup, on one of two paths; both give the
+    * page-local chain's triples ([[PageLocal.sentenceTriples]] over every
+    * sentence), and the dedup is shared.
+    *
+    *  - **Fused**, when `links` is exactly the plan
+    *    `links(mentions(S, model, p), alias)` builds (nothing projected,
+    *    filtered or rounded in between), the alias side is a local table of
+    *    [[aliasDf]]'s schema with unique (alias, kind) keys, `S` (under
+    *    `mentions`' repartition, if any) is `sents`, and neither `links` nor
+    *    its mentions are in the session's cache: `S`, keeping its
+    *    repartition, is filtered on [[canMatch]] and each sentence runs ONE
+    *    `sentence_triples(text)` — decode, link and relate in the decode
+    *    stage, with the model broadcast of the plan's `crf_tag` and a
+    *    broadcast of the alias rows. No per-sentence exchange, no join, one
+    *    read of the pages.
+    *  - **Generic**, for every other `links` (checkpointed or parquet links,
+    *    derived or filtered mentions, cached links, another alias table):
+    *    linked mentions are grouped per sentence (collect_list is safe:
+    *    ≤ a handful of mentions per sentence), joined back to the sentence
+    *    text, and `relation_triples` (the one relation matcher,
+    *    [[PageLocal.relationTriples]]) matches each ordered pair on the
+    *    text BETWEEN the two mentions. */
   def triples(links: DataFrame, sents: DataFrame): DataFrame = {
     val spark = links.sparkSession
     import spark.implicits._
 
-    val perSentence = links
-      .groupBy($"url", $"sent_id")
-      // sort_array: collect_list order depends on shuffle partitioning; the
-      // pair orientation needs text order (start ascending) — struct
-      // comparison is lexicographic, so start must be the first field
-      // (start is unique per sentence — links emits one row per mention —
-      // so later fields never even tie-break). The entity KIND is NOT
-      // carried: it is definitionally the first 3 chars of entity_id (the
-      // links join matches on it), so the per-mention structs crossing
-      // this exchange stay one string slimmer.
-      .agg(sort_array(collect_list(struct($"start", $"end", $"entity_id", $"score"))).as("ms"))
-      .filter(size($"ms") >= 2)
-
-    // only sentences whose text can yield SOME relation pattern need to cross
-    // the join shuffle: the between-text is always a substring of `text`, so
-    // a sentence containing none of the trigger phrases can never produce a
-    // predicate. The filter runs map-side inside the scan (cheap contains +
-    // one regex) and cuts the shuffled sentence bytes by the corpus'
-    // non-relational fraction. Derived from the SAME relationPatterns table
-    // as the matcher.
-    val canMatch = relationPatterns.map(_.trigger).distinct.map {
-      case Left(phrase) => $"text".contains(phrase)
-      case Right(re)    => $"text".rlike(re)
-    }.reduce(_ || _)
-    val raw = perSentence.join(sents.filter(canMatch), Seq("url", "sent_id"))
-      .select($"url", inline(relationTriples($"text", $"ms")))
+    val raw = fusedTriples(links, sents).getOrElse(genericTriples(links, sents))
       .select($"subj", $"pred", $"obj", $"url", $"conf")
 
     // exact two-phase dedup with url as the NATURAL salt: phase 1 groups by
@@ -233,6 +239,93 @@ object KgPipeline {
       .groupBy($"subj", $"pred", $"obj")
       .agg(sum($"c0").as("n_sources"), max($"m0").as("conf"), count(lit(1)).as("n_urls"))
   }
+
+  /** Only sentences whose text can yield SOME relation pattern need the
+    * relation matcher: the between-text is always a substring of `text`, so
+    * a sentence containing none of the trigger phrases can never produce a
+    * predicate. A cheap contains + one regex, run map-side in the scan;
+    * derived from the SAME relationPatterns table as the matcher. */
+  private def canMatch: Column = relationPatterns.map(_.trigger).distinct.map {
+    case Left(phrase) => col("text").contains(phrase)
+    case Right(re)    => col("text").rlike(re)
+  }.reduce(_ || _)
+
+  /** The generic path of [[triples]]: `(url, subj, pred, obj, conf)` rows. */
+  private def genericTriples(links: DataFrame, sents: DataFrame): DataFrame = {
+    val spark = links.sparkSession
+    import spark.implicits._
+    val perSentence = links
+      .groupBy($"url", $"sent_id")
+      // sort_array: collect_list order depends on shuffle partitioning; the
+      // pair orientation needs text order (start ascending) — struct
+      // comparison is lexicographic, so start must be the first field.
+      // array_distinct: start is unique per mention within a sentence, so
+      // only the copies a repeated url brings collapse, and such a url
+      // counts once per copy of its sentence (the join below), as on the
+      // fused path. The entity KIND is NOT carried: it is definitionally the
+      // first 3 chars of entity_id (the links join matches on it).
+      .agg(array_distinct(sort_array(collect_list(struct($"start", $"end", $"entity_id", $"score"))))
+        .as("ms"))
+      .filter(size($"ms") >= 2)
+    perSentence.join(sents.filter(canMatch), Seq("url", "sent_id"))
+      .select($"url", inline(relationTriples($"text", $"ms")))
+  }
+
+  /** The fused path of [[triples]], when `links` and `sents` qualify (see
+    * there): `(url, subj, pred, obj, conf)` rows. The match takes the
+    * decode input, the `crf_tag` and the alias relation out of the plan,
+    * rebuilds `links` from them through [[decode]] and [[links]], and
+    * requires the same result, so any change to the chain in between falls
+    * back to the generic path. */
+  private def fusedTriples(links: DataFrame, sents: DataFrame): Option[DataFrame] = {
+    import org.apache.spark.sql.GraftColumnBridge.{column, isCached, ofRows}
+    import org.apache.spark.sql.catalyst.expressions.Inline
+    import org.apache.spark.sql.catalyst.plans.Inner
+    import org.apache.spark.sql.catalyst.plans.logical._
+    import graft.plans.CrfTagExpression
+    val spark = links.sparkSession
+    val plan = links.queryExecution.analyzed
+    val sentsPlan = sents.queryExecution.analyzed
+    for {
+      (decoded, tag, in, alias) <- plan match {
+        case Project(_, Project(_, Join(decoded @ Project(_, Generate(Inline(tag: CrfTagExpression),
+            _, _, _, _, in)), ResolvedHint(alias: LocalRelation, _), Inner, _, _))) =>
+          Some((decoded, tag, in, alias))
+        case _ => None
+      }
+      index <- aliasIndex(alias)
+      source = ofRows(spark, in)
+      if this.links(decode(source, column(tag)), ofRows(spark, alias))
+        .queryExecution.analyzed.sameResult(plan)
+      if in.sameResult(sentsPlan) || (in match {
+        case r: RepartitionByExpression => r.child.sameResult(sentsPlan)
+        case _ => false
+      })
+      if !isCached(spark, plan) && !isCached(spark, decoded)
+    } yield source.filter(canMatch).select(col("url"),
+      inline(sentenceTriples(col("text"), tag.model, spark.sparkContext.broadcast(index))))
+  }
+
+  /** The rows of an alias relation of [[aliasDf]]'s schema (no field
+    * nullable, so no nulls) as a [[PageLocal.AliasIndex]]; None for another
+    * schema, a row without candidates or a repeated (alias, kind) key — the
+    * equi-join of [[links]] gives one link row per matching alias ROW, which
+    * a map cannot say. */
+  private def aliasIndex(alias: org.apache.spark.sql.catalyst.plans.logical.LocalRelation)
+      : Option[PageLocal.AliasIndex] =
+    if (alias.schema != aliasSchema) None
+    else {
+      val entries = alias.data.map { r =>
+        val cs = r.getArray(2)
+        (r.getUTF8String(0).toString, r.getUTF8String(1).toString) ->
+          IndexedSeq.tabulate(cs.numElements()) { i =>
+            val c = cs.getStruct(i, 2)
+            PageLocal.Candidate(c.getDouble(0), c.getUTF8String(1).toString)
+          }
+      }
+      val index = entries.toMap
+      if (index.size == entries.size && index.values.forall(_.nonEmpty)) Some(index) else None
+    }
 
   // ------------------------------------------------------------ co-occurrence
   /** Sentence-level entity co-occurrence graph with NPMI association — the
@@ -355,5 +448,12 @@ object KgPipeline {
   private def relationTriples(text: Column, ms: Column): Column = {
     import org.apache.spark.sql.GraftColumnBridge.{column, expression}
     column(graft.plans.RelationTriplesExpression(expression(text), expression(ms)))
+  }
+
+  /** `sentence_triples(text)` as a Column (see [[graft.plans.SentenceTriplesExpression]]). */
+  private def sentenceTriples(text: Column, model: org.apache.spark.broadcast.Broadcast[CrfModel],
+                              alias: org.apache.spark.broadcast.Broadcast[PageLocal.AliasIndex]): Column = {
+    import org.apache.spark.sql.GraftColumnBridge.{column, expression}
+    column(graft.plans.SentenceTriplesExpression(expression(text), model, alias))
   }
 }

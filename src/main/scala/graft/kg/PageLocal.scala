@@ -6,11 +6,12 @@ import graft.crf.CrfDecoder
   * → in-sentence relation matching — as plain Scala over one sentence.
   * ONE implementation shared by every non-batch surface (streaming
   * micro-batches via `streaming.StreamingTriples`, request/response via
-  * `run.ServeCli /triples`). The batch stages share its pieces rather than
-  * mirror them: `KgPipeline.aliasDf` is [[aliasIndex]] as a table, and
-  * `KgPipeline.triples` runs [[relationTriples]] through the native
-  * `relation_triples` expression. StreamingTriplesSpec pins this
-  * implementation equal to batch `KgPipeline.triples` on generated pages,
+  * `run.ServeCli /triples`). The batch stages share it rather than mirror
+  * it: `KgPipeline.aliasDf` is [[aliasIndex]] as a table, and
+  * `KgPipeline.triples` runs [[sentenceTriples]] through the native
+  * `sentence_triples` expression on its fused path and [[relationTriples]]
+  * through `relation_triples` on its generic one. StreamingTriplesSpec
+  * pins both batch paths equal to this implementation on generated pages,
   * including pages with characters outside the Basic Multilingual Plane.
   */
 object PageLocal {
@@ -63,8 +64,9 @@ object PageLocal {
     * is matched on the text between the two mentions against the relation
     * patterns (first match wins), conf = min of the pair's link scores.
     * Offsets are UTF-16 code-unit indices into `sent`, as `crf_tag` emits
-    * them. The one relation matcher: [[sentenceTriples]] and the batch
-    * `relation_triples` expression both run it. */
+    * them. The one relation matcher: [[sentenceTriples]] (and so the batch
+    * `sentence_triples` expression) and the batch `relation_triples`
+    * expression run it. */
   def relationTriples(sent: String, linked: IndexedSeq[Linked],
                       compiled: CompiledPatterns): Iterator[LocalTriple] =
     for {

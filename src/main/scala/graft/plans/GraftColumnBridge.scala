@@ -23,6 +23,13 @@ object GraftColumnBridge {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 
+  /** Whether the session's cache holds data for `plan` (the cache lookup
+    * takes the classic session). */
+  def isCached(spark: SparkSession, plan: LogicalPlan): Boolean = {
+    val s = spark.asInstanceOf[classic.SparkSession]
+    s.sharedState.cacheManager.lookupCachedData(s, plan).isDefined
+  }
+
   /** Blocks until the listener bus has delivered every event posted so far
     * (`SparkContext.listenerBus` is private[spark]). */
   def drainListenerBus(sc: org.apache.spark.SparkContext): Unit = sc.listenerBus.waitUntilEmpty()

@@ -1,9 +1,10 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.Platform
 
 /** Native float-vector kernel backing every cosine in the ANN/SemDeDup ops.
   *
@@ -26,15 +27,38 @@ object VectorKernel {
   def dotF(x: ArrayData, y: ArrayData): Double = {
     val n = x.numElements()
     require(n == y.numElements(), s"float_dot: vector lengths differ ($n vs ${y.numElements()})")
+    requireNoNull(x, "float_dot")
+    requireNoNull(y, "float_dot")
     var s = 0.0
     var i = 0
     while (i < n) {
-      if (x.isNullAt(i) || y.isNullAt(i)) throw new IllegalArgumentException(
-        s"float_dot: null vector element at index $i")
       s += x.getFloat(i).toDouble * y.getFloat(i).toDouble
       i += 1
     }
     s
+  }
+
+  /** Throws `IllegalArgumentException` naming `fn` and the first null
+    * element's index if `v` holds a null, checked ahead of (not inside) the
+    * arithmetic loop. An `UnsafeArrayData` (an array read from an
+    * `UnsafeRow`) is checked a 64-bit word of its null bitmap at a time:
+    * the bitmap follows the 8-byte element count, one bit per element,
+    * unused bits zero. */
+  def requireNoNull(v: ArrayData, fn: String): Unit = {
+    val n = v.numElements()
+    val clean = v match {
+      case u: UnsafeArrayData =>
+        var w = 0
+        while (w < (n + 63) / 64 &&
+          Platform.getLong(u.getBaseObject, u.getBaseOffset + 8 + 8L * w) == 0L) w += 1
+        w == (n + 63) / 64
+      case _ => false
+    }
+    var i = 0
+    while (!clean && i < n) {
+      if (v.isNullAt(i)) throw new IllegalArgumentException(s"$fn: null vector element at index $i")
+      i += 1
+    }
   }
 }
 
@@ -56,12 +80,7 @@ object IvfKernel {
     val n = v.numElements()
     require(n == cents(0).length,
       s"ivf_nearest_cell: vector length $n, centroid dimension ${cents(0).length}")
-    var e = 0
-    while (e < n) {
-      if (v.isNullAt(e)) throw new IllegalArgumentException(
-        s"ivf_nearest_cell: null vector element at index $e")
-      e += 1
-    }
+    VectorKernel.requireNoNull(v, "ivf_nearest_cell")
     var best = 0
     var bestD = Double.MaxValue
     var j = 0

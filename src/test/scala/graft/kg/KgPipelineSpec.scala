@@ -164,34 +164,39 @@ class KgPipelineSpec extends AnyFunSuite {
     assert(run() === first && computes === 3, "only the invalidated stage recomputes")
   }
 
-  test("a url repeated in the pages repeats its links and multiplies its triples (today's behaviour)") {
+  test("a url repeated in the pages counts its triple sources once per copy, on both triples paths") {
     val model = KgPipeline.trainModel(42L, nTrain = 200)
     val alias = KgPipeline.aliasDf(spark)
     val pages = PagesGen.pages(spark, 40L, 42L)
-    def tail(ps: org.apache.spark.sql.Dataset[Page]) = {
+    // fused: the in-memory chain; generic: the same links, localCheckpointed
+    def tail(ps: org.apache.spark.sql.Dataset[Page], generic: Boolean) = {
       val sents = KgPipeline.sentences(ps)
-      val links = KgPipeline.links(KgPipeline.mentions(sents, model), alias)
-      links.count() -> KgPipeline.triples(links, sents).collect().map { r =>
+      val chain = KgPipeline.links(KgPipeline.mentions(sents, model), alias)
+      val links = if (generic) chain.localCheckpoint() else chain
+      val triples = KgPipeline.triples(links, sents)
+      assert(TriplesPathSpec.path(triples) === (if (generic) "generic" else "fused"))
+      links.count() -> triples.collect().map { r =>
         (r.getString(0), r.getString(1), r.getString(2)) ->
           ((r.getAs[Long]("n_sources"), r.getAs[Long]("n_urls"), r.getAs[Double]("conf")))
       }.toMap
     }
-    val (nLinks, once) = tail(pages)
     // the repeated page: the first one that yields a triple on its own
     val (page, (pageLinks, alone)) = pages.collect().iterator
-      .map(p => p -> tail(pages.filter(_.url == p.url)))
+      .map(p => p -> tail(pages.filter(_.url == p.url), generic = false))
       .find(_._2._2.nonEmpty).getOrElse(fail("no page yields a triple"))
-    val (nLinksTwice, twice) = tail(pages.union(pages.filter(_.url == page.url)))
-    // links: one row per mention row, so the copy's mentions link again
-    assert(nLinksTwice === nLinks + pageLinks)
-    // triples: the (url, sent_id) group holds every mention twice (2 × 2
-    // ordered pairs per pair of mentions) and joins both copies of the
-    // sentence, so the url contributes 8 × its sources; n_urls and conf hold
-    assert(twice.keySet === once.keySet)
-    twice.foreach { case (spo, (nSources, nUrls, conf)) =>
-      val (n0, u0, c0) = once(spo)
-      val extra = alone.get(spo).fold(0L)(_._1 * 7L)
-      assert((nSources, nUrls, conf) === ((n0 + extra, u0, c0)), spo)
+    for (generic <- Seq(false, true)) {
+      val (nLinks, once) = tail(pages, generic)
+      val (nLinksTwice, twice) = tail(pages.union(pages.filter(_.url == page.url)), generic)
+      // links: one row per mention row, so the copy's mentions link again
+      assert(nLinksTwice === nLinks + pageLinks)
+      // triples: each copy of a sentence is one source, so the url counts
+      // 2 × its sources (the page-local answer); n_urls and conf hold
+      assert(twice.keySet === once.keySet)
+      twice.foreach { case (spo, (nSources, nUrls, conf)) =>
+        val (n0, u0, c0) = once(spo)
+        val extra = alone.get(spo).fold(0L)(_._1)
+        assert((nSources, nUrls, conf) === ((n0 + extra, u0, c0)), s"$spo generic=$generic")
+      }
     }
   }
 }

@@ -77,6 +77,32 @@ class PlanContractSpec extends AnyFunSuite {
       s"no per-pattern CASE over a between substring:\n$triplesPlan")
   }
 
+  test("KG tail in one pass: the kg_extract chain reads the pages once and shuffles only in the dedup") {
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.RangeExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.joins.SortMergeJoinExec
+    import graft.kg.{KgPipeline, PagesGen}
+    object Plans extends AdaptiveSparkPlanHelper
+    val sents = KgPipeline.sentences(PagesGen.pages(spark, 30L, 42L))
+    val mentions = KgPipeline.mentions(sents, KgPipeline.trainModel(42L, nTrain = 100), partitions = -1)
+    val triples = KgPipeline.triples(KgPipeline.links(mentions, KgPipeline.aliasDf(spark)), sents)
+    assert(triples.collect().nonEmpty)
+    val plan = triples.queryExecution.executedPlan
+    val text = plan.toString
+    // the dedup's two exchanges hash on (subj, pred, obj[, url]); any other
+    // exchange (the per-sentence regroup, the sentence join) comes before it
+    val keys = Plans.collect(plan) { case e: ShuffleExchangeExec => e.outputPartitioning }
+      .map { case h: HashPartitioning => h.expressions.flatMap(_.references.map(_.name)).toSet
+             case other => Set(other.toString) }
+    assert(keys.nonEmpty && keys.forall(_.contains("subj")),
+      s"only the dedup may shuffle, got exchanges on $keys:\n$text")
+    assert(Plans.collect(plan) { case j: SortMergeJoinExec => j }.isEmpty, s"no sentence join:\n$text")
+    assert(!text.contains("collect_list"), s"no per-sentence regroup:\n$text")
+    assert(Plans.collect(plan) { case r: RangeExec => r }.size === 1, s"one scan of the pages:\n$text")
+  }
+
   test("q37 contamination: corpus side shuffles only the doc_id aggregation") {
     val df = graft.SparkEntry.queries("q37_contamination")(spark, sfDir)
     val plan = physical(df)

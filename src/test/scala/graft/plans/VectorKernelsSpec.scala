@@ -77,6 +77,13 @@ class VectorKernelsSpec extends AnyFunSuite {
     failsLoudly(VectorKernel.dotF(ArrayData.toArrayData(Array(1f, 2f, 3f)), xy), "lengths differ")
     failsLoudly(VectorKernel.dotF(new GenericArrayData(Array[Any](1f, null)), xy), "null vector element")
     failsLoudly(VectorKernel.dotF(xy, new GenericArrayData(Array[Any](null, 2f))), "null vector element")
+    // unsafe arrays are checked a bitmap word at a time: a null in the
+    // second word is still found, at its index
+    val unsafe = ArrayData.toArrayData(new Array[Float](100))
+      .asInstanceOf[org.apache.spark.sql.catalyst.expressions.UnsafeArrayData]
+    assert(VectorKernel.dotF(unsafe, unsafe) === 0.0)
+    unsafe.setNullAt(70)
+    failsLoudly(VectorKernel.dotF(unsafe, unsafe), "null vector element at index 70")
     // the generated path fails the task rather than truncating or reading 0.0
     def dots(x: Seq[Option[Float]], y: Seq[Option[Float]]) = Seq((x, y)).toDF("x", "y").repartition(1)
       .select(graft.ops.Similarity.dot(col("x").cast("array<float>"), col("y").cast("array<float>")))

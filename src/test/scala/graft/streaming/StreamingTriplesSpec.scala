@@ -57,8 +57,16 @@ class StreamingTriplesSpec extends AnyFunSuite {
       .collect()
     val sents = KgPipeline.sentences(spark.createDataset(pages.toSeq))
     val links = KgPipeline.links(KgPipeline.mentions(sents, model), KgPipeline.aliasDf(spark))
-    val batch = KgPipeline.triples(links, sents).select($"subj", $"pred", $"obj", $"n_sources")
-      .collect().map(r => (r.getString(0), r.getString(1), r.getString(2)) -> r.getLong(3)).toMap
+    // the in-memory chain takes the fused path; the same links,
+    // localCheckpointed, take the generic one
+    def counts(links: org.apache.spark.sql.DataFrame, path: String) = {
+      val triples = KgPipeline.triples(links, sents)
+      assert(graft.kg.TriplesPathSpec.path(triples) === path)
+      triples.select($"subj", $"pred", $"obj", $"n_sources")
+        .collect().map(r => (r.getString(0), r.getString(1), r.getString(2)) -> r.getLong(3)).toMap
+    }
+    val batch = counts(links, "fused")
+    assert(counts(links.localCheckpoint(), "generic") === batch)
 
     val decoder = new graft.crf.CrfDecoder(model)
     val alias = graft.kg.PageLocal.aliasIndex
