@@ -80,7 +80,8 @@ object ModelIO {
     CrfModel(labels, states, trans, config)
   }
 
-  private def jstr(s: String): String =
+  /** `s` as a JSON string literal. */
+  private[graft] def jstr(s: String): String =
     "\"" + s.flatMap {
       case '"' => "\\\""
       case '\\' => "\\\\"

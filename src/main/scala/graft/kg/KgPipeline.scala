@@ -1,5 +1,6 @@
 package graft.kg
 
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -23,16 +24,17 @@ import graft.plans.GraftFunctions.crf_tag
   *    link stage adds no exchange, sort or aggregate to the decode stage
   *  - relation matching is the page-local matcher
   *    ([[PageLocal.relationTriples]]) in one native expression per sentence
-  *    — one implementation for batch, streaming and serving. [[triples]] has
-  *    two paths: when its `links` is the unmodified in-memory plan
-  *    `links(mentions(S, model, p), alias)` over its own `sents` (the
-  *    kg_extract chain, `Bench`), it decodes, links and relates each
-  *    sentence in ONE `sentence_triples(text)` call
-  *    ([[PageLocal.sentenceTriples]]) inside the decode stage — no
+  *    — one implementation for batch, streaming and serving. The
+  *    per-sentence chain has ONE Spark plan, [[sentenceTriplesPlan]]: each
+  *    sentence that can match runs ONE `sentence_triples(text)` call
+  *    ([[PageLocal.sentenceTriples]]: decode, link, relate). Streaming runs
+  *    it, and so does [[triples]] when its `links` is the unmodified
+  *    in-memory plan `links(mentions(S, model, p), aliasDf)` over its own
+  *    `sents` (the kg_extract chain, `Bench`) — inside the decode stage, no
   *    per-sentence exchange and no second read of `sents`; every other
   *    `links` (checkpointed or parquet links, derived mentions, cached
-  *    links) regroups its links per sentence, joins them to the sentence
-  *    text and runs `relation_triples(text, ms)`
+  *    links, another alias table) regroups its links per sentence, joins
+  *    them to the sentence text and runs `relation_triples(text, ms)`
   *  - triple dedup is a two-phase aggregation with url as the natural salt
   *    (hot (s,p,o) keys — e.g. popular entities on hot domains — spread
   *    across reducers by url first, then merge map-side)
@@ -200,16 +202,13 @@ object KgPipeline {
     * sentence), and the dedup is shared.
     *
     *  - **Fused**, when `links` is exactly the plan
-    *    `links(mentions(S, model, p), alias)` builds (nothing projected,
-    *    filtered or rounded in between), the alias side is a local table of
-    *    [[aliasDf]]'s schema with unique (alias, kind) keys, `S` (under
-    *    `mentions`' repartition, if any) is `sents`, and neither `links` nor
-    *    its mentions are in the session's cache: `S`, keeping its
-    *    repartition, is filtered on [[canMatch]] and each sentence runs ONE
-    *    `sentence_triples(text)` — decode, link and relate in the decode
-    *    stage, with the model broadcast of the plan's `crf_tag` and a
-    *    broadcast of the alias rows. No per-sentence exchange, no join, one
-    *    read of the pages.
+    *    `links(mentions(S, model, p), aliasDf(spark))` builds (nothing
+    *    projected, filtered or rounded in between), `S` (under `mentions`'
+    *    repartition, if any) is `sents`, and neither `links` nor its
+    *    mentions are in the session's cache: `S`, keeping its repartition,
+    *    runs [[sentenceTriplesPlan]] with the model broadcast of the plan's
+    *    `crf_tag` — decode, link and relate in the decode stage. No
+    *    per-sentence exchange, no join, one read of the pages.
     *  - **Generic**, for every other `links` (checkpointed or parquet links,
     *    derived or filtered mentions, cached links, another alias table):
     *    linked mentions are grouped per sentence (collect_list is safe:
@@ -274,9 +273,9 @@ object KgPipeline {
   /** The fused path of [[triples]], when `links` and `sents` qualify (see
     * there): `(url, subj, pred, obj, conf)` rows. The match takes the
     * decode input, the `crf_tag` and the alias relation out of the plan,
-    * rebuilds `links` from them through [[decode]] and [[links]], and
-    * requires the same result, so any change to the chain in between falls
-    * back to the generic path. */
+    * requires the alias relation to be [[aliasDf]]'s, rebuilds `links` from
+    * them through [[decode]] and [[links]], and requires the same result,
+    * so any change to the chain in between falls back to the generic path. */
   private def fusedTriples(links: DataFrame, sents: DataFrame): Option[DataFrame] = {
     import org.apache.spark.sql.GraftColumnBridge.{column, isCached, ofRows}
     import org.apache.spark.sql.catalyst.expressions.Inline
@@ -289,11 +288,11 @@ object KgPipeline {
     for {
       (decoded, tag, in, alias) <- plan match {
         case Project(_, Project(_, Join(decoded @ Project(_, Generate(Inline(tag: CrfTagExpression),
-            _, _, _, _, in)), ResolvedHint(alias: LocalRelation, _), Inner, _, _))) =>
+            _, _, _, _, in)), ResolvedHint(alias, _), Inner, _, _))) =>
           Some((decoded, tag, in, alias))
         case _ => None
       }
-      index <- aliasIndex(alias)
+      if alias.sameResult(aliasDf(spark).queryExecution.analyzed)
       source = ofRows(spark, in)
       if this.links(decode(source, column(tag)), ofRows(spark, alias))
         .queryExecution.analyzed.sameResult(plan)
@@ -302,30 +301,19 @@ object KgPipeline {
         case _ => false
       })
       if !isCached(spark, plan) && !isCached(spark, decoded)
-    } yield source.filter(canMatch).select(col("url"),
-      inline(sentenceTriples(col("text"), tag.model, spark.sparkContext.broadcast(index))))
+    } yield sentenceTriplesPlan(source, tag.model, col("url"))
   }
 
-  /** The rows of an alias relation of [[aliasDf]]'s schema (no field
-    * nullable, so no nulls) as a [[PageLocal.AliasIndex]]; None for another
-    * schema, a row without candidates or a repeated (alias, kind) key — the
-    * equi-join of [[links]] gives one link row per matching alias ROW, which
-    * a map cannot say. */
-  private def aliasIndex(alias: org.apache.spark.sql.catalyst.plans.logical.LocalRelation)
-      : Option[PageLocal.AliasIndex] =
-    if (alias.schema != aliasSchema) None
-    else {
-      val entries = alias.data.map { r =>
-        val cs = r.getArray(2)
-        (r.getUTF8String(0).toString, r.getUTF8String(1).toString) ->
-          IndexedSeq.tabulate(cs.numElements()) { i =>
-            val c = cs.getStruct(i, 2)
-            PageLocal.Candidate(c.getDouble(0), c.getUTF8String(1).toString)
-          }
-      }
-      val index = entries.toMap
-      if (index.size == entries.size && index.values.forall(_.nonEmpty)) Some(index) else None
-    }
+  /** The per-sentence triple chain as a Spark plan, the one both the fused
+    * [[triples]] path and `streaming.StreamingTriples` run: the sentence rows
+    * that [[canMatch]], then ONE `sentence_triples(text)` each — CRF decode
+    * with `model`, alias link against a broadcast of [[PageLocal.aliasIndex]],
+    * relate — as the `keep` columns plus `(subj, pred, obj, conf)`. */
+  private[graft] def sentenceTriplesPlan(sents: DataFrame, model: Broadcast[CrfModel],
+                                         keep: Column*): DataFrame = {
+    val alias = sents.sparkSession.sparkContext.broadcast(PageLocal.aliasIndex)
+    sents.filter(canMatch).select(keep :+ inline(sentenceTriples(col("text"), model, alias)): _*)
+  }
 
   // ------------------------------------------------------------ co-occurrence
   /** Sentence-level entity co-occurrence graph with NPMI association — the
@@ -403,10 +391,9 @@ object KgPipeline {
   }
 
   // -------------------------------------------------------------------- graph
-  def nodes(canonical: DataFrame, links: DataFrame): DataFrame = {
+  def nodes(canonical: DataFrame): DataFrame =
     canonical.groupBy(col("canon_id"))
       .agg(max(col("entity")).as("label"), sum(col("n_mentions")).as("n_mentions"))
-  }
 
   def edges(triples: DataFrame): DataFrame =
     triples.select(col("subj").as("src"), col("obj").as("dst"), col("pred"),
@@ -451,8 +438,8 @@ object KgPipeline {
   }
 
   /** `sentence_triples(text)` as a Column (see [[graft.plans.SentenceTriplesExpression]]). */
-  private def sentenceTriples(text: Column, model: org.apache.spark.broadcast.Broadcast[CrfModel],
-                              alias: org.apache.spark.broadcast.Broadcast[PageLocal.AliasIndex]): Column = {
+  private def sentenceTriples(text: Column, model: Broadcast[CrfModel],
+                              alias: Broadcast[PageLocal.AliasIndex]): Column = {
     import org.apache.spark.sql.GraftColumnBridge.{column, expression}
     column(graft.plans.SentenceTriplesExpression(expression(text), model, alias))
   }

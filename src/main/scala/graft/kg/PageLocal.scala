@@ -4,15 +4,16 @@ import graft.crf.CrfDecoder
 
 /** The page-local slice of the KG pipeline — decode → alias link (rank-1)
   * → in-sentence relation matching — as plain Scala over one sentence.
-  * ONE implementation shared by every non-batch surface (streaming
-  * micro-batches via `streaming.StreamingTriples`, request/response via
-  * `run.ServeCli /triples`). The batch stages share it rather than mirror
-  * it: `KgPipeline.aliasDf` is [[aliasIndex]] as a table, and
-  * `KgPipeline.triples` runs [[sentenceTriples]] through the native
-  * `sentence_triples` expression on its fused path and [[relationTriples]]
-  * through `relation_triples` on its generic one. StreamingTriplesSpec
-  * pins both batch paths equal to this implementation on generated pages,
-  * including pages with characters outside the Basic Multilingual Plane.
+  * ONE implementation for every surface. The Spark plans run it through
+  * native expressions: `sentence_triples` ([[sentenceTriples]]) in
+  * `KgPipeline.sentenceTriplesPlan`, the one per-sentence triple plan that
+  * streaming (`streaming.StreamingTriples`) and the fused path of batch
+  * `KgPipeline.triples` share, and `relation_triples` ([[relationTriples]])
+  * on the generic batch path. Request/response serving (`run.ServeCli
+  * /triples`) calls it directly. `KgPipeline.aliasDf` is [[aliasIndex]] as
+  * a table. StreamingTriplesSpec pins both batch paths equal to this
+  * implementation on generated pages, including pages with characters
+  * outside the Basic Multilingual Plane.
   */
 object PageLocal {
 

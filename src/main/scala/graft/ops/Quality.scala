@@ -50,15 +50,6 @@ object Quality {
       .otherwise(round(s.getField("n_distinct").cast("double") /
         s.getField("n_words").cast("double"), 4))
 
-  /** count(most frequent word) / count(words), 0.0 for empty docs. */
-  def topWordRatio(text: Column): Column = topWordRatioOf(repetitionStats(text))
-
-  /** count(most frequent bigram) / count(bigrams), 0.0 below 2 words. */
-  def topBigramRatio(text: Column): Column = topBigramRatioOf(repetitionStats(text))
-
-  /** distinct words / words, 1.0 convention for empty docs. */
-  def distinctRatio(text: Column): Column = distinctRatioOf(repetitionStats(text))
-
   private def passesOf(s: Column, maxTopWord: Double, maxTopBigram: Double,
                        minDistinct: Double): Column =
     when((topWordRatioOf(s) <= maxTopWord) &&

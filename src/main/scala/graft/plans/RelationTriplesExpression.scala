@@ -84,10 +84,10 @@ object RelationTriplesExpression {
   * [[graft.kg.PageLocal.sentenceTriples]], so its answer is the page-local
   * chain's by construction.
   *
-  * `KgPipeline.triples` builds it on its fused path only, from the pieces of
-  * a matched `links(mentions(S, model, p), alias)` plan: the model broadcast
-  * the plan's `crf_tag` already carries and a broadcast of the alias table's
-  * rows as an [[graft.kg.PageLocal.AliasIndex]]. It is not a SQL function.
+  * `KgPipeline.sentenceTriplesPlan` builds it, with a model broadcast (on
+  * the fused batch path, the one a matched plan's `crf_tag` already
+  * carries) and a broadcast of [[graft.kg.PageLocal.aliasIndex]]. It is not
+  * a SQL function.
   * Codegen follows `crf_tag`: a direct call into the kernel through a
   * reference object, and the decoder is `CrfDecoder.forModel`'s per-thread
   * one.

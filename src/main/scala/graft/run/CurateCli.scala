@@ -38,12 +38,13 @@ import graft.ops._
   * Usage: CurateCli <outRoot> --input <documents parquet> [--cpus N]
   *        [--quality 0.5] [--rate 0.5] [--line-dedup]
   *        [--benchmark <parquet>] [--min-logp -5.0] [--temp-alpha 0.5]
-  *        [--pack 2048]
+  *        [--chunk W,S,minTail] [--pack 2048]
   */
 object CurateCli {
 
   def main(args: Array[String]): Unit = {
-    val (opts, pos) = Cli.parse(args)
+    val (opts, pos) = Cli.parse(args, Set("--input", "--cpus", "--quality", "--rate",
+      "--line-dedup", "--benchmark", "--min-logp", "--temp-alpha", "--chunk", "--pack"))
     require(pos.length == 1, "usage: CurateCli <outRoot> --input <parquet> [--cpus N]")
     val outRoot = pos.head
     val input = opts.getOrElse("--input",

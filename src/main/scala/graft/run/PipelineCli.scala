@@ -9,7 +9,7 @@ import graft.io.ModelIO
   * every stage with checkpoint/resume (each stage manifest holds its rows per
   * partition), report stage row counts and mention P/R vs gold.
   *
-  * Usage: PipelineCli <outRoot> [--pages N] [--seed S] [--cpus N] [--input dir]
+  * Usage: PipelineCli <outRoot> [--pages N] [--seed S] [--cpus N] [--input dir] [--from-html]
   */
 object PipelineCli {
 
@@ -23,20 +23,26 @@ object PipelineCli {
     .getOrCreate()
 
   def main(args: Array[String]): Unit = {
-    val (opts, pos) = Cli.parse(args)
-    require(pos.length == 1, "usage: PipelineCli <outRoot> [--pages N] [--seed S] [--cpus N]")
-    val outRoot = pos.head
-    val nPages = opts.get("-p").orElse(opts.get("--pages")).map(_.toLong).getOrElse(2000L)
-    val seed = opts.get("-s").map(_.toLong).getOrElse(42L)
-    val cpus = opts.getOrElse("--cpus", sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
+    val (cpus, job) = command(args)
     val spark = session(cpus)
     spark.sparkContext.setLogLevel("WARN")
     try {
-      val r = run(spark, outRoot, nPages, seed, inputDir = opts.get("--input"),
-        fromHtml = opts.contains("--from-html"))
+      val r = job(spark)
       println(f"[pipeline] docs/sec=${r.docsPerSec}%.1f triples/sec=${r.triplesPerSec}%.1f " +
         f"mentionP=${r.mentionP}%.4f mentionR=${r.mentionR}%.4f triples=${r.nTriples}")
     } finally spark.stop()
+  }
+
+  /** The command line as the session's cores and the [[run]] it asks for. */
+  private[run] def command(args: Array[String]): (String, SparkSession => Result) = {
+    val (opts, pos) = Cli.parse(args, Set("-p", "--pages", "--seed", "--cpus", "--input", "--from-html"))
+    require(pos.length == 1,
+      "usage: PipelineCli <outRoot> [--pages N] [--seed S] [--cpus N] [--input dir] [--from-html]")
+    val nPages = opts.get("-p").orElse(opts.get("--pages")).map(_.toLong).getOrElse(2000L)
+    val seed = opts.get("--seed").map(_.toLong).getOrElse(42L)
+    (opts.getOrElse("--cpus", sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")),
+      spark => run(spark, pos.head, nPages, seed, inputDir = opts.get("--input"),
+        fromHtml = opts.contains("--from-html")))
   }
 
   case class Result(nPages: Long, nSentences: Long, nMentions: Long, nLinks: Long,
@@ -89,7 +95,7 @@ object PipelineCli {
       KgPipeline.domainStats(mentions)
     }
     val nodes = Checkpoints.stage(spark, outRoot, "nodes", log) {
-      KgPipeline.nodes(canonical, links)
+      KgPipeline.nodes(canonical)
     }
     val edges = Checkpoints.stage(spark, outRoot, "edges", log) {
       KgPipeline.edges(triples)

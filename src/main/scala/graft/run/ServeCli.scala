@@ -6,6 +6,7 @@ import java.nio.charset.StandardCharsets
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 
 import graft.crf.{CrfDecoder, CrfModel}
+import graft.io.ModelIO.jstr
 
 /** HTTP model-serving surface, mirroring the reference's FastAPI app
   * (ref serve.py:13-93) on the JDK's built-in HttpServer (zero extra deps):
@@ -17,15 +18,15 @@ import graft.crf.{CrfDecoder, CrfModel}
   * Entity objects carry the same four fields as the reference's `Entity`
   * model (start/end char offsets, value, entity label); confidence is
   * intentionally omitted to match the reference response shape. Decoders are
-  * thread-confined (one per worker thread) because CrfDecoder's contribution
-  * cache is not thread-safe.
+  * thread-confined (`CrfDecoder.forModel`'s one per worker thread) because
+  * CrfDecoder's contribution cache is not thread-safe.
   *
   * Usage: ServeCli -m <model.json> [-p 8000]
   */
 object ServeCli {
 
   def main(args: Array[String]): Unit = {
-    val (opts, _) = Cli.parse(args)
+    val (opts, _) = Cli.parse(args, Set("-m", "--model", "-p", "--port"))
     val modelPath = opts.get("-m").orElse(opts.get("--model"))
       .getOrElse(sys.error("usage: ServeCli -m <model.json> [-p 8000]"))
     val port = opts.get("-p").orElse(opts.get("--port")).map(_.toInt).getOrElse(8000)
@@ -44,7 +45,6 @@ object ServeCli {
   /** Starts the server (non-blocking) — also the test entry point. */
   def start(model: CrfModel, port: Int, modelName: String): HttpServer = {
     val server = HttpServer.create(new InetSocketAddress(port), 0)
-    val decoders = ThreadLocal.withInitial(() => new CrfDecoder(model))
 
     server.createContext("/status", (ex: HttpExchange) =>
       respond(ex, 200, s"""{"status":"OK","crf_model":${jstr(modelName)}}"""))
@@ -58,7 +58,7 @@ object ServeCli {
           if (ex.getRequestMethod != "POST") respond(ex, 405, """{"error":"POST only"}""")
           else {
             val body = new String(ex.getRequestBody.readAllBytes(), StandardCharsets.UTF_8)
-            val decoder = decoders.get()
+            val decoder = CrfDecoder.forModel(model)
             val data = parseTexts(body).map(renderOne(decoder, _)).mkString("[", ",", "]")
             respond(ex, 200, s"""{"data":$data}""")
           }
@@ -98,7 +98,7 @@ object ServeCli {
           case p if p.startsWith("text=") =>
             java.net.URLDecoder.decode(p.drop(5), StandardCharsets.UTF_8)
         }.getOrElse("George Walker Bush (born July 6, 1946) is an American politician.")
-        val spans = decoders.get().process(text)
+        val spans = CrfDecoder.forModel(model).process(text)
         val sb = new StringBuilder
         var pos = 0
         for (s <- spans.sortBy(_.start)) {
@@ -153,17 +153,6 @@ object ServeCli {
     } else throw new IllegalArgumentException(
       "'text' must be a string or an array of strings")
   }
-
-  private def jstr(s: String): String =
-    "\"" + s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
 
   private def respond(ex: HttpExchange, code: Int, json: String): Unit = {
     val bytes = json.getBytes(StandardCharsets.UTF_8)

@@ -9,7 +9,7 @@ import graft.kg.Synth
   */
 object SynthCli {
   def main(args: Array[String]): Unit = {
-    val (opts, pos) = Cli.parse(args)
+    val (opts, pos) = Cli.parse(args, Set("-n", "-s", "-f"))
     require(pos.length == 1, "usage: SynthCli <out.conll> [-n sentences] [-s seed] [-f from]")
     val n = opts.getOrElse("-n", "400").toInt
     val seed = opts.getOrElse("-s", "7").toLong

@@ -30,11 +30,11 @@ object Readers {
 /** Train CLI — reference `python -m spacy_crfsuite.train`
   * (`/root/reference/spacy_crfsuite/train.py:71-129`).
   *
-  * Usage: TrainCli <in_file> [-c config.json] [-o out_dir] [--no-bilou]
+  * Usage: TrainCli <in_file> [-c config.json] [-o out_dir] [--no-bilou] [-ft | --fine-tune]
   */
 object TrainCli {
   def main(args: Array[String]): Unit = {
-    val (opts, pos) = Cli.parse(args)
+    val (opts, pos) = Cli.parse(args, Set("-c", "-o", "--no-bilou", "-ft", "--fine-tune"))
     require(pos.length == 1, "usage: TrainCli <in_file> [-c config.json] [-o out_dir] [--no-bilou]")
     val config = Readers.loadConfig(opts.get("-c"))
     val bilou = !opts.contains("--no-bilou") && config.bilou
@@ -60,11 +60,11 @@ object TrainCli {
 /** Eval CLI — reference `python -m spacy_crfsuite.eval`
   * (`/root/reference/spacy_crfsuite/eval.py:22-55`).
   *
-  * Usage: EvalCli <in_file> -m model.json [--no-bilou]
+  * Usage: EvalCli <in_file> -m model.json [--no-bilou] [--explain]
   */
 object EvalCli {
   def main(args: Array[String]): Unit = {
-    val (opts, pos) = Cli.parse(args)
+    val (opts, pos) = Cli.parse(args, Set("-m", "--no-bilou", "--explain"))
     require(pos.length == 1 && opts.contains("-m"), "usage: EvalCli <in_file> -m model.json [--no-bilou]")
     val model = ModelIO.load(opts("-m"))
     val bilou = !opts.contains("--no-bilou") && model.config.bilou
@@ -77,7 +77,9 @@ object EvalCli {
 }
 
 private[run] object Cli {
-  def parse(args: Array[String]): (Map[String, String], IndexedSeq[String]) = {
+  /** `(options, positionals)` of a command line; any option not in `known`
+    * fails. */
+  def parse(args: Array[String], known: Set[String]): (Map[String, String], IndexedSeq[String]) = {
     val opts = scala.collection.mutable.Map.empty[String, String]
     val pos = IndexedSeq.newBuilder[String]
     var i = 0
@@ -92,15 +94,9 @@ private[run] object Cli {
         else { opts(a) = "true"; i += 1 }
       } else { pos += a; i += 1 }
     }
-    (opts.toMap, pos.result())
-  }
-
-  /** [[parse]], failing on any option not in `known`. */
-  def parse(args: Array[String], known: Set[String]): (Map[String, String], IndexedSeq[String]) = {
-    val (opts, pos) = parse(args)
     val unknown = opts.keySet -- known
     require(unknown.isEmpty, s"unknown option ${unknown.toSeq.sorted.mkString(", ")}; " +
       s"known: ${known.toSeq.sorted.mkString(" ")}")
-    (opts, pos)
+    (opts.toMap, pos.result())
   }
 }

@@ -5,7 +5,7 @@ import java.sql.Timestamp
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import graft.crf.CrfModel
-import graft.kg.Page
+import graft.kg.{KgPipeline, Page}
 
 /** Streaming KG triple construction — the full extract→link→relate chain on
   * an unbounded page stream.
@@ -13,17 +13,17 @@ import graft.kg.Page
   * The key structural observation: everything up to the cross-document
   * rollup is PAGE-LOCAL (sentence split, CRF decode, alias linking, the
   * rank-1 link choice, in-sentence pair/relation matching never look
-  * outside one page), so the whole chain runs as ONE stateless
-  * `mapPartitions` inside each micro-batch — zero shuffles, no state
-  * store, unbounded throughput. Only the corpus-wide (subj, pred, obj)
-  * aggregation is stateful, and that is a standard watermarked windowed
-  * aggregation with eviction.
+  * outside one page), so the whole chain is stateless and runs inside each
+  * micro-batch with zero shuffles and no state store. Only the corpus-wide
+  * (subj, pred, obj) aggregation is stateful, and that is a standard
+  * watermarked windowed aggregation with eviction.
   *
-  * The per-page Scala logic is the batch stages' own: the same decoder, the
-  * same (alias, kind) index `KgPipeline.aliasDf` is built from, the same
-  * rank-1 order (score, entity_id), and the same relation matcher
-  * (`PageLocal.relationTriples`, which batch runs as `relation_triples`);
-  * the StreamingTriplesSpec parity gate holds stream output equal to batch
+  * The stateless part is the batch plan itself: `KgPipeline.sentenceRows`
+  * splits the pages and `KgPipeline.sentenceTriplesPlan` — the plan the
+  * fused batch `KgPipeline.triples` path runs — pre-filters the sentences
+  * and runs one `sentence_triples(text)` (`PageLocal.sentenceTriples`)
+  * each, so stream output equals batch output by construction; the
+  * StreamingTriplesSpec parity gate holds it equal to batch
   * `KgPipeline.triples` on the same pages.
   */
 object StreamingTriples {
@@ -31,28 +31,13 @@ object StreamingTriples {
   case class RawTriple(subj: String, pred: String, obj: String, url: String,
                        conf: Double, warc_ts: Timestamp)
 
-  /** Stateless pages → raw triples (one row per matched in-sentence pair);
-    * per-sentence logic is the SHARED [[graft.kg.PageLocal]] chain. */
+  /** Stateless pages → raw triples (one row per matched in-sentence pair). */
   def rawTripleStream(pages: Dataset[Page], model: CrfModel): Dataset[RawTriple] = {
     val spark = pages.sparkSession
     import spark.implicits._
-    val bcModel = spark.sparkContext.broadcast(model)
-    // (alias surface, kind) → candidates; KB-scale broadcast
-    val bcAlias = spark.sparkContext.broadcast(graft.kg.PageLocal.aliasIndex)
-
-    // COLUMN filter, not a typed lambda: pushes to the source and avoids
-    // deserializing non-English rows (incl. the html bytes) per micro-batch
-    pages.filter(col("lang") === "en").as[Page].mapPartitions { iter =>
-      val decoder = graft.crf.CrfDecoder.forModel(bcModel.value)
-      val alias = bcAlias.value
-      val compiled = graft.kg.PageLocal.compilePatterns()
-      iter.flatMap { page =>
-        page.text.split('\n').iterator.flatMap { sent =>
-          graft.kg.PageLocal.sentenceTriples(decoder, sent, alias, compiled)
-            .map(t => RawTriple(t.subj, t.pred, t.obj, page.url, t.conf, page.warc_ts))
-        }
-      }
-    }
+    KgPipeline.sentenceTriplesPlan(
+      KgPipeline.sentenceRows(pages.toDF(), col("url"), col("warc_ts")),
+      spark.sparkContext.broadcast(model), col("url"), col("warc_ts")).as[RawTriple]
   }
 
   /** Stateful corpus rollup: per event-time window, (subj, pred, obj) →

@@ -82,6 +82,15 @@ class TriplesPathSpec extends AnyFunSuite {
       .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation])
     fallsBack("repeated (alias, kind)", KgPipeline.links(KgPipeline.mentions(sents, model), repeated))
   }
+
+  test("a local alias table of aliasDf's schema with other rows falls back") {
+    val kept = alias.collect().toSeq.tail
+    val other = spark.createDataFrame(java.util.Arrays.asList(kept: _*), alias.schema)
+    assert(other.queryExecution.analyzed
+      .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation])
+    assert(other.schema === alias.schema)
+    fallsBack("aliasDf minus one row", KgPipeline.links(KgPipeline.mentions(sents, model), other))
+  }
 }
 
 object TriplesPathSpec {

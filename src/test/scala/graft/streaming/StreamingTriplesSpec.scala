@@ -47,6 +47,22 @@ class StreamingTriplesSpec extends AnyFunSuite {
     assert(streamed.nonEmpty && streamed.values.map(_._1).sum > 100)
   }
 
+  test("the stream runs the batch sentence_triples plan: no typed page round trip") {
+    import org.apache.spark.sql.catalyst.plans.logical.{DeserializeToObject, MapPartitions}
+    import org.apache.spark.sql.types.ObjectType
+    val dir = java.nio.file.Files.createTempDirectory("pages_plan").toString
+    PagesGen.pages(spark, 4L, 42L).write.mode("overwrite").parquet(dir)
+    val stream = spark.readStream
+      .schema(org.apache.spark.sql.Encoders.product[Page].schema)
+      .parquet(dir).as[Page]
+    val plan = StreamingTriples.rawTripleStream(stream, model).queryExecution.analyzed
+    assert(plan.toString.contains("sentence_triples("), plan)
+    assert(plan.collect { case m: MapPartitions => m }.isEmpty, plan)
+    assert(plan.collect {
+      case d: DeserializeToObject if d.outputObjAttr.dataType == ObjectType(classOf[Page]) => d
+    }.isEmpty, plan)
+  }
+
   test("batch triples equal the page-local chain on text outside the BMP") {
     // four emoji (two UTF-16 code units each) before every sentence: crf_tag
     // offsets are UTF-16 indices, so any between-text cut in code points
