@@ -8,7 +8,7 @@ package graft.crf
   * `stateW(attr)` is a dense Array over labels (L is small — ≤ a few dozen);
   * `transW(i)(j)` is the weight of transition label_i → label_j. The whole
   * model is a plain serializable value: on Spark it crosses to executors once
-  * via `sparkContext.broadcast`, never per-row.
+  * via its one broadcast (`plans.SharedBroadcast`), never per-row.
   */
 case class CrfModel(
     labels: IndexedSeq[String],

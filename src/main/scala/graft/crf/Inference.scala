@@ -88,81 +88,17 @@ object Inference {
     trans.map(_.map(math.exp))
 
   /** [[marginalsScaled]] over pre-exponentiated transitions
-    * `eTrans = expOf(trans)`. */
+    * `eTrans = expOf(trans)`: the decode core's forward-backward
+    * (`CrfDecoder.marginals`) on copies of `psi` and `eTrans`. */
   def marginalsScaledExp(psi: Array[Array[Double]], eTrans: Array[Array[Double]]): Array[Array[Double]] = {
     val T = psi.length
     if (T == 0) return Array.empty
     val L = psi(0).length
-    // exp(ψ - rowmax)
-    val ePsi = Array.ofDim[Double](T, L)
-    var t = 0
-    while (t < T) {
-      var mx = Double.NegativeInfinity
-      var y = 0
-      while (y < L) { if (psi(t)(y) > mx) mx = psi(t)(y); y += 1 }
-      y = 0
-      while (y < L) { ePsi(t)(y) = math.exp(psi(t)(y) - mx); y += 1 }
-      t += 1
-    }
-    val alpha = Array.ofDim[Double](T, L)
-    val beta = Array.ofDim[Double](T, L)
-    // forward with normalization
-    var s = 0.0
-    var y = 0
-    while (y < L) { alpha(0)(y) = ePsi(0)(y); s += alpha(0)(y); y += 1 }
-    var inv = if (s == 0) 1.0 else 1.0 / s
-    y = 0
-    while (y < L) { alpha(0)(y) *= inv; y += 1 }
-    t = 1
-    while (t < T) {
-      s = 0.0
-      var y2 = 0
-      while (y2 < L) {
-        var acc = 0.0
-        var yp = 0
-        while (yp < L) { acc += alpha(t - 1)(yp) * eTrans(yp)(y2); yp += 1 }
-        val v = acc * ePsi(t)(y2)
-        alpha(t)(y2) = v
-        s += v
-        y2 += 1
-      }
-      inv = if (s == 0) 1.0 else 1.0 / s
-      y2 = 0
-      while (y2 < L) { alpha(t)(y2) *= inv; y2 += 1 }
-      t += 1
-    }
-    // backward with its own normalization
-    java.util.Arrays.fill(beta(T - 1), 1.0)
-    t = T - 2
-    while (t >= 0) {
-      s = 0.0
-      y = 0
-      while (y < L) {
-        var acc = 0.0
-        var y2 = 0
-        while (y2 < L) { acc += eTrans(y)(y2) * ePsi(t + 1)(y2) * beta(t + 1)(y2); y2 += 1 }
-        beta(t)(y) = acc
-        s += acc
-        y += 1
-      }
-      inv = if (s == 0) 1.0 else 1.0 / s
-      y = 0
-      while (y < L) { beta(t)(y) *= inv; y += 1 }
-      t -= 1
-    }
-    // marginals ∝ α·β, renormalized per position
-    val marg = Array.ofDim[Double](T, L)
-    t = 0
-    while (t < T) {
-      s = 0.0
-      y = 0
-      while (y < L) { val v = alpha(t)(y) * beta(t)(y); marg(t)(y) = v; s += v; y += 1 }
-      inv = if (s == 0) 1.0 else 1.0 / s
-      y = 0
-      while (y < L) { marg(t)(y) *= inv; y += 1 }
-      t += 1
-    }
-    marg
+    val b = new CrfDecoder.Buffers
+    b.ensure(T * L)
+    System.arraycopy(CrfDecoder.flat(psi), 0, b.psi, 0, T * L)
+    CrfDecoder.marginals(b, T, L, CrfDecoder.flat(eTrans))
+    Array.tabulate(T)(t => java.util.Arrays.copyOfRange(b.alpha, t * L, t * L + L))
   }
 
   /** Viterbi (max-sum) best label sequence. */

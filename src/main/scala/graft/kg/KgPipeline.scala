@@ -7,6 +7,7 @@ import org.apache.spark.sql.types._
 import graft.crf.{CrfConfig, CrfModel}
 import graft.ops.Dedup.{blockPairs, explodeOrderedPairs}
 import graft.plans.GraftFunctions.crf_tag
+import graft.plans.SharedBroadcast
 
 /** The Spark-native KG-construction pipeline (north_rule): pages → sentences →
   * CRF mentions → alias links → canonicalization → triples → graph tables.
@@ -307,11 +308,12 @@ object KgPipeline {
   /** The per-sentence triple chain as a Spark plan, the one both the fused
     * [[triples]] path and `streaming.StreamingTriples` run: the sentence rows
     * that [[canMatch]], then ONE `sentence_triples(text)` each — CRF decode
-    * with `model`, alias link against a broadcast of [[PageLocal.aliasIndex]],
-    * relate — as the `keep` columns plus `(subj, pred, obj, conf)`. */
+    * with `model`, alias link against the one broadcast of
+    * [[PageLocal.aliasIndex]], relate — as the `keep` columns plus
+    * `(subj, pred, obj, conf)`. */
   private[graft] def sentenceTriplesPlan(sents: DataFrame, model: Broadcast[CrfModel],
                                          keep: Column*): DataFrame = {
-    val alias = sents.sparkSession.sparkContext.broadcast(PageLocal.aliasIndex)
+    val alias = SharedBroadcast(sents.sparkSession.sparkContext, PageLocal.aliasIndex)
     sents.filter(canMatch).select(keep :+ inline(sentenceTriples(col("text"), model, alias)): _*)
   }
 
@@ -416,11 +418,16 @@ object KgPipeline {
     * `cands: array<struct<prior, entity_id>>` — [[PageLocal.aliasIndex]]
     * (the one alias grouping) as a local relation: built on the driver,
     * broadcast by [[links]] without a Spark job. */
-  def aliasDf(spark: SparkSession): DataFrame = {
-    val rows = PageLocal.aliasIndex.toSeq.map { case ((alias, kind), cands) =>
-      Row(alias, kind, cands.map(c => Row(c.prior, c.entityId)))
-    }
-    spark.createDataFrame(java.util.Arrays.asList(rows: _*), aliasSchema)
+  def aliasDf(spark: SparkSession): DataFrame =
+    spark.createDataFrame(aliasRows, aliasSchema)
+
+  /** [[aliasDf]]'s rows, by (kind, alias), built once. */
+  private lazy val aliasRows: java.util.List[Row] = {
+    val rows = for {
+      (kind, byAlias) <- PageLocal.aliasIndex.toSeq.sortBy(_._1)
+      (alias, cands) <- byAlias.toSeq.sortBy(_._1)
+    } yield Row(alias, kind, cands.toSeq.map(c => Row(c.prior, c.entityId)))
+    java.util.Arrays.asList(rows: _*)
   }
 
   private val aliasSchema = StructType(Seq(

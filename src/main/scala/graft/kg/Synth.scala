@@ -39,14 +39,14 @@ object Synth {
     "Seoul", "Lima", "Cairo", "Sydney", "Boston", "Mumbai", "Prague",
     "New York", "San Francisco", "Tel Aviv", "Hong Kong")
 
-  def persons: IndexedSeq[String] =
+  lazy val persons: IndexedSeq[String] =
     for (f <- firstNames; l <- lastNames) yield s"$f $l"
 
   /** Alias dictionary rows for entity linking: alias (lowercased surface) →
     * canonical entity id + prior. Includes abbreviation aliases so linking is
-    * non-trivial. */
+    * non-trivial. Built once. */
   case class Alias(alias: String, entityId: String, prior: Double)
-  def aliasDict: IndexedSeq[Alias] = {
+  lazy val aliasDict: IndexedSeq[Alias] = {
     val p = persons.zipWithIndex.flatMap { case (name, i) =>
       val id = s"PER:${name.replace(' ', '_')}"
       // full name, and last name alone as a weaker alias

@@ -29,12 +29,14 @@ import graft.crf.{CrfDecoder, CrfModel}
   *    reference object (the decode itself is a JVM model call — the win over
   *    a CodegenFallback is skipping the interpreted `Expression.eval` hop and
   *    its row projection, same as the text-hash kernels).
-  *  - The expression carries a BROADCAST handle, not the model: the model
-  *    crosses to each executor once, and every task there reads the same
-  *    `bc.value` object. `CrfDecoder.forModel` keys its per-thread decoder
-  *    (with the (slot, token) contribution cache) by model identity, so the
-  *    cache warms once per executor thread and survives across tasks, stages
-  *    and micro-batches.
+  *  - The expression carries a BROADCAST handle, not the model, and every
+  *    surface takes it from [[SharedBroadcast]]: one broadcast per
+  *    (SparkContext, model), so the model crosses to each executor once
+  *    and every task there, of any query, reads the same `bc.value` object.
+  *    `CrfDecoder.forModel` keys its per-thread decoder (with the token
+  *    contribution table) by model identity, so the table warms once per
+  *    executor thread and survives across tasks, stages, queries and
+  *    micro-batches.
   */
 case class CrfTagExpression(child: Expression, model: Broadcast[CrfModel])
     extends UnaryExpression
@@ -86,10 +88,10 @@ object GraftFunctions {
   import org.apache.spark.sql.catalyst.FunctionIdentifier
   import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
-  /** Register `crf_tag` on an existing session; the model is broadcast once
-    * here and every use of the function shares that broadcast. */
+  /** Register `crf_tag` on an existing session; every use of the function
+    * shares the model's one broadcast. */
   def register(spark: SparkSession, model: CrfModel): Unit = {
-    val bc = spark.sparkContext.broadcast(model)
+    val bc = SharedBroadcast(spark.sparkContext, model)
     val (id, info, builder) = crfTagFunction(bc)
     spark.sessionState.functionRegistry.registerFunction(id, info, builder)
   }
@@ -106,12 +108,12 @@ object GraftFunctions {
         CrfTagExpression(children.head, model)
       })
 
-  /** Column-API form: `df.select(crf_tag($"text", model))`. Broadcasts the
-    * model from the driver on each call — build the column once per plan. */
+  /** Column-API form: `df.select(crf_tag($"text", model))`, over the
+    * model's one broadcast. */
   def crf_tag(c: org.apache.spark.sql.Column, model: CrfModel): org.apache.spark.sql.Column =
     org.apache.spark.sql.GraftColumnBridge.column(
       CrfTagExpression(org.apache.spark.sql.GraftColumnBridge.expression(c),
-        org.apache.spark.SparkContext.getOrCreate().broadcast(model)))
+        SharedBroadcast(org.apache.spark.SparkContext.getOrCreate(), model)))
 
   /** The native text kernels as SQL functions — ONE table consumed by both
     * the session-level [[registerKernels]] and the [[GraftExtensions]]
@@ -161,8 +163,8 @@ object GraftFunctions {
 }
 
 /** `SparkSessionExtensions` hook: loads the model from the path in
-  * `spark.graft.model.path` at first use (injected function) and broadcasts
-  * it from the driver each time a query resolves `crf_tag`. */
+  * `spark.graft.model.path` at first use (injected function); every query
+  * that resolves `crf_tag` takes the model's one broadcast. */
 class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
   override def apply(ext: org.apache.spark.sql.SparkSessionExtensions): Unit = {
     ext.injectFunction(GraftFunctions.crfTagFunction(GraftExtensions.modelFromConf()))
@@ -188,6 +190,6 @@ object GraftExtensions {
     val model = cached.computeIfAbsent(path, p =>
       if (p.nonEmpty) graft.io.ModelIO.load(p)
       else graft.kg.KgPipeline.trainModel(42L))
-    org.apache.spark.SparkContext.getOrCreate().broadcast(model)
+    SharedBroadcast(org.apache.spark.SparkContext.getOrCreate(), model)
   }
 }

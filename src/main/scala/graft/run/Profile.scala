@@ -19,7 +19,8 @@ import scala.util.control.NonFatal
   * queries (all of them when none is named) in a seeded shuffle per round
   * and prints per query the min, median and samples of its wall time, the
   * task totals of its median round, and a summary of its executed physical
-  * plan.
+  * plan. One untimed warm-up round runs before the R timed ones, so the
+  * median is not a JIT warm-up sample.
   *
   * `Profile --sf DIR --sounding [--rounds R]` is the 10× sounding of the
   * heavy pair-mining family: it runs each at DIR and at a deterministic 10×
@@ -27,6 +28,12 @@ import scala.util.control.NonFatal
   * writes the per-query medians and the scaling exponent to
   * `BENCH_sf1.json` (log10 of the time ratio across the 10× size ratio:
   * 1.0 = linear, 2.0 = quadratic).
+  *
+  * `Profile --decode N [--rounds R]` is the kernel layer alone, no Spark:
+  * single-thread `CrfDecoder.process` with the pipeline model over the
+  * first N sentences of seed-42 `PagesGen` pages, one decoder throughout.
+  * It prints µs per sentence, min and median over the R timed rounds;
+  * [[DecodeWarmups]] untimed rounds come first.
   *
   * The session is `graft.Bench.session(SPARK_GRAFT_CPUS)` (default 32).
   */
@@ -66,8 +73,9 @@ object Profile {
     if (s.length % 2 == 1) s(s.length / 2) else (s(s.length / 2 - 1) + s(s.length / 2)) / 2.0
   }
 
-  /** Runs `nRounds` rounds of the calls `calls(round)` names, each key once
-    * per round; returns one record per key, sorted by key. */
+  /** Runs one untimed warm-up round (`calls(-1)`), then `nRounds` timed
+    * rounds of the calls `calls(round)` names, each key once per round;
+    * returns one record per key, sorted by key. */
   def rounds(spark: SparkSession, nRounds: Int)(
       calls: Int => Seq[(String, SparkSession => DataFrame)]): Seq[Record] = {
     val totals = TaskTotals.on(spark)
@@ -81,17 +89,20 @@ object Profile {
     spark.listenerManager.register(plans)
     val samples = scala.collection.mutable.Map.empty[String, Vector[(Double, TaskTotals.Snapshot)]]
     val summaries = scala.collection.mutable.Map.empty[String, PlanSummary]
-    try for (r <- 0 until nRounds; (key, call) <- calls(r)) {
-      spark.sparkContext.setJobDescription(s"profile: $key round $r")
+    try for (r <- -1 until nRounds; (key, call) <- calls(r)) {
+      val round = if (r < 0) "warm-up" else s"round $r"
+      spark.sparkContext.setJobDescription(s"profile: $key $round")
       executed.clear()
       val (ok, wall, t) = totals.timed {
         try { call(spark).write.mode("overwrite").format("noop").save(); true }
         catch { case NonFatal(e) => System.err.println(s"[profile] $key failed: ${e.getMessage}"); false }
       }
-      System.err.println(f"[profile] round $r $key: $wall%.2f s")
-      samples(key) = samples.getOrElse(key, Vector.empty) :+ (wall -> t)
-      if (ok && !summaries.contains(key))
-        executed.asScala.map(PlanSummary.of).reduceOption(_ + _).foreach(summaries(key) = _)
+      System.err.println(f"[profile] $round $key: $wall%.2f s")
+      if (r >= 0) {
+        samples(key) = samples.getOrElse(key, Vector.empty) :+ (wall -> t)
+        if (ok && !summaries.contains(key))
+          executed.asScala.map(PlanSummary.of).reduceOption(_ + _).foreach(summaries(key) = _)
+      }
     } finally {
       spark.sparkContext.setJobDescription(null)
       spark.listenerManager.unregister(plans)
@@ -184,14 +195,45 @@ object Profile {
       s""""rows":{"documents":${rows("documents")},"embeddings":${rows("embeddings")}},${per.mkString(",")}}"""
   }
 
+  /** Untimed rounds before the timed ones of `--decode`. */
+  val DecodeWarmups = 5
+
+  /** Single-thread decode µs per sentence of each timed round, over the
+    * first `n` sentences of seed-42 pages. */
+  def decodeRounds(n: Int, nRounds: Int): Seq[Double] = {
+    val sents = Iterator.from(0)
+      .flatMap(i => graft.kg.PagesGen.pageOf(42L, i, density = 8)._1.text.split('\n'))
+      .take(n).toArray
+    val decoder = new graft.crf.CrfDecoder(graft.kg.KgPipeline.trainModel(42L))
+    (1 to DecodeWarmups + nRounds).map { _ =>
+      val t0 = System.nanoTime()
+      sents.foreach(decoder.process)
+      (System.nanoTime() - t0) / 1e3 / n
+    }.drop(DecodeWarmups)
+  }
+
+  val usage: String = "usage: Profile --sf DIR [--rounds R] [--sounding | qNN...] " +
+    "(one untimed warm-up round precedes the R timed ones)\n" +
+    s"       Profile --decode N [--rounds R] ($DecodeWarmups untimed warm-up rounds precede the R timed ones)"
+
   def main(args: Array[String]): Unit = {
-    val (opts, names) = Cli.parse(args, Set("--sf", "--rounds", "--sounding"))
-    val sfDir = opts.getOrElse("--sf", sys.error("usage: Profile --sf DIR [--rounds R] [--sounding | qNN...]"))
+    val (opts, names) = Cli.parse(args, Set("--sf", "--rounds", "--sounding", "--decode"))
     val nRounds = opts.getOrElse("--rounds", "3").toInt
+    opts.get("--decode") match {
+      case Some(n) =>
+        val us = decodeRounds(n.toInt, nRounds)
+        println(f"[profile] decode sentences=$n rounds=$nRounds us_per_sent min=${us.min}%.3f " +
+          f"median=${median(us)}%.3f samples=${us.map(u => f"$u%.2f").mkString(",")}")
+      case None => sparkMain(opts.getOrElse("--sf", sys.error(usage)), opts.contains("--sounding"),
+        names, nRounds)
+    }
+  }
+
+  private def sparkMain(sfDir: String, runSounding: Boolean, names: Seq[String], nRounds: Int): Unit = {
     val spark = graft.Bench.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
     spark.sparkContext.setLogLevel("ERROR")
     try {
-      if (opts.contains("--sounding")) {
+      if (runSounding) {
         val json = sounding(spark, sfDir, nRounds)
         java.nio.file.Files.writeString(java.nio.file.Paths.get("BENCH_sf1.json"), json + "\n")
         println(json)

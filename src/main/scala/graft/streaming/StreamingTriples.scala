@@ -6,6 +6,7 @@ import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import graft.crf.CrfModel
 import graft.kg.{KgPipeline, Page}
+import graft.plans.SharedBroadcast
 
 /** Streaming KG triple construction — the full extract→link→relate chain on
   * an unbounded page stream.
@@ -37,7 +38,7 @@ object StreamingTriples {
     import spark.implicits._
     KgPipeline.sentenceTriplesPlan(
       KgPipeline.sentenceRows(pages.toDF(), col("url"), col("warc_ts")),
-      spark.sparkContext.broadcast(model), col("url"), col("warc_ts")).as[RawTriple]
+      SharedBroadcast(spark.sparkContext, model), col("url"), col("warc_ts")).as[RawTriple]
   }
 
   /** Stateful corpus rollup: per event-time window, (subj, pred, obj) →

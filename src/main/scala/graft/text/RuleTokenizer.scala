@@ -15,6 +15,10 @@ import graft.crf.Tok
   * 'll, 'd, n't) as their own tokens. Like the reference tokenizer it appends
   * a `__CLS__` sentinel at `lastEnd + 1` (`tokenizer.py:85-88`) which all
   * consumers drop again (`features.py:127-129`) — quirk Q1 in SURVEY §2.4.
+  *
+  * The rules run once, in [[offsets]], which writes token offsets into
+  * reusable arrays (the decoder's path: no `Tok`, no shape, no sentinel);
+  * [[tokenize]] builds `Tok`s from them.
   */
 object RuleTokenizer {
 
@@ -23,6 +27,25 @@ object RuleTokenizer {
 
   private def isPunct(c: Char): Boolean =
     !Character.isLetterOrDigit(c) && !Character.isWhitespace(c)
+
+  /** Growable (start, end) arrays: token `i` is `text.substring(starts(i), ends(i))`. */
+  final class Offsets {
+    var starts = new Array[Int](16)
+    var ends = new Array[Int](16)
+    var length = 0
+
+    def clear(): Unit = length = 0
+
+    def add(s: Int, e: Int): Unit = {
+      if (length == starts.length) {
+        starts = java.util.Arrays.copyOf(starts, length * 2)
+        ends = java.util.Arrays.copyOf(ends, length * 2)
+      }
+      starts(length) = s
+      ends(length) = e
+      length += 1
+    }
+  }
 
   /** Tokenize and append the CLS sentinel (reference `tokenize`). */
   def tokenizeWithCls(text: String): IndexedSeq[Tok] = {
@@ -36,7 +59,21 @@ object RuleTokenizer {
 
   /** Raw tokens, no CLS. Offsets are char offsets into `text`. */
   def tokenize(text: String): IndexedSeq[Tok] = {
-    val out = IndexedSeq.newBuilder[Tok]
+    val o = new Offsets
+    val out = new Array[Tok](offsets(text, o))
+    var i = 0
+    while (i < out.length) {
+      val t = text.substring(o.starts(i), o.ends(i))
+      out(i) = Tok(t, o.starts(i), o.ends(i), "", Shape.of(t))
+      i += 1
+    }
+    scala.collection.immutable.ArraySeq.unsafeWrapArray(out)
+  }
+
+  /** The token offsets of `text` (no CLS), written over `out`; returns the
+    * token count. */
+  def offsets(text: String, out: Offsets): Int = {
+    out.clear()
     var i = 0
     val n = text.length
     while (i < n) {
@@ -48,38 +85,36 @@ object RuleTokenizer {
         i = j
       }
     }
-    out.result()
+    out.length
   }
 
-  private def emitChunk(text: String, start: Int, end: Int,
-                        out: scala.collection.mutable.Builder[Tok, IndexedSeq[Tok]]): Unit = {
+  private def emitChunk(text: String, start: Int, end: Int, out: Offsets): Unit = {
     var s = start
-    var e = end
     // leading punctuation, one char each
-    while (s < e && isPunct(text.charAt(s)) && e - s > 1) {
-      out += mk(text, s, s + 1); s += 1
+    while (s < end && isPunct(text.charAt(s)) && end - s > 1) {
+      out.add(s, s + 1); s += 1
     }
-    // trailing punctuation, collected then emitted after the core
-    var trail = List.empty[(Int, Int)]
-    while (e > s + 1 && isPunct(text.charAt(e - 1))) {
-      trail = (e - 1, e) :: trail; e -= 1
-    }
+    // trailing punctuation: one char each, emitted after the core
+    var e = end
+    while (e > s + 1 && isPunct(text.charAt(e - 1))) e -= 1
     if (s < e) {
-      val core = text.substring(s, e)
-      val suf = ContractionSuffixes.find(cs => core.length > cs.length && core.endsWith(cs))
-      suf match {
-        case Some(cs) =>
-          out += mk(text, s, e - cs.length)
-          out += mk(text, e - cs.length, e)
-        case None =>
-          out += mk(text, s, e)
-      }
+      val cut = contractionStart(text, s, e)
+      if (cut > s) { out.add(s, cut); out.add(cut, e) }
+      else out.add(s, e)
     }
-    trail.foreach { case (a, b) => out += mk(text, a, b) }
+    while (e < end) { out.add(e, e + 1); e += 1 }
   }
 
-  private def mk(text: String, s: Int, e: Int): Tok = {
-    val t = text.substring(s, e)
-    Tok(t, s, e, "", Shape.of(t))
+  /** Where the first contraction suffix of `text[s, e)` that is shorter than
+    * it starts, or -1. */
+  private def contractionStart(text: String, s: Int, e: Int): Int = {
+    var k = 0
+    while (k < ContractionSuffixes.length) {
+      val cs = ContractionSuffixes(k)
+      if (e - s > cs.length && text.regionMatches(e - cs.length, cs, 0, cs.length))
+        return e - cs.length
+      k += 1
+    }
+    -1
   }
 }

@@ -64,6 +64,13 @@ class TriplesPathSpec extends AnyFunSuite {
     val mentions = KgPipeline.mentions(sents, model).cache()
     try fallsBack("cached mentions", KgPipeline.links(mentions, alias))
     finally mentions.unpersist(blocking = true)
+    // chains built apart over one model share its broadcast, so they are
+    // sameResult: a cache on one is a cache on the other
+    val cachedLinks = chain().cache()
+    try fallsBack("links equal to cached links", chain()) finally cachedLinks.unpersist(blocking = true)
+    val cachedMentions = KgPipeline.mentions(sents, model).cache()
+    try fallsBack("mentions equal to cached mentions", chain())
+    finally cachedMentions.unpersist(blocking = true)
     assert(spark.sharedState.cacheManager.isEmpty)
   }
 

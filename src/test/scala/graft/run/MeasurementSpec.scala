@@ -20,6 +20,19 @@ class MeasurementSpec extends AnyFunSuite {
     assert(spark.sharedState.cacheManager.isEmpty)
   }
 
+  test("Profile: a warm-up round runs untimed before the timed rounds; --decode times the kernel") {
+    val seen = scala.collection.mutable.ArrayBuffer.empty[Int]
+    val Seq(rec) = Profile.rounds(spark, 2) { r =>
+      seen += r
+      Seq("range" -> ((s: org.apache.spark.sql.SparkSession) => s.range(10).toDF()))
+    }
+    assert(seen.toSeq === Seq(-1, 0, 1))
+    assert(rec.walls.length === 2)
+    val us = Profile.decodeRounds(200, 2)
+    assert(us.length === 2 && us.forall(_ > 0))
+    assert(Profile.usage.contains("warm-up"))
+  }
+
   test("ScalingBench: one stage dispatch, an unknown stage fails before any session starts") {
     assert(ScalingBench.Stages.keySet === Set("full", "mentions", "curate"))
     val e = intercept[IllegalArgumentException](
